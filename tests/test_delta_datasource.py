@@ -1162,6 +1162,60 @@ def test_stream_read_change_feed(spark, tmp_path):
     assert any(r["_change_type"] == "delete" for r in rows)
 
 
+def test_change_feed_named_starting_versions(spark, tmp_path):
+    """startingVersion 'earliest' / 'latest' resolve in schema inference
+    the way the stream reader resolves them: 'earliest' is the whole
+    history (the same feed as -1), 'latest' an empty window that a
+    stream then tails."""
+    t = str(tmp_path / "t")
+    dl.write_delta_log(spark.range(5).selectExpr("id AS k"), t)
+    dl.write_delta_log(
+        spark.range(5, 8).selectExpr("id AS k"), t, mode="append"
+    )
+
+    def batch(sv):
+        return sorted(
+            (r["k"], r["_change_type"])
+            for r in spark.read.format("tspdelta")
+            .option("readChangeFeed", "true")
+            .option("startingVersion", sv).load(t).collect()
+        )
+
+    assert batch("earliest") == batch("-1")
+    assert batch("earliest") == [(k, "insert") for k in range(8)]
+    assert batch("latest") == []
+
+    queries = {
+        sv: spark.readStream.format("tspdelta")
+        .option("readChangeFeed", "true")
+        .option("startingVersion", sv).load(t)
+        .writeStream.format("memory").queryName(f"tspds_cdf_{sv}")
+        .option("checkpointLocation", str(tmp_path / f"ck_{sv}"))
+        .start()
+        for sv in ("earliest", "latest")
+    }
+    try:
+        for q in queries.values():
+            q.processAllAvailable()
+        dl.write_delta_log(
+            spark.range(8, 10).selectExpr("id AS k"), t, mode="append"
+        )
+        for q in queries.values():
+            q.processAllAvailable()
+    finally:
+        for q in queries.values():
+            q.stop()
+
+    def streamed(sv):
+        return sorted(
+            (r["k"], r["_change_type"])
+            for r in spark.sql(f"SELECT * FROM tspds_cdf_{sv}").collect()
+        )
+
+    assert streamed("earliest") == [(k, "insert") for k in range(10)]
+    assert streamed("latest") == [(8, "insert"), (9, "insert")]
+
+
 def test_batch_time_travel_options(spark, tmp_path):
     """r14: VERSION AS OF / TIMESTAMP AS OF through the DS —
     .option('versionAsOf', N) pins the snapshot replay;

@@ -152,6 +152,28 @@ def test_read_table_memo_directory_part_rewrite_invalidates(
     assert d2 is not d1  # key changed -> fresh plan
 
 
+def test_read_table_memo_sees_files_in_partition_subdirs(spark, tmp_path):
+    """A partitioned directory dataset with no ``_SUCCESS`` marker keeps
+    every part file in a subdirectory: a part file added inside an
+    existing partition must invalidate the memo, or the second read
+    returns the old row count."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    root = tmp_path / "t.parquet"
+    pq.write_to_dataset(
+        pa.table({"p": [1, 1, 2], "x": [1.0, 2.0, 3.0]}),
+        str(root),
+        partition_cols=["p"],
+    )
+    assert not any(e.is_file() for e in root.iterdir())
+    assert read_table(spark, str(tmp_path), "t").count() == 3
+    pq.write_table(
+        pa.table({"x": [4.0, 5.0]}), str(root / "p=1" / "extra.parquet")
+    )
+    assert read_table(spark, str(tmp_path), "t").count() == 5
+
+
 def test_read_table_memo_evicts_foreign_session_entries(spark, sf_dir):
     """ADVICE r14: a memo entry whose owning session is not the caller
     is EVICTED on probe (not just skipped), so stopped sessions don't

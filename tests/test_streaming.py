@@ -102,81 +102,6 @@ def test_session_stream_produces_sessions(spark, sf_dir):
     assert bad == 0
 
 
-def test_stateful_running_stats_matches_batch_fold(spark, sf_dir):
-    """applyInPandasWithState custom operator: state carried ACROSS
-    micro-batches must reproduce the exact per-user fold a batch
-    computation gives. The events file is split in two by time and fed
-    as separate micro-batches (maxFilesPerTrigger=1, oldest first), so
-    a correct result REQUIRES cross-batch state — a per-batch
-    recomputation would get n_events/ewma wrong."""
-    import time as _time
-
-    from time_series_prediction_spark.sources.io import read_table
-    from time_series_prediction_spark.streaming.stateful import (
-        user_running_stats_stream,
-    )
-
-    ev = read_table(spark, sf_dir, "events").where(F.col("user_id") < 40)
-    split_ts = ev.agg(F.expr("percentile(CAST(ts AS DOUBLE), 0.5)")).first()[0]
-    with tempfile.TemporaryDirectory() as d:
-        src = f"{d}/src"
-        raw = ev.select(
-            "event_id", F.col("ts").cast("timestamp").alias("ts"),
-            "user_id", "value",
-        )
-        raw.where(F.expr(f"CAST(ts AS DOUBLE) <= {split_ts}")).coalesce(
-            1
-        ).write.mode("append").parquet(src)
-        _time.sleep(1.1)  # distinct mtimes: early file trips first
-        raw.where(F.expr(f"CAST(ts AS DOUBLE) > {split_ts}")).coalesce(
-            1
-        ).write.mode("append").parquet(src)
-
-        stream = (
-            spark.readStream.schema(raw.schema)
-            .format("parquet")
-            .option("maxFilesPerTrigger", "1")
-            .option("latestFirst", "false")
-            .load(src)
-        )
-        q = run_to_memory_sink(
-            user_running_stats_stream(stream), "state_out", output_mode="update"
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-    # last update per user = final state
-    got = {
-        r["user_id"]: r
-        for r in spark.sql(
-            """SELECT * FROM (
-                 SELECT *, row_number() OVER (PARTITION BY user_id
-                          ORDER BY n_events DESC) AS rk FROM state_out
-               ) WHERE rk = 1"""
-        ).collect()
-    }
-    # driver-side oracle: same fold in (ts, event_id) order
-    rows = sorted(
-        raw.collect(), key=lambda r: (r["ts"], r["event_id"])
-    )
-    want: dict[int, list] = {}
-    for r in rows:
-        cents = int(round(r["value"] * 100))
-        st = want.setdefault(r["user_id"], [0, 0, None])
-        st[0] += 1
-        st[1] += cents
-        v = cents / 100.0
-        st[2] = v if st[2] is None else 0.5 * v + 0.5 * st[2]
-    assert set(got) == set(want)
-    for uid, (n, total, ewma) in want.items():
-        g = got[uid]
-        assert g["n_events"] == n, uid
-        assert g["total_cents"] == total, uid
-        assert abs(g["ewma"] - ewma) < 1e-9, uid
-
-
 def test_foreach_batch_parquet_sink(spark, sf_dir):
     with tempfile.TemporaryDirectory() as tmp:
         stream = hourly_counts_stream(read_events_stream(spark, sf_dir))
@@ -343,82 +268,6 @@ def test_stream_static_join_matches_batch(spark, sf_dir):
     want = ev.join(dim, "user_id").count()
     assert got is not None and got <= want
     assert got >= int(want * 0.9), f"stream={got} batch={want}"
-
-
-def test_docs_ingest_dedup_stream_matches_batch(spark, sf_dir, tmp_path):
-    """Streaming dedup-on-arrival == the batch incremental-dedup
-    truth: exact corpus duplicates never reach the sink, near
-    duplicates arrive flagged, and the verdict for every surviving
-    doc matches the batch computation over the same arrival set."""
-    from time_series_prediction_spark.plans.text_queries3 import (
-        dedup_incremental_batch,
-    )
-    from time_series_prediction_spark.sources.io import read_table
-    from time_series_prediction_spark.streaming.docs import (
-        corpus_key_sets,
-        ingest_dedup_stream,
-        read_docs_stream,
-    )
-
-    docs = read_table(spark, sf_dir, "documents")
-    is_batch = (F.col("doc_id") % 10) == 7
-    corpus = docs.where(~is_batch)
-    # identical arrival set to the batch query: organic batch docs +
-    # planted verbatim copies + planted suffix mutations
-    arrivals = (
-        docs.where(is_batch)
-        .unionByName(
-            corpus.where((F.col("doc_id") % 20) == 0).select(
-                (F.col("doc_id") + 1_000_000).alias("doc_id"),
-                "text",
-                "lang",
-                "source",
-                "n_chars",
-            )
-        )
-        .unionByName(
-            corpus.where(
-                ((F.col("doc_id") % 20) == 5)
-                & (F.size(F.split("text", " ")) >= 5)
-            ).select(
-                (F.col("doc_id") + 2_000_000).alias("doc_id"),
-                F.concat(F.col("text"), F.lit(" zz_mutation")).alias("text"),
-                "lang",
-                "source",
-                "n_chars",
-            )
-        )
-        .select("doc_id", "text", "lang", "source", "n_chars")
-    )
-    inbox = str(tmp_path / "inbox")
-    arrivals.write.mode("overwrite").parquet(inbox)
-
-    hashes, fps = corpus_key_sets(corpus)
-    hashes, fps = hashes.cache(), fps.cache()
-    out = ingest_dedup_stream(read_docs_stream(spark, inbox), hashes, fps)
-    q = run_to_memory_sink(out, "docs_ingest_out", output_mode="append")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = {
-        r["doc_id"]: r["verdict"]
-        for r in spark.sql("SELECT doc_id, verdict FROM docs_ingest_out").collect()
-    }
-    want_all = {
-        r["doc_id"]: r["verdict"]
-        for r in dedup_incremental_batch(spark, sf_dir).collect()
-    }
-    want = {d: v for d, v in want_all.items() if v != "exact_dup"}
-    assert got == want
-    # exact arrivals (planted verbatim copies) were dropped on arrival
-    assert not any(1_000_000 <= d < 2_000_000 for d in got)
-    # planted mutations arrived flagged
-    assert all(
-        got[d] == "near_dup" for d in got if d >= 2_000_000
-    ) and any(d >= 2_000_000 for d in got)
-    hashes.unpersist()
-    fps.unpersist()
 
 
 def test_streaming_zorder_ingest_builds_pruned_layout(spark, tmp_path):

@@ -16,10 +16,8 @@ capabilities of the reference repo ``pdemeulenaer/Time-series-prediction``
 
 Layout:
     session    — SparkSession factory (Arrow, AQE, UTC)
-    config     — JSON config loading + date algebra
     sources/   — IO (parquet/csv/json), seeded synthetic generator
     operators/ — time-series ops, reshape, dedup, similarity, text
-    functions/ — reusable Column-expression helpers
     plans/     — end-to-end pipelines + relational query definitions
     streaming/ — Structured Streaming paths for the events table
     model/     — train/score scaffolding (TF-optional, stub scorer)

@@ -1,6 +1,6 @@
 """End-to-end pipeline stages mirroring the reference lifecycle.
 
-* ``clean_series``     ≈ keep_ts flag + filter + sample
+* ``clean_series``     ≈ keep_ts flag + filter
                          (reference ``notebooks/training_new_petastorm.py:159-166``)
 * ``pre_processing``   ≈ reference ``notebooks/utils.py:84-235``
 * ``post_processing``  ≈ reference ``notebooks/utils.py:408-432``
@@ -32,21 +32,16 @@ def clean_series(
     df: DataFrame,
     value_col: str = "balance",
     threshold_count: int = 20,
-    sample_fraction: float | None = None,
-    seed: int = 0,
 ) -> DataFrame:
-    """keep_ts flag + filter (+ optional bernoulli sample, R1).
+    """keep_ts flag + filter (R1).
 
     The reference filters on a UDF output so nothing can push down
     (``training_new_petastorm.py:161-163``); here the predicate is a
     native expression evaluated JVM-side in the same stage as the scan.
     """
-    out = df.withColumn("keep_ts", ts.keep_ts(value_col, threshold_count)).where(
+    return df.withColumn("keep_ts", ts.keep_ts(value_col, threshold_count)).where(
         F.col("keep_ts") == 1
     )
-    if sample_fraction is not None:
-        out = out.sample(fraction=sample_fraction, seed=seed)
-    return out
 
 
 def pre_processing(
@@ -58,7 +53,6 @@ def pre_processing(
     x_days: int = 365,
     y_days: int = 92,
     trend_window_days: int = 183,
-    strict_detrend: bool = False,
     materialize_trend: bool = False,
 ) -> DataFrame:
     """The reference's 7-operator pre-processing chain, native.
@@ -92,7 +86,7 @@ def pre_processing(
         out
         .withColumn(
             "balance_detrend_1MW",
-            ts.detrend(value_col, "balance_trend_1MW", strict=strict_detrend),
+            ts.detrend(value_col, "balance_trend_1MW"),
         )
         .withColumn("mean", ts.series_mean("balance_detrend_1MW"))
         .withColumn("std", ts.series_std("balance_detrend_1MW"))
@@ -132,7 +126,6 @@ def pre_processing(
 def post_processing(
     df: DataFrame,
     pred_col: str = "y_pred",
-    strict_retrend: bool = False,
 ) -> DataFrame:
     """Rescale predictions to the original scale, then retrend
     (as-shipped: retrend is a no-op — reference ``notebooks/utils.py:270``)."""
@@ -140,7 +133,7 @@ def post_processing(
         "y_pred_rescaled", ts.rescaling(pred_col, "mean", "std")
     ).withColumn(
         "y_pred_rescaled_retrended",
-        ts.retrend("y_pred_rescaled", "trend_next_3months_1MW", strict=strict_retrend),
+        ts.retrend("y_pred_rescaled", "trend_next_3months_1MW"),
     )
 
 

@@ -696,7 +696,13 @@ def _snapshot_bundle(path: str, options) -> tuple:
     if _cdf_on(options):
         sv = (options or {}).get("startingVersion")
         if sv is not None:  # missing sv raises in the reader, as before
-            start = int(sv)
+            # the stream reader's names: 'earliest' is before version
+            # 0; 'latest' is the snapshot itself, an empty window
+            named = str(sv).lower()
+            if named == "latest":
+                after = _local_snapshot_ex(stripped, pin)
+                return pin, tuple(after), after[0]
+            start = -1 if named == "earliest" else int(sv)
     if start is not None and start >= 0:
         *after, captured = _local_snapshot_ex(
             stripped, pin, capture_at=start

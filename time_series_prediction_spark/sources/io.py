@@ -57,6 +57,17 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
+def _tree_stats(path: str) -> tuple:
+    """(relative path, mtime_ns, size) of every file under ``path``."""
+    out = []
+    for root, _dirs, files in os.walk(path):
+        for f in files:
+            p = os.path.join(root, f)
+            st = os.stat(p)
+            out.append((os.path.relpath(p, path), st.st_mtime_ns, st.st_size))
+    return tuple(sorted(out))
+
+
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table, e.g. read_table(spark, '/root/testdata/sf0.01', 'lineitem').
 
@@ -88,15 +99,9 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         if os.path.isdir(path):
             # directory dataset (ADVICE r14): a part file rewritten in
             # place leaves the directory's own mtime/size unchanged —
-            # fold per-entry stats into the key so that invalidates too
-            parts = tuple(
-                sorted(
-                    (e.name, e.stat().st_mtime_ns, e.stat().st_size)
-                    for e in os.scandir(path)
-                    if e.is_file()
-                )
-            )
-            key = (path, parts)
+            # fold per-file stats into the key so that invalidates too,
+            # down through partition subdirectories
+            key = (path, _tree_stats(path))
         else:
             key = (path, st.st_mtime_ns, st.st_size)
     except OSError:
