@@ -2,7 +2,10 @@
 
 from __future__ import annotations
 
+import datetime as dt
+
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from time_series_prediction_spark.plans.preprocess import (
@@ -126,28 +129,34 @@ def test_split_and_r2(spark):
     assert m2["r2_3month"] <= 1e-9
 
 
-def test_generator_duckdb_bit_parity(spark):
+@pytest.mark.parametrize(
+    "seed,n", [(42, 120), (7, 20)], ids=["seed42-n120", "seed7-n20"]
+)
+def test_generator_duckdb_bit_parity(spark, seed, n):
     """The md5-derived generator replays DRAW FOR DRAW in DuckDB
     (``duckdb_series_cte``): every float32 balance value is
     bit-identical across engines. The hash uniforms are exactly
     representable 52-bit integers; the transcendentals (exp/sin,
-    Box-Muller ln/cos) agree to ≤1 ulp between the JVM and DuckDB's
+    Box-Muller ln/cos/sin) agree to ≤1 ulp between NumPy and DuckDB's
     libm and the terminal ``bround(·, 2)`` absorbs the difference —
     this test pins that the absorption holds on the real draw
     sequence (the foundation of cashflow_synthetic_pipeline's
-    oracle)."""
+    oracle). The date axis is 2018-12-01..2020-03-31, one day per
+    element."""
     import duckdb
-    import numpy as np
 
     from time_series_prediction_spark.sources.generate import (
         duckdb_series_cte,
     )
 
-    n, n_days = 120, 487
+    n_days = 487
     sp = (
-        generate_series_frame(spark, n, seed=42)
+        generate_series_frame(spark, n, seed=seed)
         .selectExpr(
-            "primaryaccountholder AS id", "signal_type", "balance"
+            "primaryaccountholder AS id",
+            "transactiondate",
+            "signal_type",
+            "balance",
         )
         .toPandas()
         .sort_values("id")
@@ -155,40 +164,17 @@ def test_generator_duckdb_bit_parity(spark):
     )
     du = duckdb.connect().execute(
         "WITH "
-        + duckdb_series_cte(n, n_days, seed=42)
+        + duckdb_series_cte(n, n_days, seed=seed)
         + " SELECT id, signal_type, b FROM gen ORDER BY id"
     ).df()
+    assert sp["id"].tolist() == du["id"].tolist() == list(range(n))
     assert (sp["signal_type"].values == du["signal_type"].values).all()
+    d0 = dt.date(2018, 12, 1)
+    axis = [d0 + dt.timedelta(days=k) for k in range(n_days)]
+    assert axis[-1] == dt.date(2020, 3, 31)
     for i in range(n):
+        assert list(sp["transactiondate"][i]) == axis, f"series {i}"
         a = np.asarray(sp["balance"][i], dtype=np.float32)
         b = np.asarray(du["b"][i], dtype=np.float32)
         assert len(a) == n_days and len(b) == n_days
         assert (a.view("int32") == b.view("int32")).all(), f"series {i}"
-
-
-def test_numpy_generator_matches_expression_twin(spark):
-    """The r14 Arrow-batch generator must reproduce the retired
-    pure-expression chain VALUE-EXACTLY (same md5 draw map, same
-    operand order, bround-absorbed transcendental ulps) — pinned over
-    multiple seeds and series counts."""
-    from time_series_prediction_spark.sources.generate import (
-        _generate_series_frame_expr,
-    )
-
-    for seedv, nn in ((42, 30), (7, 20)):
-        a = (
-            generate_series_frame(spark, nn, seed=seedv)
-            .orderBy("primaryaccountholder")
-            .collect()
-        )
-        b = (
-            _generate_series_frame_expr(spark, nn, seed=seedv)
-            .orderBy("primaryaccountholder")
-            .collect()
-        )
-        assert len(a) == len(b) == nn
-        for ra, rb in zip(a, b):
-            assert ra["primaryaccountholder"] == rb["primaryaccountholder"]
-            assert ra["signal_type"] == rb["signal_type"]
-            assert ra["transactiondate"] == rb["transactiondate"]
-            assert ra["balance"] == rb["balance"]

@@ -88,6 +88,21 @@ def test_tz_for_zone_id_offsets_and_regions():
     assert _tz_for_zone_id("bogus/zone").utcoffset(probe) == dt.timedelta(0)
 
 
+def test_read_table_memo_hit_repins_utc(spark, sf_dir):
+    """A memo hit must re-pin the session to UTC like a miss does:
+    the memoized events plan buckets ``to_date(ts)`` in the session
+    zone, and the DuckDB oracles bucket in UTC."""
+    key = "spark.sql.session.timeZone"
+    first = read_table(spark, sf_dir, "events")
+    spark.conf.set(key, "America/New_York")
+    try:
+        again = read_table(spark, sf_dir, "events")
+        assert again is first  # the memo hit path
+        assert spark.conf.get(key) == "UTC"
+    finally:
+        spark.conf.set(key, "UTC")
+
+
 def test_read_table_plan_memo(spark, sf_dir, tmp_path):
     """read_table memoizes the analyzed plan per (session, path, mtime):
     repeat calls return the same DataFrame object, the bench-boundary

@@ -4,6 +4,8 @@ strategy, shuffle counts)."""
 
 from __future__ import annotations
 
+import re
+
 from time_series_prediction_spark.plans.flagship import cashflow_wide_pipeline
 from time_series_prediction_spark.plans.preprocess import pre_processing
 from time_series_prediction_spark.plans.relational import (
@@ -45,6 +47,25 @@ def test_preprocessing_is_single_narrow_stage(spark):
     assert "Exchange" not in plan
     assert "BatchEvalPython" not in plan
     assert "ArrowEvalPython" not in plan
+
+
+def test_preprocessing_evaluates_trend_once(spark):
+    """The serving columns that both read the trend
+    (``trend_next_3months_1MW`` and ``trajectory_6months``) must share
+    ONE evaluation of its moving-average body in the optimized plan:
+    interpreted higher-order functions get no common-subexpression
+    elimination, so a plan that inlines the trend into each consumer
+    pays for it once per consumer."""
+    raw = generate_series_frame(spark, 4, seed=1)
+    pre = pre_processing(raw, "2020-03-31", serving=True).select(
+        "trend_next_3months_1MW", "trajectory_6months"
+    )
+    opt = pre._jdf.queryExecution().optimizedPlan().toString()
+    # freq=30: 0.5·x[i-15] + Σ slice(x, i-13, 29) + 0.5·x[i+15]
+    body = re.compile(
+        r"aggregate\(slice\(balance#\d+, \(\(lambda i#\d+ - 15\) \+ 2\), 29\)"
+    )
+    assert len(body.findall(opt)) == 1, opt
 
 
 def test_flagship_shuffle_budget(spark, sf_dir):

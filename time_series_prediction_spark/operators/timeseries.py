@@ -117,18 +117,12 @@ def _trend_raw_sql(x: str, freq: int = 30) -> str:
     return _let(raw, "_raw", body)
 
 
-def trend_raw(x: str, freq: int = 30) -> Column:
-    """Unrounded statsmodels-parity trend as array<double>.
-
-    Reference: ``notebooks/utils.py:239-248`` (seasonal_decompose,
-    model='additive', extrapolate_trend=1), invoked with freq=30 at
-    ``notebooks/utils.py:189-190``. Series shorter than freq+2 produce
-    nulls at every position (statsmodels would raise)."""
-    return F.expr(_trend_raw_sql(x, freq))
-
-
 def trend(x: str, freq: int = 30) -> Column:
-    """W1 reference-parity trend: bround 3, float32 (``array<float>``)."""
+    """W1 reference-parity trend: statsmodels ``seasonal_decompose``
+    (model='additive', extrapolate_trend=1; reference
+    ``notebooks/utils.py:239-248``, freq=30 at ``notebooks/utils.py:189-190``),
+    bround 3, float32 (``array<float>``). Series shorter than freq+2
+    produce nulls at every position (statsmodels would raise)."""
     return F.expr(
         f"transform({_trend_raw_sql(x, freq)}, v -> CAST(bround(v, 3) AS FLOAT))"
     )

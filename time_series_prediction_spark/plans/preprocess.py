@@ -13,9 +13,10 @@ Unlike the reference — which materializes each stage to Delta and
 re-reads (``notebooks/scoring.py:242-336``) because a 2.5M-row Python
 UDF chain is fragile — these stages are pure DataFrame transforms: the
 whole pre_processing chain is ONE narrow stage (no shuffle at all,
-since every operator is per-row array math), so Catalyst fuses it into
-a single whole-stage-codegen pass over the data. Materialization
-becomes an optional checkpoint, not a correctness crutch.
+since every operator is per-row array math) with no checkpoint.
+Catalyst's optimizer keeps the expensive shared trend array in its own
+projection, so the extrapolation and trajectory columns that both read
+it do not evaluate it again (pinned by tests/test_plan_quality.py).
 """
 
 from __future__ import annotations
@@ -53,37 +54,19 @@ def pre_processing(
     x_days: int = 365,
     y_days: int = 92,
     trend_window_days: int = 183,
-    materialize_trend: bool = False,
 ) -> DataFrame:
     """The reference's 7-operator pre-processing chain, native.
 
     Adds: balance_trend_1MW, balance_detrend_1MW, mean, std,
     balance_detrend_1MW_scaled, X (and y unless serving),
     transactiondate_next3months, trend_next_3months_1MW, and
-    trajectory_6months in serving mode.
-
-    ``materialize_trend``: pin (value, trend) once before the fanout.
-    Every downstream column — mean/std/scaling/X/y, extrapolation,
-    trajectory — re-references the value and trend arrays, and
-    higher-order array functions run INTERPRETED with no common-
-    subexpression elimination, so an expensive upstream (the seeded
-    generator: per-element md5 + transcendentals) is otherwise
-    re-evaluated once per referencing column. One local checkpoint of
-    the ~(2 arrays × series) frame buys compute-once for the whole
-    chain; leave off when the input is a cheap scan."""
+    trajectory_6months in serving mode."""
     end = dt.date.fromisoformat(end_date)
     nxt_start = end + dt.timedelta(days=1)
     nxt_end = end + dt.timedelta(days=y_days)
 
-    out = df.withColumn("balance_trend_1MW", ts.trend(value_col, freq))
-    if materialize_trend:
-        from time_series_prediction_spark.operators.materialize import (
-            materialize,
-        )
-
-        out = materialize(out, eager=False)
     out = (
-        out
+        df.withColumn("balance_trend_1MW", ts.trend(value_col, freq))
         .withColumn(
             "balance_detrend_1MW",
             ts.detrend(value_col, "balance_trend_1MW"),

@@ -360,23 +360,8 @@ def cashflow_synthetic_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         generate_series_frame,
     )
 
-    from time_series_prediction_spark.operators.materialize import (
-        materialize,
-    )
-
-    # pin the generated table once: the keep_ts filter and the trend
-    # both re-reference the balance array, and the generator's
-    # per-element md5+transcendentals are the query's dominant cost —
-    # without the pin they re-evaluate per reference (interpreted
-    # higher-order functions get no subexpression elimination)
-    raw = materialize(
-        generate_series_frame(spark, _SYN_N_SERIES, seed=_SYN_SEED),
-        eager=False,
-    )
-    pre = pre_processing(
-        clean_series(raw), "2020-03-31", serving=True,
-        materialize_trend=True,
-    )
+    raw = generate_series_frame(spark, _SYN_N_SERIES, seed=_SYN_SEED)
+    pre = pre_processing(clean_series(raw), "2020-03-31", serving=True)
     per = pre.select(
         "signal_type",
         F.expr(

@@ -1,4 +1,4 @@
-"""Seeded synthetic cashflow-series generator, fully native columns.
+"""Seeded synthetic cashflow-series generator and its DuckDB replay.
 
 Replicates the reference generator's signal model (reference
 ``src/demo/utils.py:128-197``, wired as a zero-arg nondeterministic
@@ -24,19 +24,20 @@ always produces the same table, on any cluster, at any parallelism.
 Parity with the reference generator is distributional, not per-value.
 
 The md5 derivation (not xxhash64, which DuckDB lacks) makes the draw
-sequence CROSS-ENGINE replayable: ``duckdb_u``/``duckdb_normal`` emit
-the DuckDB mirror of the same (seed, id, tag, extra) → uniform map,
-which is how ``cashflow_synthetic_pipeline`` is oracle-checked end to
-end (the hash integers are bit-identical; the few transcendentals —
-ln/cos in Box-Muller, exp/sin in the signal — agree to ≤1 ulp between
-the JVM and DuckDB's libm, absorbed by the generator's terminal
-``bround(·, 2)`` cents quantization; verified value-exact over the
-full fixture in tests).
+sequence CROSS-ENGINE replayable: ``duckdb_series_cte`` (built from
+``duckdb_u``/``duckdb_normal``/``duckdb_normal_pair``/``duckdb_bround``)
+replays the generator draw for draw in DuckDB, which is how
+``cashflow_synthetic_pipeline`` and perfbench's serve set-up are
+oracle-checked (the hash integers are bit-identical; the few
+transcendentals — ln/cos/sin in Box-Muller, exp/sin in the signal —
+agree to ≤1 ulp between NumPy and DuckDB's libm, absorbed by the
+generator's terminal ``bround(·, 2)`` cents quantization; verified
+value-exact in tests).
 
-Everything is a Column expression: generation runs inside whole-stage
-codegen, embarrassingly parallel over ``spark.range`` splits — 2.5M
-series (the reference's serving scale) is ~100 ms of planning and pure
-executor-side compute, and 2.5B series would scale the same way.
+``generate_series_frame`` is one Arrow ``mapInPandas`` pass (hashlib
+md5 + NumPy per batch), embarrassingly parallel over ``spark.range``
+splits with no shuffle, so 2.5M series (the reference's serving
+scale) fan out linearly with executors.
 """
 
 from __future__ import annotations
@@ -44,7 +45,6 @@ from __future__ import annotations
 import math
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from time_series_prediction_spark.sources.io import date_sequence_col
 
@@ -53,20 +53,9 @@ from time_series_prediction_spark.sources.io import date_sequence_col
 _U_DIV = float(2**52)
 
 
-def _u(id_col: str, seed: int, tag: int, extra: str = "'0'") -> str:
-    """Uniform(0,1) from md5('{seed}|{id}|{tag}|' || extra) (Spark SQL
-    fragment). ``extra`` is a STRING expression (day index etc.)."""
-    s = (
-        f"concat('{seed}|', CAST({id_col} AS STRING), '|{tag}|', {extra})"
-    )
-    return (
-        f"((CAST(conv(substring(md5({s}), 1, 13), 16, 10) AS BIGINT)"
-        f" + 0.5D) / {_U_DIV!r}D)"
-    )
-
-
 def duckdb_u(seed: int, tag: int, extra: str = "'0'") -> str:
-    """DuckDB mirror of ``_u`` over a column named ``id`` — same md5
+    """DuckDB mirror of the generator's uniform draw (``_u_of`` in
+    ``generate_series_frame``) over a column named ``id`` — same md5
     input string, same 52-bit slice, same IEEE map."""
     s = f"'{seed}|' || CAST(id AS VARCHAR) || '|{tag}|' || {extra}"
     return (
@@ -75,34 +64,12 @@ def duckdb_u(seed: int, tag: int, extra: str = "'0'") -> str:
     )
 
 
-def _normal(id_col: str, seed: int, tag: int, extra: str = "'0'") -> str:
-    """Standard normal via Box-Muller from ONE md5 digest: the 32 hex
-    chars carry two independent 52-bit uniforms (chars 1-13 and
-    14-26). The digest binds once through a single-element transform
-    (higher-order functions are interpreted with no common-
-    subexpression elimination — two ``md5(...)`` mentions would hash
-    twice per draw, and the per-day noise draw is the generator's hot
-    loop). Tag namespace ``n{tag}`` keeps normal draws disjoint from
-    ``_u``'s."""
-    s = (
-        f"concat('{seed}|', CAST({id_col} AS STRING), '|n{tag}|', {extra})"
-    )
-
-    def u(lo: int) -> str:
-        return (
-            f"((CAST(conv(substring(_hn, {lo}, 13), 16, 10) AS BIGINT)"
-            f" + 0.5D) / {_U_DIV!r}D)"
-        )
-
-    return (
-        f"(transform(array(md5({s})), _hn -> "
-        f"sqrt(-2.0D * ln({u(1)})) * cos({2 * math.pi}D * {u(14)}))[0])"
-    )
-
-
 def duckdb_normal(seed: int, tag: int, extra: str = "'0'") -> str:
-    """DuckDB mirror of ``_normal`` (identical digest, slices, and
-    operand order)."""
+    """DuckDB mirror of the generator's Box-Muller normal (``_z_of``
+    in ``generate_series_frame``): one md5 digest carries two 52-bit
+    uniforms (hex chars 1-13 and 14-26), and the tag namespace
+    ``n{tag}`` keeps normal draws disjoint from uniform ones; identical
+    digest, slices, and operand order."""
     s = f"'{seed}|' || CAST(id AS VARCHAR) || '|n{tag}|' || {extra}"
 
     def u(lo: int) -> str:
@@ -117,64 +84,13 @@ def duckdb_normal(seed: int, tag: int, extra: str = "'0'") -> str:
     )
 
 
-def _paired_values_array(
-    id_col: str, seed: int, tag: int, n_expr: str, val_of_iz: str
-) -> str:
-    """Array of ``n`` values ``f(i, z_i)`` where the ``z_i`` are
-    standard normals from PAIRED Box-Muller: ONE md5 digest per TWO
-    draws — elements 2p and 2p+1 come from digest (seed, id,
-    ``n{tag}p``, p) as r·cos(θ) and r·sin(θ) with r = sqrt(−2 ln u₁),
-    θ = 2π u₂. The per-day noise draw is the generator's hot loop,
-    and the classic one-digest-per-draw form discarded the sine
-    normal — pairing halves the md5 AND ln work (round-12 VERDICT
-    #4). ``val_of_iz`` is a SQL fragment over lambda vars ``i`` (day
-    index) and ``_z`` (the normal draw); building the WHOLE element
-    inside the pair transform matters: a separate normals column
-    would be INLINED back into the per-element transform by
-    Catalyst's projection collapse (interpreted higher-order fns get
-    no common-subexpression elimination), re-evaluating the entire
-    pair array once per element — O(n²) digests (measured: 3 s →
-    142 s). The nested single-element transform bindings keep digest,
-    radius, and angle each computed exactly once.
-    ``duckdb_normal_pair`` replays the identical draw sequence
-    row-shaped."""
-    s = (
-        f"concat('{seed}|', CAST({id_col} AS STRING), '|n{tag}p|', "
-        f"CAST(p AS STRING))"
-    )
-    u1 = (
-        f"((CAST(conv(substring(_hn, 1, 13), 16, 10) AS BIGINT)"
-        f" + 0.5D) / {_U_DIV!r}D)"
-    )
-    u2 = (
-        f"((CAST(conv(substring(_hn, 14, 13), 16, 10) AS BIGINT)"
-        f" + 0.5D) / {_U_DIV!r}D)"
-    )
-
-    def elem(i_expr: str, z_expr: str) -> str:
-        return (
-            f"transform(array({z_expr}), _z -> "
-            f"transform(array({i_expr}), i -> {val_of_iz})[0])[0]"
-        )
-
-    return (
-        f"slice(flatten(transform("
-        f"sequence(0, CAST(ceil({n_expr} / 2.0D) AS INT) - 1), p -> "
-        f"transform(array(md5({s})), _hn -> "
-        f"transform(array(sqrt(-2.0D * ln({u1}))), _r -> "
-        f"transform(array({2 * math.pi}D * {u2}), _c -> "
-        f"array({elem('2 * p', '_r * cos(_c)')}, "
-        f"{elem('2 * p + 1', '_r * sin(_c)')})"
-        f")[0])[0])[0])), 1, {n_expr})"
-    )
-
-
 def duckdb_normal_pair(seed: int, tag: int, i_expr: str = "i") -> str:
-    """DuckDB mirror of ``_normal_pair_array`` for ROW-SHAPED replay:
-    the draw for day ``i`` — digest keyed on pair index ``i // 2``,
-    cos branch for even ``i``, sin for odd. Identical digest string,
-    slices, and operand order, so the IEEE sequence matches the Spark
-    array element for element."""
+    """DuckDB mirror of the generator's paired Box-Muller day noise
+    (one md5 digest per two days) for ROW-SHAPED replay: the draw for
+    day ``i`` — digest keyed on pair index ``i // 2``, cos branch for
+    even ``i``, sin for odd. Identical digest string, slices, and
+    operand order, so the IEEE sequence matches the generated array
+    element for element."""
     s = (
         f"'{seed}|' || CAST(id AS VARCHAR) || '|n{tag}p|' || "
         f"CAST(({i_expr} // 2) AS VARCHAR)"
@@ -210,40 +126,19 @@ def generate_series_frame(
     (primaryaccountholder, transactiondate array<date>, balance
     array<float>, signal_type int).
 
-    r14: generation runs as ONE vectorized Arrow pass over the
-    ``spark.range`` splits (``_gen_batch`` — hashlib md5 + NumPy),
-    replacing the interpreted nested-transform expression chain: the
-    md5-derived integers are bit-identical by construction, every
-    float op follows the SQL fragments' operand order, the
-    transcendentals (ln/cos/sin/exp) agree with the JVM/DuckDB libms
-    to ≤1 ulp exactly as those two already agree with each other, and
-    the terminal shortest-repr half-even ``bround(·, 2)`` absorbs the
-    difference — value-exactness stays pinned by the DuckDB-replay
-    goldens (tests/test_generate_pipeline.py) and the
-    cashflow_synthetic_pipeline oracle at both scales. Catalyst's
-    interpreted higher-order functions evaluated ~30 expression nodes
-    per element (~15M per 1000-series build, the pipeline's dominant
-    cost — r14 profile); the batch path does the same math in
-    vectorized C. Scale shape unchanged: embarrassingly parallel over
-    range splits, no shuffle, 2.5M series fan out linearly."""
-    df = spark.range(n_series).toDF(id_col)
-    return _generate_numpy(
-        df, id_col, start_date, end_date, seed, cycle_period, n_spikes
-    )
-
-
-def _generate_numpy(
-    df: DataFrame,
-    id_col: str,
-    start_date: str,
-    end_date: str,
-    seed: int,
-    cycle_period: float,
-    n_spikes: int,
-) -> DataFrame:
-    """The Arrow-batch twin of the retired expression chain — same
-    draw map ((seed, id, tag[, p]) → md5 → uniforms/Box-Muller), same
-    operand order per element."""
+    Generation is ONE vectorized Arrow pass (``mapInPandas``) over the
+    ``spark.range`` splits: per series, hashlib md5 draws the
+    parameters and the paired Box-Muller day noise, NumPy builds the
+    signal, and each element is rounded with ``bround(·, 2)``
+    semantics (shortest-repr decimal, HALF_EVEN). The md5-derived
+    integers are bit-identical to ``duckdb_series_cte``'s by
+    construction, every float op follows that replay's operand order,
+    and the transcendentals (ln/cos/sin/exp) agree with DuckDB's libm
+    to ≤1 ulp, which the terminal rounding absorbs — value-exactness
+    is pinned by the DuckDB-replay goldens
+    (tests/test_generate_pipeline.py) and the
+    cashflow_synthetic_pipeline oracle. Embarrassingly parallel over
+    range splits, no shuffle: 2.5M series fan out linearly."""
     import datetime as _dt
     import hashlib
     from decimal import ROUND_HALF_EVEN, Decimal
@@ -253,8 +148,7 @@ def _generate_numpy(
 
     d0 = _dt.date.fromisoformat(str(start_date))
     d1 = _dt.date.fromisoformat(str(end_date))
-    dates = [d0 + _dt.timedelta(days=k) for k in range((d1 - d0).days + 1)]
-    n = len(dates)
+    n = (d1 - d0).days + 1
     nf = float(n)
     two_pi = 2 * math.pi
     per = float(cycle_period)
@@ -359,7 +253,7 @@ def _generate_numpy(
                 }
             )
 
-    gen = df.mapInPandas(
+    gen = spark.range(n_series).toDF(id_col).mapInPandas(
         _gen_batch,
         f"{id_col} long, balance array<float>, signal_type int",
     )
@@ -369,91 +263,6 @@ def _generate_numpy(
     return gen.withColumn(
         "transactiondate", date_sequence_col(start_date, end_date)
     ).select(id_col, "transactiondate", "balance", "signal_type")
-
-
-def _generate_series_frame_expr(
-    spark: SparkSession,
-    n_series: int,
-    start_date: str = "2018-12-01",
-    end_date: str = "2020-03-31",
-    seed: int = 42,
-    cycle_period: float = 30.5,
-    n_spikes: int = 3,
-    id_col: str = "primaryaccountholder",
-) -> DataFrame:
-    """The retired pure-expression generator, kept as the
-    cross-implementation determinism witness
-    (tests/test_generate_pipeline.py pins numpy == expression ==
-    DuckDB on a sample)."""
-    df = spark.range(n_series).toDF(id_col)
-
-    salary = f"greatest({_normal(id_col, seed, 1)} * 5000.0D + 15000.0D, 100.0D)"
-    trend_exp = f"({_u(id_col, seed, 5)} + 1.0D)"  # U(1,2)
-    noise_sd = f"(abs({_normal(id_col, seed, 3)} * 0.01D) + 0.1D)"
-    sign = f"(CASE WHEN {_u(id_col, seed, 7)} < 0.5D THEN -1.0D ELSE 1.0D END)"
-    phase = f"(({_u(id_col, seed, 9)} * 2.0D - 1.0D) * {math.pi}D)"
-    # random.choice(['sine','sawtooth','triangle','square']) then the
-    # reference's int mapping sine→1 triangle→2 square→3 sawtooth→4
-    choice = f"CAST(floor({_u(id_col, seed, 11)} * 4.0D) AS INT)"
-
-    df = (
-        df.withColumn("_salary", F.expr(salary))
-        .withColumn("_trend_exp", F.expr(trend_exp))
-        .withColumn("_noise_sd", F.expr(noise_sd))
-        .withColumn("_sign", F.expr(sign))
-        .withColumn("_phase", F.expr(phase))
-        .withColumn("_choice", F.expr(choice))
-        .withColumn(
-            "signal_type",
-            F.expr(
-                "CASE _choice WHEN 0 THEN 1 WHEN 1 THEN 4 WHEN 2 THEN 2 ELSE 3 END"
-            ),
-        )
-        .withColumn("transactiondate", date_sequence_col(start_date, end_date))
-        .withColumn("_n", F.size("transactiondate"))
-    )
-
-    # spike times/amplitudes: k = 0..n_spikes-1
-    spike_terms = []
-    for k in range(n_spikes):
-        t_k = (
-            f"(_n - 457 + CAST(floor({_u(id_col, seed, 20 + k)} * 365.0D) AS INT))"
-        )
-        s_k = f"(CASE WHEN {_u(id_col, seed, 30 + k)} < 0.5D THEN -1.0D ELSE 1.0D END)"
-        a_k = f"({s_k} * (3.0D * _salary + _salary * {_normal(id_col, seed, 40 + k)}))"
-        spike_terms.append(
-            f"(CASE WHEN i >= {t_k} THEN {a_k} ELSE 0.0D END)"
-        )
-    spikes = " + ".join(spike_terms) if spike_terms else "0.0D"
-
-    # linspace(-n/2, n/2, n): t_i = -n/2 + i*n/(n-1); x = 2π t/P + phase
-    t_i = "(-_n / 2.0D + CAST(i AS DOUBLE) * _n / (_n - 1.0D))"
-    x = f"({2 * math.pi}D * {t_i} / {cycle_period}D + _phase)"
-    frac = f"(({x}) / {2 * math.pi}D - floor(({x}) / {2 * math.pi}D))"
-    saw = f"(2.0D * {frac} - 1.0D)"  # scipy sawtooth, width=1
-    square = f"(CASE WHEN {frac} < 0.5D THEN 1.0D ELSE -1.0D END)"
-    seasonal = (
-        f"(CASE _choice "
-        f"WHEN 0 THEN 0.5D * _salary * sin({x}) "
-        f"WHEN 1 THEN -0.5D * _salary * {saw} "
-        f"WHEN 2 THEN _salary * abs({saw}) - 1.0D "
-        f"ELSE 0.5D * _salary * {square} END)"
-    )
-    trend_ts = f"(_sign * _salary * exp(_trend_exp * CAST(i AS DOUBLE) / (_n - 1.0D)))"
-    # per-day noise: the hot loop — paired Box-Muller (one md5 per
-    # TWO days), with the WHOLE balance element built inside the pair
-    # transform (see _paired_values_array for why a separate normals
-    # column is an O(n²) trap)
-    noise = "(_noise_sd * _salary * _z)"
-
-    val = (
-        f"CAST(bround({seasonal} + {trend_ts} + {noise} + {spikes}, 2)"
-        " AS FLOAT)"
-    )
-    balance = _paired_values_array(id_col, seed, 50, "_n", val)
-    return df.withColumn("balance", F.expr(balance)).select(
-        id_col, "transactiondate", "balance", "signal_type"
-    )
 
 
 def duckdb_bround(v: str, ndigits: int) -> str:
@@ -482,7 +291,7 @@ def duckdb_series_cte(
 ) -> str:
     """DuckDB CTE chain replaying ``generate_series_frame`` draw for
     draw: ``gen(id, signal_type, b LIST(FLOAT))``. Every expression
-    mirrors the Spark fragment's operand ORDER (IEEE addition is not
+    mirrors the generator's operand ORDER (IEEE addition is not
     associative) and every literal is e-notation (a bare DuckDB
     decimal literal is DECIMAL, not DOUBLE — different rounding). The
     md5-derived uniforms are bit-identical across engines; the

@@ -8,8 +8,8 @@ Covers the reference's source/sink inventory (SURVEY §2.1):
   S3 Parquet scan / S6 sink       -> spark.read.parquet / df.write.parquet
   S4 Delta scan / S7 sink         -> optional: falls back to parquet when
                                      delta-spark jars are absent
-  S5 JSON config scan             -> config.load_json_config (driver-side)
-  S8 managed-table sink           -> saveAsTable
+  S5 JSON config scan / S8 managed-table sink -> not implemented: no
+                                     lifecycle step uses them
   S9 driver collect               -> built-in (toPandas/show/count)
 
 Also the engine's fixture-table registry for the driver-generated
@@ -88,11 +88,16 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     conf, not a Spark-core conf) so read_table works on ANY SparkSession —
     including vanilla ones the engine didn't build. Relying on session.py
     defaults alone broke every events read on external harness sessions.
-    r15: provisioning happens on the memo MISS path only — a hit proves
-    this session already ran the full path, so the two conf RPCs
-    (~190 × 2 per bench pass) are not re-paid per call (guide §5 /
-    r14 VERDICT Next #1).
+    Both confs are set on every call, memo hit or miss: a hit returns a
+    plan whose timestamp semantics assume a UTC session, and the session
+    zone may have been changed since the plan was memoized.
     """
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    # Self-provision UTC alongside the nanos conf: external vanilla
+    # sessions inherit the host timezone, and date bucketing
+    # (to_date/datediff over events.ts) must agree with the tz-naive
+    # DuckDB oracle (CAST(ts AS DATE)) regardless of host locale.
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
     path = os.path.join(sf_dir, f"{name}.parquet")
     try:
         st = os.stat(path)
@@ -119,12 +124,6 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # evict so dead sessions aren't pinned for process
             # lifetime (ADVICE r14)
             del _READ_TABLE_MEMO[key]
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # Self-provision UTC alongside the nanos conf: external vanilla
-    # sessions inherit the host timezone, and date bucketing
-    # (to_date/datediff over events.ts) must agree with the tz-naive
-    # DuckDB oracle (CAST(ts AS DATE)) regardless of host locale.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     df = spark.read.parquet(path)
     ts_type = dict(df.dtypes).get("ts")
     if name == "events" and ts_type == "bigint":
@@ -141,21 +140,6 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if key is not None:
         _READ_TABLE_MEMO[key] = (spark, df)
     return df
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TPCH_TABLES
-) -> dict[str, DataFrame]:
-    """Load the fixture star schema as a dict of DataFrames."""
-    return {n: read_table(spark, sf_dir, n) for n in names}
-
-
-def register_views(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TPCH_TABLES
-) -> None:
-    """Register fixture tables as temp views for spark.sql queries."""
-    for n in names:
-        read_table(spark, sf_dir, n).createOrReplaceTempView(n)
 
 
 def integer_range(spark: SparkSession, n: int, col: str = "primaryaccountholder") -> DataFrame:
@@ -334,14 +318,3 @@ def write_delta(df: DataFrame, path: str, mode: str = "overwrite") -> None:
         )
 
         write_delta_log(df, path, mode=mode)
-
-
-def save_as_table(
-    df: DataFrame, name: str, partition_cols: list[str] | None = None, mode: str = "overwrite"
-) -> None:
-    """S8: managed-table sink (reference
-    ``notebooks/synthetic_data_generation.py:271-272``)."""
-    writer = df.write.mode(mode)
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.saveAsTable(name)
