@@ -1,9 +1,9 @@
 #!/usr/bin/env python3
-"""Round-start probe for the optional libraries that gate the three
-"partial" operators (VERDICT S4/S7/S10 and the multimodal decode
-paths). If the image ever gains one of these, the matching
-conditional tests light up automatically — this script just reports
-which real paths are live so a round doesn't miss the upgrade.
+"""Round-start probe for the optional libraries that gate the
+"partial" operators: the Delta scan/sink (S4/S7) and the multimodal
+image/video decode paths. If the image ever gains one of these, the
+matching conditional tests light up automatically — this script just
+reports which real paths are live so a round doesn't miss the upgrade.
 
 Usage: python scripts/probe_optional_deps.py
 """
@@ -14,9 +14,6 @@ import importlib.util
 
 PROBES = {
     "delta": "delta-spark jars (r8: the NATIVE _delta_log reader/writer in sources/deltalog.py is the live path; jars would add advanced protocol features - deletion vectors, column mapping)",
-    "tensorflow": "Keras CNN train/score (model/train.py, model/scoring.py)",
-    "mlflow": "MLflow registry backend (model/registry.py)",
-    "petastorm": "Petastorm converter (model/train.py S10)",
     "PIL": "real image decode (operators/multimodal.py)",
     "cv2": "real video decode (operators/multimodal.py)",
 }

@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 from time_series_prediction_spark.operators.reshape import long_to_wide, wide_to_long
 from time_series_prediction_spark.sources.io import (
     date_sequence_col,
-    integer_range,
     read_table,
 )
 
@@ -19,12 +18,6 @@ def test_read_fixture_tables(spark, sf_dir):
     li = read_table(spark, sf_dir, "lineitem")
     assert li.count() > 1000
     assert "l_quantity" in li.columns
-
-
-def test_integer_range(spark):
-    df = integer_range(spark, 10)
-    assert df.columns == ["primaryaccountholder"]
-    assert df.count() == 10
 
 
 def test_date_sequence_col(spark):

@@ -1,14 +1,16 @@
 """End-to-end serve path: pre_process -> iterator-pandas_udf scoring ->
-post_process -> R2, with stub models (TF not in this image)."""
+post_process -> R2, with the baseline models; and the scorer's width
+checks."""
 
 from __future__ import annotations
 
 import numpy as np
 import pytest
 
+from time_series_prediction_spark.model.numpy_cnn import NumpyCNN1D
 from time_series_prediction_spark.model.scoring import (
-    keras_cnn_factory,
     last_value_model_factory,
+    numpy_cnn_factory,
     score_dataframe,
     zero_model_factory,
 )
@@ -98,9 +100,24 @@ def test_scoring_pipeline_matches_oracle_exactly(spark, sf_dir):
         assert np.all(eq), (c, got[c], want[c])
 
 
-def test_keras_factory_raises_without_tf(spark):
+def test_numpy_cnn_factory_rejects_other_widths(tmp_path):
+    """A saved CNN built for other widths fails at load, naming both
+    (x_days, y_days) pairs, instead of with a shape error per batch."""
+    weights = str(tmp_path / "cnn.npz")
+    NumpyCNN1D(20, 4, filters=2, dense_units=3, seed=0).save(weights)
+    make = numpy_cnn_factory(weights, x_days=365, horizon=92)
+    with pytest.raises(ValueError, match=r"\(20, 4\).*\(365, 92\)"):
+        make()
+    # matching widths load and predict (B, y_days)
+    predict = numpy_cnn_factory(weights, x_days=20, horizon=4)()
+    assert predict(np.zeros((3, 20), dtype=np.float32)).shape == (3, 4)
+
+
+def test_scoring_udf_rejects_wrong_output_width(spark):
+    """A model whose output is not (len(x), horizon) fails the query
+    with the scorer's ValueError instead of writing short arrays."""
     raw = generate_series_frame(spark, 5, seed=1)
     pre = pre_processing(clean_series(raw), "2020-03-31", serving=True)
-    scored = score_dataframe(pre, keras_cnn_factory("/nonexistent"))
-    with pytest.raises(Exception, match="tensorflow|NotImplementedError"):
+    scored = score_dataframe(pre, zero_model_factory(horizon=10), horizon=92)
+    with pytest.raises(Exception, match=r"ValueError.*scorer expects"):
         scored.select("y_pred").collect()

@@ -1,16 +1,10 @@
-"""Training-feed tests (shapes/batching; TF itself is absent)."""
+"""Training-feed tests (shapes/batching)."""
 
 from __future__ import annotations
 
-import tempfile
-
 import numpy as np
 
-from time_series_prediction_spark.model.train import (
-    export_training_parquet,
-    partition_trainer_feed,
-    training_batches,
-)
+from time_series_prediction_spark.model.train import training_batches
 from time_series_prediction_spark.plans.preprocess import (
     clean_series,
     pre_processing,
@@ -31,75 +25,3 @@ def test_training_batches_shapes(spark):
         assert bx.dtype == np.float32 and by.dtype == np.float32
     assert all(b[0].shape[0] == 16 for b in batches[:-1])
 
-
-def _sum_stats_trainer(batches):
-    """Toy trainer: sufficient statistics (sums), mergeable across
-    partitions — stands in for per-worker SGD / normal equations."""
-    n, sx, sy = 0, 0.0, 0.0
-    for bx, by in batches:
-        n += bx.shape[0]
-        sx += float(bx.sum())
-        sy += float(by.sum())
-    return {"n": n, "sum_x": sx, "sum_y": sy}
-
-
-def test_partition_trainer_feed_no_driver_funnel(spark):
-    """The distributed feed path: trainer runs per partition inside
-    mapInPandas (never a driver toLocalIterator); per-partition stats
-    merge to the exact global statistics."""
-    raw = generate_series_frame(spark, 40, seed=5)
-    pre = pre_processing(clean_series(raw), "2020-03-31", serving=False)
-    train, _, _ = train_val_test_split(pre)
-    train = train.repartition(4)
-
-    out = partition_trainer_feed(train, _sum_stats_trainer, batch_size=8)
-    # lazily planned: the trainer output is itself a DataFrame (executor
-    # side), with one row per non-empty partition
-    rows = out.collect()
-    assert 1 <= len(rows) <= 4
-    # plan must be a mapInPandas over the scan — no driver collect node
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in plan
-
-    total_n = sum(r["n_rows"] for r in rows)
-    assert total_n == train.count()
-    assert total_n == sum(int(r["result"]["n"]) for r in rows)
-
-    # partition-merged stats equal the driver-side feed's stats exactly
-    want = _sum_stats_trainer(training_batches(train, batch_size=8))
-    got_sx = sum(r["result"]["sum_x"] for r in rows)
-    got_sy = sum(r["result"]["sum_y"] for r in rows)
-    assert np.isclose(got_sx, want["sum_x"], rtol=1e-6)
-    assert np.isclose(got_sy, want["sum_y"], rtol=1e-6)
-
-
-def test_partition_trainer_feed_early_stopping_trainer(spark):
-    """A trainer that stops after the first batch (early stopping) must
-    still produce a result row with the FULL partition row count — the
-    feed drains unconsumed batches after the trainer returns."""
-    raw = generate_series_frame(spark, 30, seed=7)
-    pre = pre_processing(clean_series(raw), "2020-03-31", serving=False)
-    train, _, _ = train_val_test_split(pre)
-    train = train.repartition(2)
-
-    def early_stop_trainer(batches):
-        for bx, _by in batches:
-            return {"seen": bx.shape[0]}  # consume exactly one batch
-        return {"seen": 0}
-
-    rows = partition_trainer_feed(train, early_stop_trainer, batch_size=4).collect()
-    assert len(rows) >= 1
-    # n_rows counts the whole partition, not just the consumed batch
-    assert sum(r["n_rows"] for r in rows) == train.count()
-    assert all(r["result"]["seen"] <= 4 for r in rows)
-
-
-def test_export_training_parquet_roundtrip(spark):
-    raw = generate_series_frame(spark, 30, seed=2)
-    pre = pre_processing(clean_series(raw), "2020-03-31", serving=False)
-    train, _, _ = train_val_test_split(pre)
-    with tempfile.TemporaryDirectory() as tmp:
-        export_training_parquet(train, f"{tmp}/train")
-        back = spark.read.parquet(f"{tmp}/train")
-        assert back.count() == train.count()
-        assert set(back.columns) == {"X", "y"}

@@ -4,8 +4,8 @@ Walks the AST import graph from the driver contract
 (``__spark_entry__.py``), the benchmark (``perfbench/*.py``) and
 ``bench.py``, following function-local imports too, and asserts that
 each ``time_series_prediction_spark`` module is reached. A module only
-its own tests import is dead code: delete it with its tests instead of
-adding it here.
+its own tests import is dead code: delete it with its tests. The rule
+has no exceptions.
 """
 
 from __future__ import annotations
@@ -15,11 +15,6 @@ from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 PKG = "time_series_prediction_spark"
-
-# Reached by no entry point, kept on purpose: the reference's MLflow
-# step (register a model, look it up by stage), which
-# test_full_lifecycle_train_register_score_r2 runs end to end.
-UNREACHED_ON_PURPOSE = {f"{PKG}.model.registry"}
 
 
 def _package_modules() -> dict[str, Path]:
@@ -74,6 +69,4 @@ def _reached(modules: dict[str, Path]) -> set[str]:
 def test_every_package_module_is_reached():
     modules = _package_modules()
     unreached = set(modules) - _reached(modules)
-    assert unreached == UNREACHED_ON_PURPOSE, sorted(
-        unreached ^ UNREACHED_ON_PURPOSE
-    )
+    assert unreached == set(), sorted(unreached)

@@ -1,19 +1,15 @@
 """Pure-NumPy 1-D CNN trainer (r13 VERDICT Next #3): analytic-gradient
 correctness, seeded determinism, loss decrease on a learnable mapping,
 save/load round-trip, and the full reference lifecycle —
-train → register → score (iterator pandas_udf) → R² — in a TF-less
-image. Reference topology: notebooks/utils.py:435-460; training loop:
+train → score (iterator pandas_udf) → R² — without TensorFlow.
+Reference topology: notebooks/utils.py:435-460; training loop:
 notebooks/training_new_petastorm.py:282-303."""
 
 from __future__ import annotations
 
 import numpy as np
-import pytest
 
-from time_series_prediction_spark.model.numpy_cnn import (
-    NumpyCNN1D,
-    fit_numpy_cnn,
-)
+from time_series_prediction_spark.model.numpy_cnn import NumpyCNN1D
 
 
 def _toy_data(n=64, x_days=20, y_days=4, seed=3):
@@ -117,67 +113,50 @@ def test_golden_predictions_pinned():
     )
 
 
-def test_save_load_roundtrip_and_3d_input(tmp_path):
+def test_save_load_roundtrip(tmp_path):
     x, y = _toy_data(n=16)
     m = NumpyCNN1D(20, 4, filters=8, dense_units=10, seed=5)
     m.fit([(x, y)], epochs=3)
     p = str(tmp_path / "cnn.npz")
     m.save(p)
     m2 = NumpyCNN1D.load(p)
-    got = m2.predict(x)
-    assert np.array_equal(got, m.predict(x))
-    # keras-shaped (B, T, 1) input accepted identically
-    assert np.array_equal(m.predict(x[:, :, None]), got)
+    assert np.array_equal(m2.predict(x), m.predict(x))
 
 
-def test_full_lifecycle_train_register_score_r2(spark, tmp_path):
-    """The reference lifecycle end-to-end WITHOUT tensorflow:
-    pre_process → fit_numpy_cnn (training_batches feed) → save →
-    file-backed registry → iterator-pandas_udf scoring → R² — the one
-    stage (T.3) that previously could not run in this image."""
-    from time_series_prediction_spark.model.registry import (
-        LocalModelRegistry,
-    )
+def test_full_lifecycle_train_score_r2(spark, tmp_path):
+    """The reference lifecycle end-to-end without TensorFlow:
+    pre_process → NumpyCNN1D.fit (training_batches feed) → save →
+    iterator-pandas_udf scoring → R²."""
     from time_series_prediction_spark.model.scoring import (
-        cnn_factory,
+        numpy_cnn_factory,
         score_dataframe,
     )
+    from time_series_prediction_spark.model.train import training_batches
     from time_series_prediction_spark.plans.preprocess import (
         clean_series,
+        post_processing,
         pre_processing,
+        r2_metrics,
         train_val_test_split,
     )
     from time_series_prediction_spark.sources.generate import (
         generate_series_frame,
     )
 
-    from time_series_prediction_spark.plans.preprocess import (
-        post_processing,
-        r2_metrics,
-    )
-
     raw = generate_series_frame(spark, 24, seed=11)
     pre = pre_processing(clean_series(raw), "2020-03-31", serving=False)
-    train, val, _test = train_val_test_split(pre)
-    model, hist = fit_numpy_cnn(
-        train, val, epochs=2, batch_size=32, seed=1
-    )
-    assert len(hist["loss"]) == 2 and len(hist["val_loss"]) == 2
-    assert all(np.isfinite(v) for v in hist["loss"] + hist["val_loss"])
+    train, _val, _test = train_val_test_split(pre)
+    model = NumpyCNN1D(365, 92, seed=1)
+    hist = model.fit(lambda: training_batches(train, 32), epochs=2)
+    assert len(hist) == 2 and all(np.isfinite(v) for v in hist)
     weights = str(tmp_path / "cashflow_cnn.npz")
     model.save(weights)
-
-    reg = LocalModelRegistry(str(tmp_path / "registry"))
-    mv = reg.register("cashflow-cnn", run_id="r14-test", source=weights)
-    reg.transition("cashflow-cnn", mv.version, "Production")
-    prod = reg.latest_version("cashflow-cnn", stage="Production")
-    assert prod.source == weights
 
     # serve exactly like the reference: serving-shaped frame through
     # the iterator pandas_udf, then rescale/retrend and R²
     serve = pre_processing(clean_series(raw), "2020-03-31", serving=True)
     scored = score_dataframe(
-        serve, cnn_factory(prod.source), x_col="X", out_col="y_pred"
+        serve, numpy_cnn_factory(weights), x_col="X", out_col="y_pred"
     )
     rows = scored.select("X", "y_pred").limit(3).collect()
     assert rows
@@ -195,12 +174,3 @@ def test_full_lifecycle_train_register_score_r2(spark, tmp_path):
         post, y_pred_col="y_pred_rescaled_retrended"
     ).first()
     assert np.isfinite(m["r2_3month"]) and np.isfinite(m["r2_1month"])
-
-
-def test_keras_preferred_when_path_is_keras(tmp_path):
-    """cnn_factory routes .npz to the NumPy backend and anything else
-    to keras — which stays import-gated in this image."""
-    from time_series_prediction_spark.model.scoring import cnn_factory
-
-    with pytest.raises(NotImplementedError, match="tensorflow"):
-        cnn_factory(str(tmp_path / "model.keras"))()

@@ -51,6 +51,57 @@ def test_correlation_agrees_with_builtin(spark, sf_dir):
         assert -1.0 <= r <= 1.0
 
 
+def test_correlation_exact_with_signed_measures(spark, tmp_path):
+    """The three int64 limbs (p & m21, (p >> 21) & m21, p >> 42)
+    reconstruct NEGATIVE per-row products exactly too: ``>>`` is an
+    arithmetic shift (floor division), so the top limb carries the
+    sign. A lineitem with negative quantities, prices, discounts and
+    taxes must equal the DuckDB DECIMAL(38,0) oracle bit for bit."""
+    import duckdb
+    import numpy as np
+    import pandas as pd
+
+    from time_series_prediction_spark.plans.stats_queries import _oracle_sql
+
+    rng = np.random.default_rng(5)
+    n = 400
+    pdf = pd.DataFrame(
+        {
+            "l_quantity": rng.integers(-60, 60, n)
+            + rng.choice([0.0, 0.25, 0.3, 0.75], n),
+            # |price_cents| up to 5e8: squares pass 2^42, so the top
+            # limb is non-zero, and negative for the signed products
+            "l_extendedprice": np.round(rng.uniform(-5e6, 5e6, n), 3),
+            "l_discount": np.round(rng.uniform(-0.1, 0.1, n), 4),
+            "l_tax": np.round(rng.uniform(-0.08, 0.08, n), 4),
+        }
+    )
+    # Spark's round and DuckDB's differ on negative exact halves: keep
+    # every scaled value away from .5
+    for c, k in [("l_quantity", 1), ("l_extendedprice", 100),
+                 ("l_discount", 100), ("l_tax", 100)]:
+        frac = np.abs(pdf[c].to_numpy() * k) % 1.0
+        pdf = pdf[np.abs(frac - 0.5) > 1e-6]
+    assert len(pdf) > 300
+    assert (pdf < 0).any().all()
+    pdf.to_parquet(tmp_path / "lineitem.parquet", index=False)
+
+    got = {
+        r["pair"]: (r["n"], r["corr"])
+        for r in lineitem_correlation_matrix(spark, str(tmp_path)).collect()
+    }
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW lineitem AS SELECT * FROM '{tmp_path}/lineitem.parquet'"
+    )
+    want = {
+        pair: (n_rows, corr)
+        for pair, n_rows, corr in con.execute(_oracle_sql()).fetchall()
+    }
+    con.close()
+    assert got == want
+
+
 def test_seasonality_matches_oracle(spark, sf_dir, duck):
     from time_series_prediction_spark.plans.stats_queries import (
         TS_SEASONALITY_SQL,

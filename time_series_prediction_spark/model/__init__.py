@@ -1,1 +1,1 @@
-"""Model training / scoring scaffolding (deep-learning-optional)."""
+"""The reference 1-D CNN: NumPy backend, training feed, pandas_udf scoring."""

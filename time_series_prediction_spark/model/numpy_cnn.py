@@ -9,17 +9,14 @@ Exact reference topology (``notebooks/utils.py:435-460``, trained at
 
 Forward pass + analytic backprop, Glorot-uniform init from a fixed
 seed (fully deterministic given seed + data order), Adam with the
-keras defaults (lr=1e-3, β1=.9, β2=.999, ε=1e-7). Keras remains the
-PREFERRED backend wherever tensorflow imports (``train.fit_keras_cnn``
-— same topology, import-gated); this trainer exists so the full
-train → register → score → R² lifecycle runs end-to-end in a TF-less
-image, fed by the same ``training_batches`` / ``partition_trainer_feed``
-plumbing and scored through the same iterator pandas_udf.
+keras defaults (lr=1e-3, β1=.9, β2=.999, ε=1e-7). This is the engine's
+one model backend: it trains on ``train.training_batches`` and scores
+through ``scoring.numpy_cnn_factory``'s iterator pandas_udf, so the
+full train → score → R² lifecycle runs without TensorFlow.
 
 Scale note: the reference trains ONE global model on the driver
 (single-node Keras); this matches that shape — training data streams
 through ``training_batches`` (bounded memory), weights are a few MB.
-Distributed data-parallel averaging rides ``partition_trainer_feed``.
 """
 
 from __future__ import annotations
@@ -112,10 +109,8 @@ class NumpyCNN1D:
         return yhat, (win, z, arg, flat, h_pre, h)
 
     def predict(self, x: np.ndarray) -> np.ndarray:
-        """(B, x_days) or (B, x_days, 1) → (B, y_days) float32."""
+        """(B, x_days) → (B, y_days) float32."""
         x = np.asarray(x, dtype=np.float64)
-        if x.ndim == 3:
-            x = x[:, :, 0]
         yhat, _ = self._forward(x)
         return yhat.astype(np.float32)
 
@@ -124,8 +119,6 @@ class NumpyCNN1D:
         """One Adam step on one batch; returns the batch's PRE-step
         MAE (keras's reported running loss uses pre-step values)."""
         x = np.asarray(x, dtype=np.float64)
-        if x.ndim == 3:
-            x = x[:, :, 0]
         y = np.asarray(y, dtype=np.float64)
         b = x.shape[0]
         yhat, (win, z, arg, flat, h_pre, h) = self._forward(x)
@@ -195,7 +188,7 @@ class NumpyCNN1D:
             history.append(float(np.mean(losses)))
         return history
 
-    # -- persistence (the registry stores this file) ----------------------
+    # -- persistence (numpy_cnn_factory loads this file) -----------------
     def save(self, path: str) -> None:
         np.savez(
             path if path.endswith(".npz") else path + ".npz",
@@ -219,45 +212,3 @@ class NumpyCNN1D:
                 getattr(model, p)[...] = d[p]
         return model
 
-
-def fit_numpy_cnn(
-    train,
-    val,
-    model_conf: dict | None = None,
-    x_days: int = 365,
-    y_days: int = 92,
-    epochs: int = 15,
-    batch_size: int = 200,
-    seed: int = 0,
-) -> tuple[NumpyCNN1D, dict[str, list[float]]]:
-    """``fit_keras_cnn``'s signature on the NumPy backend: train on
-    DataFrame batches via ``training_batches`` (driver streams one
-    partition at a time — the reference's own single-node topology),
-    evaluate MAE on ``val`` after each epoch. Returns
-    (model, {"loss": [...], "val_loss": [...]})."""
-    from time_series_prediction_spark.model.train import (
-        training_batches,
-    )
-
-    hp = (model_conf or {}).get("hyperParameters", {})
-    model = NumpyCNN1D(
-        x_days, y_days,
-        filters=int(hp.get("filters", 64)),
-        kernel_size=int(hp.get("kernel_size", 2)),
-        pool_size=int(hp.get("pool_size", 2)),
-        dense_units=int(hp.get("dense_units", 50)),
-        seed=seed,
-    )
-    history: dict[str, list[float]] = {"loss": [], "val_loss": []}
-    for _ in range(int(epochs)):
-        history["loss"].extend(
-            model.fit(lambda: training_batches(train, batch_size), 1)
-        )
-        v_abs = 0.0
-        v_n = 0
-        for bx, by in training_batches(val, batch_size):
-            pred = model.predict(bx)
-            v_abs += float(np.abs(pred - by).sum())
-            v_n += by.size
-        history["val_loss"].append(v_abs / max(v_n, 1))
-    return model, history

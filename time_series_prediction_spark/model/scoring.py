@@ -8,11 +8,14 @@ via ``model.predict(v.reshape(-1, 365, 1))``). Engine improvements:
   then streams every Arrow batch of the partition through it — at the
   reference's 2.5M-series scale, per-batch model loading is the
   dominant cost in their design.
-* model factory is pluggable: tests and this TF-less image use
-  deterministic stub models (numpy); ``keras_cnn_factory`` wires a
-  real Keras 1-D CNN when tensorflow is importable (same topology as
-  reference ``notebooks/utils.py:435-460``: Conv1D(64,k=2) → MaxPool(2)
-  → Flatten → Dense(50) → Dense(92), MAE/Adam).
+* three model factories share one ``ModelFn`` contract:
+  ``numpy_cnn_factory`` loads the reference-topology 1-D CNN
+  (``model/numpy_cnn.py``) from its ``.npz`` weights;
+  ``last_value_model_factory`` and ``zero_model_factory`` are
+  deterministic baselines.
+* widths are checked: a CNN whose (x_days, y_days) differ from the
+  scorer's (x_days, horizon), or a model that returns anything but
+  ``(len(x), horizon)``, fails with a ``ValueError`` naming both.
 """
 
 from __future__ import annotations
@@ -51,40 +54,13 @@ def last_value_model_factory(horizon: int = 92) -> ModelFactory:
     return make
 
 
-def keras_cnn_factory(
-    weights_path: str, x_days: int = 365, horizon: int = 92
-) -> ModelFactory:  # pragma: no cover - TF not in this image
-    """Load the reference-topology 1-D CNN from saved weights.
-    Importable only where tensorflow exists; raises cleanly otherwise."""
-
-    def make() -> ModelFn:
-        try:
-            import tensorflow as tf  # noqa: PLC0415
-        except ImportError as exc:
-            raise NotImplementedError(
-                "keras scoring requires tensorflow, which is not installed "
-                "in this environment; use a stub model factory"
-            ) from exc
-        model = tf.keras.models.load_model(weights_path)
-
-        def predict(x: np.ndarray) -> np.ndarray:
-            return model.predict(
-                x.reshape(-1, x_days, 1), verbose=0
-            ).reshape(-1, horizon)
-
-        return predict
-
-    return make
-
-
 def numpy_cnn_factory(
     weights_path: str, x_days: int = 365, horizon: int = 92
 ) -> ModelFactory:
-    """Load the reference-topology 1-D CNN trained by the pure-NumPy
-    backend (``model/numpy_cnn.py`` — r13 VERDICT Next #3) from its
-    ``.npz`` weights. Same ModelFn contract as ``keras_cnn_factory``;
-    the model loads once per Python worker through the iterator
-    pandas_udf, exactly like the keras path."""
+    """Load the reference-topology 1-D CNN (``model/numpy_cnn.py``)
+    from its ``.npz`` weights; the model loads once per Python worker
+    through the iterator pandas_udf. Raises ``ValueError`` when the
+    saved model's (x_days, y_days) differ from (x_days, horizon)."""
 
     def make() -> ModelFn:
         from time_series_prediction_spark.model.numpy_cnn import (
@@ -92,28 +68,15 @@ def numpy_cnn_factory(
         )
 
         model = NumpyCNN1D.load(weights_path)
-
-        def predict(x: np.ndarray) -> np.ndarray:
-            return model.predict(
-                x.reshape(-1, x_days)
-            ).reshape(-1, horizon)
-
-        return predict
+        if (model.x_days, model.y_days) != (x_days, horizon):
+            raise ValueError(
+                f"{weights_path} holds a model with (x_days, y_days) = "
+                f"({model.x_days}, {model.y_days}); the scorer expects "
+                f"(x_days, horizon) = ({x_days}, {horizon})"
+            )
+        return model.predict
 
     return make
-
-
-def cnn_factory(
-    weights_path: str, x_days: int = 365, horizon: int = 92
-) -> ModelFactory:
-    """Backend dispatch for the reference CNN: keras when tensorflow
-    imports (preferred — ``.keras``/SavedModel weights), else the
-    NumPy trainer's ``.npz`` weights. The extension decides which
-    artifact the path names; tensorflow's absence only blocks the
-    keras artifact."""
-    if weights_path.endswith(".npz"):
-        return numpy_cnn_factory(weights_path, x_days, horizon)
-    return keras_cnn_factory(weights_path, x_days, horizon)
 
 
 def scoring_udf(factory: ModelFactory, horizon: int = 92) -> Column:
@@ -131,6 +94,11 @@ def scoring_udf(factory: ModelFactory, horizon: int = 92) -> Column:
                 yield pd.Series([], dtype=object)
                 continue
             y = model(x)
+            if y.shape != (len(x), horizon):
+                raise ValueError(
+                    f"model returned shape {y.shape} for {len(x)} series; "
+                    f"the scorer expects ({len(x)}, {horizon})"
+                )
             yield pd.Series(list(y.astype(np.float32)))
 
     return score

@@ -1,40 +1,20 @@
-"""Training-feed scaffolding (reference T.3, TF-optional).
+"""Training feed (reference T.3).
 
 The reference feeds Keras through Petastorm: DataFrame → materialized
 parquet cache → ``make_tf_dataset`` (reference
-``notebooks/training_new_petastorm.py:241-303``). Petastorm is not in
-this image; the engine provides the same contract two ways:
-
-* ``training_batches`` — driver-side iterator of (X, y) numpy batches
-  via ``toLocalIterator`` (bounded memory: one partition at a time).
-  This is what a single-node trainer (the reference's setup: TF on the
-  driver) actually needs.
-* ``export_training_parquet`` — the Petastorm-style materialization:
-  (X, y) written as parquet for any external data-loader (Petastorm's
-  SparkDatasetConverter does exactly this under the hood).
-* ``partition_trainer_feed`` — the 100 TB shape: each PARTITION streams
-  its (X, y) rows as numpy batches into a trainer callback inside the
-  executor (``mapInPandas``), so training data never crosses the
-  driver; the driver sees only the tiny per-partition results
-  (parameter-averaging / sufficient-statistics topology).
-
-``fit_keras_cnn`` wires the reference's 1-D CNN when tensorflow is
-importable; otherwise raises NotImplementedError with the contract.
+``notebooks/training_new_petastorm.py:241-303``). The engine's feed is
+``training_batches``: a driver-side iterator of (X, y) numpy batches
+via ``toLocalIterator`` (bounded memory: one partition at a time). That
+is what the reference's single-node trainer (one model on the driver)
+needs; ``NumpyCNN1D.fit`` consumes it directly.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-
-
-def export_training_parquet(train: DataFrame, path: str) -> None:
-    """Materialize (X, y) batches for external data loaders
-    (≈ petastorm SparkDatasetConverter's parquet cache)."""
-    train.select("X", "y").write.mode("overwrite").parquet(path)
 
 
 def training_batches(
@@ -52,132 +32,3 @@ def training_batches(
             buf_x, buf_y = [], []
     if buf_x:
         yield np.stack(buf_x), np.stack(buf_y)
-
-
-def partition_trainer_feed(
-    train: DataFrame,
-    trainer_fn: Callable[
-        [Iterator[tuple[np.ndarray, np.ndarray]]], dict[str, float]
-    ],
-    batch_size: int = 200,
-    x_col: str = "X",
-    y_col: str = "y",
-) -> DataFrame:
-    """Distributed trainer feed — no driver funnel.
-
-    ``trainer_fn`` consumes an iterator of (X, y) float32 numpy batches
-    and returns a small dict of float results (losses, partial weights
-    flattened to scalars, sufficient statistics). It runs INSIDE each
-    executor via iterator ``mapInPandas``: memory stays bounded by the
-    Arrow batch, and the only thing shipped back is one
-    (n_rows, result map) row per non-empty partition. The caller
-    combines partition results (parameter averaging, stat merging) —
-    the standard data-parallel topology that replaces
-    ``training_batches``'s driver-side ``toLocalIterator`` at scale.
-
-    Repartition the input first to set the worker count:
-    ``train.repartition(n_workers)``.
-    """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        n_rows = 0
-
-        def np_batches() -> Iterator[tuple[np.ndarray, np.ndarray]]:
-            nonlocal n_rows
-            for pdf in batches:
-                for start in range(0, len(pdf), batch_size):
-                    chunk = pdf.iloc[start : start + batch_size]
-                    if len(chunk) == 0:
-                        continue
-                    n_rows += len(chunk)
-                    yield (
-                        np.stack(
-                            [np.asarray(v, dtype=np.float32) for v in chunk[x_col]]
-                        ),
-                        np.stack(
-                            [np.asarray(v, dtype=np.float32) for v in chunk[y_col]]
-                        ),
-                    )
-
-        feed = np_batches()
-        result = trainer_fn(feed)
-        # trainer_fn may return early (early stopping, sampling). Drain
-        # the rest so n_rows counts the whole partition and the result
-        # row is emitted whenever the partition held data — otherwise an
-        # early-stopping trainer's output would be silently dropped.
-        for _ in feed:
-            pass
-        if n_rows > 0:
-            yield pd.DataFrame(
-                {
-                    "n_rows": pd.Series([n_rows], dtype="int64"),
-                    "result": [
-                        {str(k): float(v) for k, v in (result or {}).items()}
-                    ],
-                }
-            )
-
-    return train.select(x_col, y_col).mapInPandas(
-        run, schema="n_rows bigint, result map<string,double>"
-    )
-
-
-def fit_keras_cnn(
-    train: DataFrame,
-    val: DataFrame,
-    model_conf: dict,
-    x_days: int = 365,
-    y_days: int = 92,
-    epochs: int = 15,
-    batch_size: int = 200,
-):  # pragma: no cover - TF not in this image
-    """Train the reference-topology CNN (``notebooks/utils.py:435-460``):
-    Conv1D(filters, kernel) → MaxPool → Flatten → Dense → Dense(y_days),
-    compiled with the configured loss/Adam."""
-    try:
-        import tensorflow as tf  # noqa: PLC0415
-    except ImportError as exc:
-        raise NotImplementedError(
-            "fit_keras_cnn requires tensorflow (not in this environment); "
-            "use training_batches() to feed any external trainer"
-        ) from exc
-
-    hp = model_conf["hyperParameters"]
-    inputs = tf.keras.layers.Input(shape=(x_days, 1), name="input")
-    x = tf.keras.layers.Conv1D(
-        filters=int(hp["filters"]),
-        kernel_size=int(hp["kernel_size"]),
-        activation=hp["activation"],
-    )(inputs)
-    x = tf.keras.layers.MaxPooling1D(pool_size=int(hp["pool_size"]))(x)
-    x = tf.keras.layers.Flatten()(x)
-    x = tf.keras.layers.Dense(int(hp["dense_units"]), activation=hp["activation"])(x)
-    outputs = tf.keras.layers.Dense(y_days, name="output")(x)
-    model = tf.keras.models.Model(inputs=inputs, outputs=outputs)
-    model.compile(optimizer=tf.keras.optimizers.Adam(), loss=hp["loss"])
-
-    def gen(df: DataFrame):
-        def g():
-            for bx, by in training_batches(df, batch_size):
-                yield bx.reshape(-1, x_days, 1), by
-
-        return g
-
-    model.fit(
-        tf.data.Dataset.from_generator(
-            gen(train),
-            output_signature=(
-                tf.TensorSpec(shape=(None, x_days, 1), dtype=tf.float32),
-                tf.TensorSpec(shape=(None, y_days), dtype=tf.float32),
-            ),
-        ),
-        validation_data=tf.data.Dataset.from_generator(
-            gen(val),
-            output_signature=(
-                tf.TensorSpec(shape=(None, x_days, 1), dtype=tf.float32),
-                tf.TensorSpec(shape=(None, y_days), dtype=tf.float32),
-            ),
-        ),
-        epochs=epochs,
-    )
-    return model

@@ -1,7 +1,8 @@
 """IO layer: scans and sinks.
 
 Covers the reference's source/sink inventory (SURVEY §2.1):
-  S1 integer-range source         -> spark.range
+  S1 integer-range source         -> spark.range, called directly by
+                                     ``generate.generate_series_frame``
   S2 date-sequence source         -> F.sequence column expression (no
                                      1-row-DF crossJoin; reference
                                      ``src/demo/create_time_series.py:193-195``)
@@ -140,16 +141,6 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if key is not None:
         _READ_TABLE_MEMO[key] = (spark, df)
     return df
-
-
-def integer_range(spark: SparkSession, n: int, col: str = "primaryaccountholder") -> DataFrame:
-    """S1: id-range source (reference ``src/demo/create_time_series.py:170``).
-
-    ``spark.range`` is already parallel: the range splits across
-    executors with no data movement, so series generation fans out
-    linearly with cluster size.
-    """
-    return spark.range(n).toDF(col)
 
 
 def date_sequence_col(start: dt.date | str, end: dt.date | str) -> F.Column:
