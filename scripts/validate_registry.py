@@ -5,11 +5,15 @@ declared), mimicking the external harness: row count + column names +
 order-insensitive value comparison. Prints one line per query and a
 final summary; exits non-zero on any failure.
 
-Usage: python scripts/validate_registry.py [sf_dir] [--only name1,name2]
+Usage: python scripts/validate_registry.py SF_DIR [--only name1,name2]
+
+An unknown flag, a missing SF_DIR or an unknown query name exits with
+status 2 before any Spark session starts.
 """
 
 from __future__ import annotations
 
+import argparse
 import sys
 import time
 import traceback
@@ -19,17 +23,40 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tests"))
 
 
+def parse_args(argv: list[str], names: list[str]) -> argparse.Namespace:
+    """``sf_dir`` and the sorted list of queries to run (``run``)."""
+    parser = argparse.ArgumentParser(
+        description="Run every registry query and check it against its "
+        "DuckDB oracle."
+    )
+    parser.add_argument("sf_dir", help="fixture directory, e.g. .../sf0.01")
+    parser.add_argument(
+        "--only", metavar="NAMES", help="comma-separated query names"
+    )
+    args = parser.parse_args(argv)
+    if not Path(args.sf_dir).is_dir():
+        parser.error(f"not a directory: {args.sf_dir}")
+    args.run = sorted(names)
+    if args.only is not None:
+        only = {n for n in args.only.split(",") if n}
+        if not only:
+            parser.error("--only names no query")
+        unknown = sorted(only - set(names))
+        if unknown:
+            parser.error(f"unknown query name(s): {', '.join(unknown)}")
+        args.run = sorted(only)
+    return args
+
+
 def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 and not sys.argv[1].startswith("--") \
-        else "/root/testdata/sf0.01"
-    only = None
-    for a in sys.argv[1:]:
-        if a.startswith("--only"):
-            only = set(a.split("=", 1)[1].split(","))
+    import __spark_entry__ as entrymod
+
+    qs, oracles = entrymod.queries(), entrymod.oracle_sql()
+    args = parse_args(sys.argv[1:], list(qs))
+    sf_dir = args.sf_dir
 
     from oracle_harness import assert_matches_oracle, duck_connection
 
-    import __spark_entry__ as entrymod
     from time_series_prediction_spark.session import get_spark
 
     spark = get_spark(app_name="registry-validate", master="local[16]",
@@ -37,11 +64,8 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
     con = duck_connection(sf_dir)
 
-    qs, oracles = entrymod.queries(), entrymod.oracle_sql()
     failed: list[str] = []
-    for name in sorted(qs):
-        if only and name not in only:
-            continue
+    for name in args.run:
         t0 = time.perf_counter()
         try:
             df = qs[name](spark, sf_dir)
@@ -59,7 +83,7 @@ def main() -> int:
         print(f"{name:45s} {status:15s} {time.perf_counter() - t0:6.2f}s",
               flush=True)
 
-    print(f"\n{len(qs) - len(failed)}/{len(qs)} ok at {sf_dir}")
+    print(f"\n{len(args.run) - len(failed)}/{len(args.run)} ok at {sf_dir}")
     if failed:
         print("FAILED:", ", ".join(failed))
     spark.stop()

@@ -8,6 +8,7 @@ notebooks/training_new_petastorm.py:282-303."""
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
 from time_series_prediction_spark.model.numpy_cnn import NumpyCNN1D
 
@@ -121,6 +122,64 @@ def test_save_load_roundtrip(tmp_path):
     m.save(p)
     m2 = NumpyCNN1D.load(p)
     assert np.array_equal(m2.predict(x), m.predict(x))
+
+
+@pytest.mark.parametrize(
+    "shape",
+    [
+        (365, 92, 64, 2, 2, 50),  # the reference topology
+        (20, 4, 8, 2, 2, 10),
+        (31, 5, 7, 3, 3, 9),  # pool_len*pool_size < conv_len
+        (40, 6, 5, 4, 2, 6),  # pool_len*pool_size < conv_len
+        (17, 3, 4, 2, 4, 5),  # pool_len*pool_size < conv_len
+    ],
+    ids=lambda s: "x{}-y{}-F{}-k{}-p{}-D{}".format(*s),
+)
+def test_predict_matches_training_forward(shape):
+    """``predict``'s blockwise inference pass returns exactly what the
+    training forward pass returns, across block edges (63/64/65 rows)
+    and batches of several blocks, for trained (non-zero bias)
+    weights. Each 64-row block is also compared in float64 with the
+    training pass on that same block, because the float32 cast alone
+    would hide a reordered sum. (The float64 comparison is per block
+    because OpenBLAS's dgemm may round a row differently when the
+    row count changes: ``_forward`` itself is not row-count
+    invariant in float64.)"""
+    x_days, y_days = shape[:2]
+    m = NumpyCNN1D(*shape, seed=4)
+    rng = np.random.default_rng(9)
+    for _ in range(3):
+        m.train_batch(
+            rng.normal(size=(16, x_days)), rng.normal(size=(16, y_days))
+        )
+    for b in (1, 63, 64, 65, 500):
+        x = rng.normal(size=(b, x_days)).astype(np.float32)
+        for i in range(0, b, 64):
+            block = x[i:i + 64].astype(np.float64)
+            assert np.array_equal(m._infer(block), m._forward(block)[0])
+        want = m._forward(x.astype(np.float64))[0].astype(np.float32)
+        got = m.predict(x)
+        assert got.dtype == np.float32 and got.shape == (b, y_days)
+        assert np.array_equal(got, want), (shape, b)
+
+
+def test_predict_memory_is_bounded():
+    """Scoring memory is bounded per Arrow batch: the training forward
+    pass holds ~640 KB of temporaries per series (1.25 GB for 2,000
+    rows); the blockwise pass must stay under 64 MiB."""
+    import tracemalloc
+
+    m = NumpyCNN1D(365, 92, seed=0)
+    x = np.random.default_rng(0).normal(size=(2000, 365)).astype(
+        np.float32
+    )
+    tracemalloc.start()
+    try:
+        m.predict(x)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < 64 * 2**20, peak
 
 
 def test_full_lifecycle_train_score_r2(spark, tmp_path):

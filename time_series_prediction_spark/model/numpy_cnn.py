@@ -14,6 +14,17 @@ one model backend: it trains on ``train.training_batches`` and scores
 through ``scoring.numpy_cnn_factory``'s iterator pandas_udf, so the
 full train → score → R² lifecycle runs without TensorFlow.
 
+Two forward passes, one set of doubles. ``train_batch`` runs
+``_forward``, which keeps the sliding windows, conv output and pool
+argmax for backprop. ``predict`` (what scoring calls) runs ``_infer``
+in blocks of 64 rows: the same double operations in the same order,
+with no cache, so each block equals ``_forward`` on that block bit for
+bit, and its temporaries stay about 6 MB each whatever the Arrow batch
+size (the training pass holds about 640 KB per series). Across block
+sizes only the dense layers' BLAS calls can differ: OpenBLAS may round
+a row differently when the row count changes, below float32's
+resolution on every batch tested.
+
 Scale note: the reference trains ONE global model on the driver
 (single-node Keras); this matches that shape — training data streams
 through ``training_batches`` (bounded memory), weights are a few MB.
@@ -29,6 +40,8 @@ _ADAM_LR = 1e-3
 _ADAM_B1 = 0.9
 _ADAM_B2 = 0.999
 _ADAM_EPS = 1e-7
+# predict's rows per block: (64, 182, 64) float64 is ~6 MB per temporary
+_BLOCK = 64
 
 
 class NumpyCNN1D:
@@ -108,11 +121,40 @@ class NumpyCNN1D:
         yhat = h @ self.W2 + self.b2
         return yhat, (win, z, arg, flat, h_pre, h)
 
+    def _infer(self, x: np.ndarray) -> np.ndarray:
+        """``_forward(x)[0]`` without the backprop cache, for one block.
+
+        The conv of each pool tap j is the left fold over kernel taps
+        that ``win @ Wc`` runs (numpy's non-BLAS matmul loop, which
+        strided windows take), then ``+ bc``; max-pool of ReLU is ReLU
+        of the max over pool taps. Same doubles, same order (the
+        matmul starts its sum at 0.0, which can only flip a zero's
+        sign)."""
+        p, stop = self.pool_size, self.pool_size * self.pool_len
+        pooled = None
+        for j in range(p):
+            z = x[:, j:j + stop:p, None] * self.Wc[0]
+            for t in range(1, self.kernel_size):
+                z += x[:, j + t:j + t + stop:p, None] * self.Wc[t]
+            z += self.bc
+            if pooled is None:
+                pooled = z
+            else:
+                np.maximum(pooled, z, out=pooled)
+        np.maximum(pooled, 0.0, out=pooled)
+        flat = pooled.reshape(len(x), -1)
+        h = np.maximum(flat @ self.W1 + self.b1, 0.0)
+        return h @ self.W2 + self.b2
+
     def predict(self, x: np.ndarray) -> np.ndarray:
-        """(B, x_days) → (B, y_days) float32."""
+        """(B, x_days) → (B, y_days) float32: ``_forward(x)[0]`` cast
+        to float32, computed in blocks of ``_BLOCK`` rows so that
+        temporaries stay a few MB whatever B."""
         x = np.asarray(x, dtype=np.float64)
-        yhat, _ = self._forward(x)
-        return yhat.astype(np.float32)
+        out = np.empty((len(x), self.y_days), dtype=np.float32)
+        for i in range(0, len(x), _BLOCK):
+            out[i:i + _BLOCK] = self._infer(x[i:i + _BLOCK])
+        return out
 
     # -- training --------------------------------------------------------
     def train_batch(self, x: np.ndarray, y: np.ndarray) -> float:

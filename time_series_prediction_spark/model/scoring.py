@@ -4,10 +4,10 @@ Mirrors the reference's serving stage (``notebooks/scoring.py:317-325``:
 a SCALAR pandas_udf that reloads the Keras model for EVERY Arrow batch
 via ``model.predict(v.reshape(-1, 365, 1))``). Engine improvements:
 
-* ITERATOR-form pandas_udf: the model loads ONCE per Python worker,
-  then streams every Arrow batch of the partition through it — at the
-  reference's 2.5M-series scale, per-batch model loading is the
-  dominant cost in their design.
+* ITERATOR-form pandas_udf: the model loads ONCE per task, i.e. per
+  partition (a load takes about 17 ms), then streams every Arrow batch
+  of the partition through it — at the reference's 2.5M-series scale,
+  per-batch model loading is the dominant cost in their design.
 * three model factories share one ``ModelFn`` contract:
   ``numpy_cnn_factory`` loads the reference-topology 1-D CNN
   (``model/numpy_cnn.py``) from its ``.npz`` weights;
@@ -58,8 +58,8 @@ def numpy_cnn_factory(
     weights_path: str, x_days: int = 365, horizon: int = 92
 ) -> ModelFactory:
     """Load the reference-topology 1-D CNN (``model/numpy_cnn.py``)
-    from its ``.npz`` weights; the model loads once per Python worker
-    through the iterator pandas_udf. Raises ``ValueError`` when the
+    from its ``.npz`` weights; the model loads once per task through
+    the iterator pandas_udf. Raises ``ValueError`` when the
     saved model's (x_days, y_days) differ from (x_days, horizon)."""
 
     def make() -> ModelFn:
@@ -80,12 +80,12 @@ def numpy_cnn_factory(
 
 
 def scoring_udf(factory: ModelFactory, horizon: int = 92) -> Column:
-    """Iterator pandas_udf: model built once per worker, Arrow batches
+    """Iterator pandas_udf: model built once per task, Arrow batches
     streamed through (reference reloads per batch — scoring.py:317)."""
 
     @pandas_udf("array<float>")
     def score(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        model = factory()  # once per python worker
+        model = factory()  # once per task (one partition)
         for x_series in batches:
             x = np.asarray(
                 [np.asarray(v, dtype=np.float32) for v in x_series]

@@ -4,10 +4,12 @@ The reference implements these as row-at-a-time Python UDFs over
 ``array<float>`` columns (reference ``notebooks/utils.py:189-234`` wires
 them; bodies at ``:239-405,1048-1067``). Here each operator is a native
 Column expression — array lambdas (`transform`/`aggregate`/`slice`/
-`zip_with`) that run inside whole-stage codegen with zero Python
-serialization and zero shuffle: every operator is embarrassingly
-parallel per row, so a 100 TB table of series scales linearly with
-executors.
+`zip_with`) that run in the JVM with zero Python serialization and
+zero shuffle: every operator is embarrassingly parallel per row, so a
+100 TB table of series scales linearly with executors. The
+higher-order functions are ``CodegenFallback`` in Spark 4.1.2: each
+lambda runs interpreted, once per element, with no
+common-subexpression elimination.
 
 Parity notes (SURVEY §7.4):
 * ``np.around`` is round-half-even → ``F.bround``, never ``F.round``.
@@ -31,7 +33,10 @@ Parity notes (SURVEY §7.4):
 Internal helpers build SQL fragments (strings); public operators wrap
 them in ``F.expr``. ``let``-style bindings are emulated with
 ``transform(array(<value>), _name -> <body>)[0]`` so expensive
-sub-arrays are computed once, not per element.
+sub-arrays are computed once, not per element. A column that a
+per-element lambda reads is bound the same way (``scaling``):
+CollapseProject inlines a column's producer wherever it is referenced
+only once, and inside the lambda that means once per element.
 """
 
 from __future__ import annotations
@@ -187,17 +192,26 @@ def series_std(x: str) -> Column:
 def scaling(x: str, mean: str = "mean", std: str = "std") -> Column:
     """W4: elementwise ``round((x - mean)/std, 3)``
     (reference ``notebooks/utils.py:294-303``). std=0 ⇒ ±Infinity/NaN,
-    matching numpy's silent division (mitigated upstream by keep_ts)."""
+    matching numpy's silent division (mitigated upstream by keep_ts).
+    ``mean`` and ``std`` are bound once, outside the per-element lambda
+    (see the module docstring)."""
     return F.expr(
-        f"transform({x}, v -> CAST(bround((CAST(v AS DOUBLE) - {mean}) / {std}, 3) AS FLOAT))"
+        _let(mean, "_mean", _let(std, "_std", (
+            f"transform({x}, v -> CAST(bround((CAST(v AS DOUBLE) - _mean)"
+            f" / _std, 3) AS FLOAT))"
+        )))
     )
 
 
 def rescaling(x: str, mean: str = "mean", std: str = "std") -> Column:
     """W5: elementwise ``round(x*std + mean, 3)``
-    (reference ``notebooks/utils.py:306-316``)."""
+    (reference ``notebooks/utils.py:306-316``). ``mean`` and ``std``
+    are bound once, as in ``scaling``."""
     return F.expr(
-        f"transform({x}, v -> CAST(bround(CAST(v AS DOUBLE) * {std} + {mean}, 3) AS FLOAT))"
+        _let(mean, "_mean", _let(std, "_std", (
+            f"transform({x}, v -> CAST(bround(CAST(v AS DOUBLE) * _std"
+            f" + _mean, 3) AS FLOAT))"
+        )))
     )
 
 
