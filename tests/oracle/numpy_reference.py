@@ -117,7 +117,6 @@ def ref_extrapolate_trend(
     x,
     window_days: int = 183,
     horizon_days: int = 92,
-    median: bool = True,
     serving: bool = False,
 ) -> np.ndarray:
     """notebooks/utils.py:347-382, exact day-by-day loop."""
@@ -127,7 +126,7 @@ def ref_extrapolate_trend(
         window = slope[-window_days - horizon_days :]
     else:
         window = slope[-window_days:]
-    agg = np.nanmedian(window) if median else np.nanmean(window)
+    agg = np.nanmedian(window)
 
     out = np.zeros(horizon_days)
     out[0] = agg + (x[-1 - horizon_days] if not serving else x[-1])
@@ -136,13 +135,13 @@ def ref_extrapolate_trend(
     return np.around(out, 3).astype(np.float32)
 
 
-def ref_trajectory(x, window_months: int = 6, median: bool = True) -> np.float32:
+def ref_trajectory(x, window_months: int = 6) -> np.float32:
     """notebooks/utils.py:385-405."""
     x = np.asarray(x, dtype=float)
     slope = np.gradient(x)
     n_days = int(30.5 * window_months)
     window = slope[-n_days:]
-    agg = np.nanmedian(window) if median else np.nanmean(window)
+    agg = np.nanmedian(window)
     return np.float32(np.around(agg * 30.5, 3))
 
 

@@ -8,7 +8,18 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-from time_series_prediction_spark.sources.io import TPCH_TABLES
+TPCH_TABLES = (
+    "region",
+    "nation",
+    "customer",
+    "supplier",
+    "part",
+    "orders",
+    "lineitem",
+    "events",
+    "documents",
+    "embeddings",
+)
 
 
 def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:

@@ -15,9 +15,9 @@ from pyspark.sql import functions as F
 from time_series_prediction_spark.sources.deltalog import (
     DeltaProtocolUnsupported,
     is_delta_table,
+    read_delta,
     read_delta_log,
 )
-from time_series_prediction_spark.sources.io import read_delta
 
 
 def _write_parquet(spark, path, rows, schema):
@@ -211,7 +211,6 @@ def test_write_delta_log_roundtrip_overwrite_append(spark, tmp_path):
     from time_series_prediction_spark.sources.deltalog import (
         write_delta_log,
     )
-    from time_series_prediction_spark.sources.io import write_delta
 
     table = str(tmp_path / "t")
     v0 = write_delta_log(
@@ -234,10 +233,6 @@ def test_write_delta_log_roundtrip_overwrite_append(spark, tmp_path):
     assert sorted(
         r["k"] for r in read_delta(spark, table, version=0).collect()
     ) == list(range(10))
-    # io.write_delta routes through the same sink
-    t2 = str(tmp_path / "t2")
-    write_delta(spark.range(3).select(F.col("id").alias("k")), t2)
-    assert read_delta(spark, t2).count() == 3
 
 
 def test_write_delta_log_partitioned(spark, tmp_path):

@@ -1,7 +1,6 @@
-"""The exact-ANN distance fold: the in-place accumulator rewrite of
-``_dists_to`` / ``_dists_to_all`` must stay BIT-identical to the
-cumsum reference it replaced (same sequential dim-order rounding
-sequence), across the shapes the engine actually uses — the coarse
+"""The exact-ANN distance fold: the in-place accumulator of
+``_dists_to_all`` must stay BIT-identical to the cumsum reference
+(same sequential dim-order rounding sequence), across the shapes the engine actually uses — the coarse
 (n, 64) × 16-cell assignment, the (n, 4) × 32-code subspace encode,
 and degenerate n/C edges."""
 
@@ -9,14 +8,11 @@ from __future__ import annotations
 
 import numpy as np
 
-from time_series_prediction_spark.operators.kmeans_exact import (
-    _dists_to,
-    _dists_to_all,
-)
+from time_series_prediction_spark.operators.kmeans_exact import _dists_to_all
 
 
 def _ref_dists_to(V: np.ndarray, s: np.ndarray, m: int) -> np.ndarray:
-    """The retired cumsum formulation — the fold-order reference."""
+    """The cumsum formulation — the fold-order reference."""
     t = (V * int(m) - s[None, :]).astype(np.float64)
     sq = t * t
     return np.cumsum(sq, axis=1)[:, -1] / float(int(m) * int(m))
@@ -30,17 +26,6 @@ def _mk(rng, n, d, n_cells):
         s = rng.integers(-(1 << 20), 1 << 20, size=d, dtype=np.int64) * m
         cents.append((c, s, m))
     return V, cents
-
-
-def test_dists_to_matches_cumsum_reference_bitwise():
-    rng = np.random.default_rng(11)
-    for n, d in ((4096, 64), (4096, 4), (1, 64), (3, 1)):
-        V, cents = _mk(rng, n, d, 1)
-        _c, s, m = cents[0]
-        got = _dists_to(V, s, m)
-        ref = _ref_dists_to(V, s, m)
-        assert got.shape == ref.shape
-        assert np.array_equal(got, ref)  # bitwise, not allclose
 
 
 def test_dists_to_all_matches_stacked_reference_bitwise():

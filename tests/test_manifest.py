@@ -435,9 +435,7 @@ def test_zordered_append_with_incremental_manifest(spark, tmp_path):
     from time_series_prediction_spark.operators.manifest import (
         update_manifest,
     )
-    from time_series_prediction_spark.operators.zorder import (
-        append_zordered,
-    )
+    from time_series_prediction_spark.operators.zorder import zorder_code
 
     path = str(tmp_path / "ingest")
     grid = spark.range(40_000).select(
@@ -450,7 +448,16 @@ def test_zordered_append_with_incremental_manifest(spark, tmp_path):
     write_zordered(base, path, ["x", "y"], n_files=8)
     man0 = build_stats_manifest(spark, path, ["x", "y"]).cache()
     man0.count()
-    append_zordered(batch, path, ["x", "y"], n_files=8)
+    # the batch lands as its own 8 Morton-sorted files; history stays
+    ranked, code = zorder_code(batch, ["x", "y"])
+    (
+        ranked.withColumn("_zcode", code)
+        .repartitionByRange(8, "_zcode")
+        .sortWithinPartitions("_zcode")
+        .drop("_zcode", "_zr_x", "_zr_y")
+        .write.mode("append")
+        .parquet(path)
+    )
     man1 = update_manifest(spark, man0, path, ["x", "y"]).cache()
     rebuilt = build_stats_manifest(spark, path, ["x", "y"])
     assert sorted(map(tuple, man1.collect())) == sorted(

@@ -106,38 +106,3 @@ def test_real_video_decode_when_cv2_present():
     feats = decode_real(payload, "video")
     assert len(feats) == FEATURE_DIM
     assert all(0.0 <= v <= 1.0 for v in feats)
-
-
-def test_resize_images_schema_and_determinism(spark, sf_dir):
-    from time_series_prediction_spark.operators.multimodal import (
-        attach_binary_payload,
-        resize_images,
-    )
-
-    docs = read_table(spark, sf_dir, "documents").limit(50)
-    resized = resize_images(attach_binary_payload(docs), width=8, height=8)
-    rows = resized.collect()
-    assert len(rows) == 50
-    assert all(r["n_bytes"] == 64 and len(r["payload"]) == 64 for r in rows)
-    assert all(r["width"] == 8 and r["height"] == 8 for r in rows)
-    again = {r["doc_id"]: r["content_md5"] for r in resized.collect()}
-    assert {r["doc_id"]: r["content_md5"] for r in rows} == again
-
-
-def test_sample_frames_fanout(spark, sf_dir):
-    from time_series_prediction_spark.operators.multimodal import (
-        attach_binary_payload,
-        sample_frames,
-    )
-
-    docs = read_table(spark, sf_dir, "documents").limit(20)
-    vids = attach_binary_payload(docs, modality="video")
-    frames = sample_frames(vids, n_frames=4)
-    rows = frames.collect()
-    nonempty = vids.where(F.length("payload") > 0).count()
-    assert len(rows) == nonempty * 4
-    per_doc = {}
-    for r in rows:
-        per_doc.setdefault(r["doc_id"], []).append(r["frame_idx"])
-        assert r["n_bytes"] == len(r["frame_payload"]) > 0
-    assert all(sorted(v) == [0, 1, 2, 3] for v in per_doc.values())

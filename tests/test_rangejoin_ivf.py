@@ -152,317 +152,28 @@ def test_ivf_nprobe_full_equals_exact(spark, sf_dir):
     assert e == f
 
 
-def test_pq_codebooks_deterministic_and_shaped(spark, sf_dir):
-    emb = read_table(spark, sf_dir, "embeddings")
-    b1 = similarity.pq_codebooks(emb, n_sub=8, n_codes=16, n_iters=2)
-    b2 = similarity.pq_codebooks(emb, n_sub=8, n_codes=16, n_iters=2)
-    dim = len(emb.first()["embedding"])
-    assert b1.shape == (8, 16, dim // 8)
-    np.testing.assert_array_equal(b1, b2)
-
-
-def test_pq_encode_reconstruction_improves_with_codes(spark, sf_dir):
-    """More codes per subspace => lower quantization error (the basic
-    rate-distortion property); also pins the encode shape and range."""
-    emb = read_table(spark, sf_dir, "embeddings").limit(200)
-    errs = {}
-    for n_codes in (4, 32):
-        books = similarity.pq_codebooks(emb, n_sub=8, n_codes=n_codes, n_iters=2)
-        enc = emb.select(
-            "vec_id",
-            "embedding",
-            similarity.pq_encode_udf(books)(F.col("embedding")).alias("code"),
-        ).collect()
-        tot = 0.0
-        for r in enc:
-            v = np.asarray(r["embedding"], dtype=np.float64)
-            v = v / (np.linalg.norm(v) or 1.0)
-            code = r["code"]
-            assert len(code) == 8 and all(0 <= c < n_codes for c in code)
-            rec = np.concatenate([books[m][code[m]] for m in range(8)])
-            tot += float(((v - rec) ** 2).sum())
-        errs[n_codes] = tot
-    assert errs[32] < errs[4]
-
-
-def test_pq_recall_vs_exact(spark, sf_dir):
-    """ADC top-5 must recover most of the exact top-5. The fixture
-    embeddings are near-uniform (no cluster structure — the PQ worst
-    case), so the bound reflects measured recall, not a tuned number."""
-    emb = read_table(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < 20)
-    exact = similarity.cosine_topk(emb, queries, k=5)
-    e = {(r["query_id"], r["corpus_id"]) for r in exact.collect()}
-    # pure ADC: code quantization alone (16 subspaces x 32 codes on
-    # 64-dim uniform vectors) recovers a plurality
-    adc = similarity.pq_ann_topk(
-        emb, queries, k=5, n_sub=16, n_codes=32, n_iters=2
-    )
-    a = {(r["query_id"], r["corpus_id"]) for r in adc.collect()}
-    assert len(e & a) / len(e) >= 0.3, "pure-ADC recall collapsed"
-    # the standard refine stage (exact re-rank of a 5x shortlist)
-    # recovers most of the exact set — measured 0.84 at sf0.01
-    refined = similarity.pq_ann_topk(
-        emb, queries, k=5, n_sub=16, n_codes=32, n_iters=2, rerank=5
-    )
-    r = {(r["query_id"], r["corpus_id"]) for r in refined.collect()}
-    recall = len(e & r) / len(e)
-    assert recall >= 0.7, f"PQ+rerank recall@5 {recall:.2f}"
-
-
 def test_sampled_training_deterministic_and_shared(spark, sf_dir):
     """Driver-side sampled training (the constant-cost path at scale):
-    deterministic per seed, init identical to the distributed path's
-    (same hash-ordered head), and one TakeOrdered job feeds BOTH
-    trainers via the shared sample cache."""
+    deterministic per seed, and one TakeOrdered job feeds every
+    training run over the same corpus via the shared sample cache."""
     emb = read_table(spark, sf_dir, "embeddings")
     c1 = similarity.ivf_centroids(emb, n_cells=8, n_iters=2, train_sample=256)
     c2 = similarity.ivf_centroids(emb, n_cells=8, n_iters=2, train_sample=256)
     np.testing.assert_array_equal(c1, c2)
-    b1 = similarity.pq_codebooks(emb, n_sub=8, n_codes=16, n_iters=2,
-                                 train_sample=256)
-    b2 = similarity.pq_codebooks(emb, n_sub=8, n_codes=16, n_iters=2,
-                                 train_sample=256)
-    np.testing.assert_array_equal(b1, b2)
-    # shared sample: one fetch, zero Spark jobs for the second trainer
+    # shared sample: one fetch, zero Spark jobs for a second training
+    # run whose centroids are not cached (different n_iters)
     key = f"sample-share-{sf_dir}"
     similarity.ivf_centroids(
         emb, n_cells=8, n_iters=1, train_sample=256, cache_key=key
     )
     sc = spark.sparkContext
     before = sc._jsc.sc().dagScheduler().nextJobId()
-    similarity.pq_codebooks(
-        emb, n_sub=8, n_codes=16, n_iters=1, train_sample=256, cache_key=key
+    c3 = similarity.ivf_centroids(
+        emb, n_cells=8, n_iters=2, train_sample=256, cache_key=key
     )
     after = sc._jsc.sc().dagScheduler().nextJobId()
-    assert after == before, "second trainer re-fetched the shared sample"
-
-
-def test_ivfpq_candidates_bounded_below_corpus(spark, sf_dir):
-    """The IVF-PQ composition's point: with nprobe < n_cells the ADC
-    stage scores strictly fewer pairs than queries x corpus (the flat
-    full-scan property is gone), and exactly the pairs whose corpus
-    cell is among the query's probed cells."""
-    emb = read_table(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < 10)
-    books = similarity.pq_codebooks(emb, n_sub=8, n_codes=16, n_iters=1)
-    cents = similarity.ivf_centroids(emb, n_cells=16, n_iters=2)
-    n_corpus, n_q = emb.count(), queries.count()
-    cand = similarity.pq_adc_candidates(
-        emb, queries, books, centroids=cents, nprobe=8
-    )
-    n_cand = cand.count()
-    assert n_cand < n_q * (n_corpus - 1), "IVF pruning scanned every pair"
-    # exact expectation: per query, the corpus rows in its 8 probed cells
-    cell_of = {
-        r["vec_id"]: r["cell"]
-        for r in emb.select(
-            "vec_id",
-            similarity.nearest_cells_udf(cents, nprobe=1)(F.col("embedding"))[
-                0
-            ].alias("cell"),
-        ).collect()
-    }
-    probed = {
-        r["vec_id"]: set(r["cells"])
-        for r in queries.select(
-            "vec_id",
-            similarity.nearest_cells_udf(cents, nprobe=8)(
-                F.col("embedding")
-            ).alias("cells"),
-        ).collect()
-    }
-    want = sum(
-        1
-        for qid, cells in probed.items()
-        for cid, cell in cell_of.items()
-        if cell in cells and cid != qid
-    )
-    assert n_cand == want
-
-
-def test_ivfpq_nprobe_full_equals_flat_pq(spark, sf_dir):
-    """Probing every cell makes IVF-PQ exhaustive — identical to the
-    flat ADC scan (the IVF correctness limit, on the PQ path)."""
-    emb = read_table(spark, sf_dir, "embeddings").limit(150)
-    queries = emb.where(F.col("vec_id") < 5)
-    books = similarity.pq_codebooks(emb, n_sub=8, n_codes=8, n_iters=1)
-    flat = similarity.pq_ann_topk(emb, queries, k=3, books=books)
-    full = similarity.pq_ann_topk(
-        emb, queries, k=3, books=books, n_cells=4, nprobe=4, ivf_iters=1
-    )
-    f = sorted(map(tuple, flat.select("query_id", "corpus_id", "rank").collect()))
-    g = sorted(map(tuple, full.select("query_id", "corpus_id", "rank").collect()))
-    assert f == g
-
-
-def test_ivfpq_plan_has_no_nested_loop(spark, sf_dir):
-    """Flat ADC is a deliberate broadcast nested loop; the IVF-PQ path
-    must be an equi-join on cell id (hash join) instead."""
-    emb = read_table(spark, sf_dir, "embeddings").limit(100)
-    queries = emb.where(F.col("vec_id") < 3)
-    books = similarity.pq_codebooks(emb, n_sub=8, n_codes=8, n_iters=1)
-    cents = similarity.ivf_centroids(emb, n_cells=4, n_iters=1)
-    plan = (
-        similarity.pq_adc_candidates(
-            emb, queries, books, centroids=cents, nprobe=2
-        )
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "CartesianProduct" not in plan
-
-
-def test_ivfpq_recall_vs_exact(spark, sf_dir):
-    """The bench configuration (16 cells, nprobe 10, 16x32 codes,
-    12x refine, sampled training) against the exact top-5. Both
-    approximations compound on the near-uniform fixture (worst case
-    for partition ANN), so the bound is the measured floor across
-    fixture scales, not flat-PQ's. Measured: 0.72 at sf0.1."""
-    emb = read_table(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < 20)
-    exact = similarity.cosine_topk(emb, queries, k=5)
-    e = {(r["query_id"], r["corpus_id"]) for r in exact.collect()}
-    got = similarity.pq_ann_topk(
-        emb, queries, k=5, n_sub=16, n_codes=32, n_iters=2,
-        rerank=12, n_cells=16, nprobe=10, ivf_iters=2, train_sample=4096,
-    )
-    g = {(r["query_id"], r["corpus_id"]) for r in got.collect()}
-    recall = len(e & g) / len(e)
-    assert recall >= 0.55, f"IVF-PQ recall@5 {recall:.2f}"
-
-
-def test_residual_adc_score_matches_numpy(spark, sf_dir):
-    """Residual IVF-PQ scoring (q·cent_c + ADC over residual codes)
-    must equal the numpy recomputation pair-for-pair."""
-    emb = read_table(spark, sf_dir, "embeddings").limit(80)
-    queries = emb.where(F.col("vec_id") < 3)
-    cents = similarity.ivf_centroids(emb, n_cells=4, n_iters=1)
-    books = similarity.pq_codebooks(
-        emb, n_sub=8, n_codes=8, n_iters=1, centroids=cents
-    )
-    got = similarity.pq_adc_candidates(
-        emb, queries, books, centroids=cents, nprobe=4, residual=True
-    ).collect()
-    assert got
-    corpus = {
-        r["vec_id"]: np.asarray(r["embedding"], dtype=np.float64)
-        for r in emb.collect()
-    }
-    unit = similarity._unit_centroid_mat(cents)
-    sub_dim = books.shape[2]
-    for r in got:
-        qv, cv = corpus[r["query_id"]], corpus[r["corpus_id"]]
-        qn = qv / (np.linalg.norm(qv) or 1.0)
-        cn = cv / (np.linalg.norm(cv) or 1.0)
-        cos = cn @ unit
-        cell = int(np.lexsort((np.arange(len(cos)), -cos))[0])
-        resid = cn - unit.T[cell]
-        want = float(qn @ unit.T[cell])
-        for m in range(books.shape[0]):
-            sub = resid[m * sub_dim : (m + 1) * sub_dim]
-            code = int(np.argmin(((sub[None, :] - books[m]) ** 2).sum(axis=1)))
-            want += float(books[m][code] @ qn[m * sub_dim : (m + 1) * sub_dim])
-        assert abs(r["adc_score"] - want) < 1e-9
-
-
-def test_residual_pq_beats_raw_on_clustered_data(spark):
-    """The point of residual encoding (Jégou et al. IVF-PQ): on data
-    with coarse-quantizer structure, residual codebooks quantize finer
-    at identical code size. Fully seeded → deterministic: residual
-    ADC-only recall must beat raw ADC-only recall on a clustered
-    synthetic corpus. (The embeddings FIXTURE is near-iid-random — the
-    degenerate case where centroids carry no signal — so the registry
-    query keeps raw encoding there; measured 0.80 raw vs 0.76 residual
-    at sf0.1 with rerank.)"""
-    rng = np.random.RandomState(7)
-    dim, n_clusters, per = 64, 12, 150
-    centers = rng.randn(n_clusters, dim)
-    centers /= np.linalg.norm(centers, axis=1)[:, None]
-    vecs = np.repeat(centers, per, axis=0) + 0.15 * rng.randn(
-        n_clusters * per, dim
-    )
-    rows = [(int(i), [float(x) for x in v]) for i, v in enumerate(vecs)]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    queries = emb.where(F.col("vec_id") % 150 < 2)
-    exact = similarity.cosine_topk(emb, queries, k=5)
-    e = {(r["query_id"], r["corpus_id"]) for r in exact.collect()}
-    cents = similarity.ivf_centroids(emb, n_cells=12, n_iters=3)
-    recalls = {}
-    for res in (False, True):
-        books = similarity.pq_codebooks(
-            emb, n_sub=8, n_codes=16, n_iters=3,
-            centroids=cents if res else None,
-        )
-        got = similarity.pq_ann_topk(
-            emb, queries, k=5, books=books, centroids=cents,
-            nprobe=12, residual=res,
-        )
-        g = {(r["query_id"], r["corpus_id"]) for r in got.collect()}
-        recalls[res] = len(e & g) / len(e)
-    assert recalls[True] > recalls[False], recalls
-
-
-def test_pq_adc_score_matches_lut_sum(spark, sf_dir):
-    """The native zip_with ADC expression must equal the numpy
-    LUT-sum for every (query, corpus) pair scored."""
-    emb = read_table(spark, sf_dir, "embeddings").limit(50)
-    queries = emb.where(F.col("vec_id") < 3)
-    books = similarity.pq_codebooks(emb, n_sub=8, n_codes=8, n_iters=1)
-    got = similarity.pq_ann_topk(
-        emb, queries, k=3, books=books
-    ).collect()
-    corpus = {
-        r["vec_id"]: np.asarray(r["embedding"], dtype=np.float64)
-        for r in emb.collect()
-    }
-    sub_dim = books.shape[2]
-    for r in got:
-        qv = corpus[r["query_id"]]
-        cv = corpus[r["corpus_id"]]
-        qv = qv / (np.linalg.norm(qv) or 1.0)
-        cvn = cv / (np.linalg.norm(cv) or 1.0)
-        want = 0.0
-        for m in range(books.shape[0]):
-            sub = cvn[m * sub_dim : (m + 1) * sub_dim]
-            d2 = ((sub[None, :] - books[m]) ** 2).sum(axis=1)
-            code = int(np.argmin(d2))
-            want += float(books[m][code] @ qv[m * sub_dim : (m + 1) * sub_dim])
-        assert abs(r["adc_score"] - want) < 1e-9
-
-
-def test_pq_codebook_cache_distinguishes_coarse_quantizers(spark, sf_dir):
-    """Regression: the codebook memo must key on WHICH coarse centroids
-    residuals were trained against — the same cache_key with a
-    different quantizer (different n_cells) must retrain, not serve
-    the other quantizer's residual codebooks."""
-    emb = read_table(spark, sf_dir, "embeddings")
-    key = f"cache-cent-{sf_dir}"
-    c8 = similarity.ivf_centroids(
-        emb, n_cells=8, n_iters=1, train_sample=256, cache_key=key
-    )
-    c16 = similarity.ivf_centroids(
-        emb, n_cells=16, n_iters=1, train_sample=256, cache_key=key
-    )
-    b8 = similarity.pq_codebooks(
-        emb, n_sub=8, n_codes=16, n_iters=2, train_sample=256,
-        cache_key=key, centroids=c8,
-    )
-    b16 = similarity.pq_codebooks(
-        emb, n_sub=8, n_codes=16, n_iters=2, train_sample=256,
-        cache_key=key, centroids=c16,
-    )
-    assert not np.array_equal(b8, b16), (
-        "residual codebooks for different coarse quantizers must differ"
-    )
-    # same quantizer again → cache hit must return identical books
-    b8_again = similarity.pq_codebooks(
-        emb, n_sub=8, n_codes=16, n_iters=2, train_sample=256,
-        cache_key=key, centroids=c8,
-    )
-    np.testing.assert_array_equal(b8, b8_again)
+    assert after == before, "second training run re-fetched the shared sample"
+    np.testing.assert_array_equal(c3, c1)
 
 
 # ---------------------------------------------------------------------------

@@ -60,30 +60,6 @@ def test_q19_plan_keeps_equi_join(spark, sf_dir):
     assert "CartesianProduct" not in plan
 
 
-def test_salted_join_equals_plain_join(spark, sf_dir):
-    """Salted join is bit-identical to the plain equi join on skewed
-    data (one hot user dominates), for inner and left joins."""
-    from time_series_prediction_spark.operators.skew import salted_join
-
-    ev = read_table(spark, sf_dir, "events").select(
-        "event_id", F.when(F.col("user_id") % 3 == 0, 0).otherwise(
-            F.col("user_id")
-        ).alias("uid"), "value"
-    )
-    dim = (
-        read_table(spark, sf_dir, "events")
-        .select((F.col("user_id") % 50).alias("uid"))
-        .distinct()
-        .withColumn("grp", F.col("uid") % 7)
-    )
-    for how in ("inner", "left"):
-        got = salted_join(ev, dim, ["uid"], n_salts=8, how=how)
-        want = ev.join(dim, ["uid"], how)
-        assert got.count() == want.count()
-        assert got.exceptAll(want).count() == 0
-        assert want.exceptAll(got).count() == 0
-
-
 def test_cooccurrence_dict_cap_fallback_identical(spark, sf_dir):
     """r15 cap-with-fallback (VERDICT r14 Next #5): with the driver
     dictionary disabled (cap=0) part_type_cooccurrence runs the

@@ -6,9 +6,10 @@ import pyspark.sql.functions as F
 
 from time_series_prediction_spark.operators import similarity
 from time_series_prediction_spark.plans.semantic_queries import (
+    _assigned,
+    _prune_pairs_from,
     dedup_semantic_prune,
     embedding_hard_negatives,
-    semantic_prune_pairs,
 )
 from time_series_prediction_spark.sources.io import read_table
 
@@ -44,7 +45,7 @@ def test_semantic_prune_pairs_are_true_near_twins(spark, sf_dir):
     emb = read_table(spark, sf_dir, "embeddings")
     got = {
         (r.kept_id, r.pruned_id)
-        for r in semantic_prune_pairs(emb, tau=0.30).collect()
+        for r in _prune_pairs_from(_assigned(emb, 16), 0.30).collect()
     }
     truth = {
         (r.kept_id, r.pruned_id)

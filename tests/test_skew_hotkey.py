@@ -1,70 +1,14 @@
-"""Hot-key skew behavior for the blocked joins.
+"""Hot-key skew behavior for shuffle joins.
 
 A 100 TB dedup run lives or dies on what happens when one blocking key
 holds a huge share of the rows (a boilerplate-heavy crawl: one (lang,
-fingerprint) block with 50% of documents). Two defenses exist and both
-are pinned here:
-
-* salted_join — the hot key's rows must spread across all n_salts
-  shuffle keys with a documented balance threshold (no shuffle key
-  holds more than 2× the ideal share), while the join result stays
-  bit-identical to the plain join.
-* the engine session keeps AQE skew-join splitting ON, so even
-  unsalted shuffle joins get runtime re-splitting of oversized
-  partitions.
+fingerprint) block with 50% of documents). The engine session keeps
+AQE skew-join splitting ON, so shuffle joins get runtime re-splitting
+of oversized partitions; aggregations over hot keys use the two-phase
+salted groupBy (``operators/skew.salted_sum_count``).
 """
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
-
-from time_series_prediction_spark.operators.skew import salted_join
-
-
-def _skewed_frames(spark, n=4000):
-    """Left: n rows, 50% on one hot key. Right: one row per key."""
-    left = spark.range(n).select(
-        F.when(F.col("id") % 2 == 0, F.lit("HOT"))
-        .otherwise(F.concat(F.lit("k"), (F.col("id") % 97).cast("string")))
-        .alias("k"),
-        F.col("id").alias("left_id"),
-    )
-    right = left.select("k").distinct().withColumn("tag", F.md5("k"))
-    return left, right
-
-
-def test_salted_join_spreads_hot_key(spark):
-    """The hot key (50% of rows) must land on every salt with balanced
-    shares: max per-salt count <= 2x the ideal count (threshold
-    documented — xxhash64 over row content is near-uniform, so the
-    observed imbalance is typically <1.3x; 2x leaves hash headroom)."""
-    n_salts = 16
-    left, right = _skewed_frames(spark)
-    # reproduce salted_join's exact salt derivation to observe the
-    # per-(key, salt) distribution it induces
-    salt = F.pmod(F.xxhash64(*[F.col(c) for c in left.columns]), F.lit(n_salts))
-    dist = (
-        left.where(F.col("k") == "HOT")
-        .withColumn("_salt", salt)
-        .groupBy("_salt")
-        .count()
-        .collect()
-    )
-    hot_total = sum(r["count"] for r in dist)
-    ideal = hot_total / n_salts
-    assert len(dist) == n_salts, "hot key must hit every salt bucket"
-    assert max(r["count"] for r in dist) <= 2 * ideal
-
-
-def test_salted_join_bit_identical_on_hot_key(spark):
-    left, right = _skewed_frames(spark)
-    plain = left.join(right, ["k"]).select("k", "left_id", "tag")
-    salted = salted_join(left, right, ["k"], n_salts=16).select(
-        "k", "left_id", "tag"
-    )
-    assert sorted(map(tuple, plain.collect())) == sorted(
-        map(tuple, salted.collect())
-    )
 
 
 def test_session_keeps_aqe_skew_join_on(spark):

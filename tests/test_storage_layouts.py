@@ -90,27 +90,25 @@ def test_csv_and_json_sources_roundtrip(spark, sf_dir, tmp_path):
 
 
 def test_delta_roundtrip_when_available(spark, sf_dir, tmp_path):
-    """Exercise the REAL delta path whenever the jars are present;
-    otherwise verify the documented parquet fallback executes the same
-    API surface. Either way read_delta(write_delta(df)) is identity."""
-    from time_series_prediction_spark.sources.io import (
-        _delta_available,
+    """read_delta(write_delta_log(df)) is identity: through the real
+    delta-spark reader whenever its jars are present, otherwise
+    through the native log reader."""
+    import os
+
+    from time_series_prediction_spark.sources.deltalog import (
         read_delta,
-        write_delta,
+        write_delta_log,
     )
 
     nation = read_table(spark, sf_dir, "nation")
     path = str(tmp_path / "nation_delta")
-    write_delta(nation, path)
+    write_delta_log(nation, path)
+    assert os.path.isdir(os.path.join(path, "_delta_log"))
     back = read_delta(spark, path)
     assert back.count() == nation.count()
     assert {r["n_nationkey"] for r in back.collect()} == {
         r["n_nationkey"] for r in nation.collect()
     }
-    if _delta_available(spark):
-        import os
-
-        assert os.path.isdir(os.path.join(path, "_delta_log"))
 
 
 def test_bloom_index_prunes_and_stays_exact(spark, sf_dir):

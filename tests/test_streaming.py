@@ -3,108 +3,46 @@ the fixture parquet as a file source and compare against batch truth."""
 
 from __future__ import annotations
 
+import os
 import tempfile
 
 from pyspark.sql import functions as F
 
-from time_series_prediction_spark.plans.relational import events_hourly
-from time_series_prediction_spark.streaming.events import (
-    hourly_counts_stream,
-    read_events_stream,
-    run_to_memory_sink,
-    run_to_parquet_sink,
-    session_stream,
-)
+from time_series_prediction_spark.streaming.events import run_to_parquet_sink
 
 
-def test_hourly_stream_matches_batch_counts(spark, sf_dir):
-    stream = hourly_counts_stream(read_events_stream(spark, sf_dir))
-    q = run_to_memory_sink(stream, "hourly_out", output_mode="append")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = spark.sql(
-        "SELECT CAST(sum(n_events) AS BIGINT) AS n FROM hourly_out"
-    ).first()["n"]
-    want = (
-        events_hourly(spark, sf_dir)
-        .agg(F.sum("n_events").alias("n"))
-        .first()["n"]
+def _events_stream(spark, sf_dir):
+    """File-source stream over the events fixture with ``ts`` as a UTC
+    timestamp. File streams need a directory and an explicit schema:
+    stream the fixture dir filtered to the events file, with the
+    schema its footer declares."""
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    return (
+        spark.readStream.schema(schema)
+        .option("pathGlobFilter", "events.parquet")
+        .parquet(sf_dir)
+        .withColumn("ts", F.col("ts").cast("timestamp"))
     )
-    # append mode emits only watermark-closed windows; with a bounded
-    # historical file source every window is eventually closed except
-    # those within the final watermark — require >= 90% coverage and
-    # no overcounting
-    assert got is not None
-    assert got <= want
-    assert got >= int(want * 0.9), f"stream={got} batch={want}"
 
 
-def test_events_stream_reads_legacy_nanos_fixture(spark, sf_dir, tmp_path):
-    """read_events_stream must accept BOTH fixture encodings (the same
-    compat surface as io.read_table): synthesize a rounds-1/2-style
-    events.parquet with TIMESTAMP(NANOS)-as-bigint ts and stream it."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    base_us = 1_700_000_000_000_000
-    tbl = pa.table(
-        {
-            "event_id": pa.array([1, 2, 3], pa.int64()),
-            "ts": pa.array(
-                [base_us * 1000, (base_us + 60_000_000) * 1000,
-                 (base_us + 120_000_000) * 1000],
-                pa.int64(),
-            ),
-            "user_id": pa.array([10, 11, 10], pa.int64()),
-            "event_type": pa.array(["view", "purchase", "view"]),
-            "value": pa.array([1.0, 2.0, 3.0], pa.float64()),
-            "props": pa.array(["{}", "{}", "{}"]),
-        }
+def _read_layout(spark, data_path):
+    """Every parquet file under a streamed layout, committed or not:
+    per-batch subdirectories are plain nested dirs, not partitions."""
+    return (
+        spark.read.option("recursiveFileLookup", "true")
+        .option("pathGlobFilter", "*.parquet")
+        .parquet(data_path)
     )
-    pq.write_table(tbl, str(tmp_path / "events.parquet"))
-    stream = read_events_stream(spark, str(tmp_path))
-    q = run_to_memory_sink(
-        stream.select("event_id", "ts"), "legacy_events_out",
-        output_mode="append",
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    rows = spark.sql(
-        "SELECT event_id, unix_micros(ts) AS us FROM legacy_events_out "
-        "ORDER BY event_id"
-    ).collect()
-    assert [r["event_id"] for r in rows] == [1, 2, 3]
-    assert [r["us"] for r in rows] == [
-        base_us, base_us + 60_000_000, base_us + 120_000_000
-    ]
-
-
-def test_session_stream_produces_sessions(spark, sf_dir):
-    stream = session_stream(read_events_stream(spark, sf_dir))
-    q = run_to_memory_sink(stream, "session_out", output_mode="append")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    rows = spark.sql(
-        "SELECT count(*) AS n, min(n_events) AS mn FROM session_out"
-    ).first()
-    assert rows["n"] > 100
-    assert rows["mn"] >= 1
-    # session invariant: end >= start for every emitted session
-    bad = spark.sql(
-        "SELECT count(*) AS b FROM session_out WHERE session_end < session_start"
-    ).first()["b"]
-    assert bad == 0
 
 
 def test_foreach_batch_parquet_sink(spark, sf_dir):
+    """Every streamed row lands in the parquet target exactly once."""
+    from time_series_prediction_spark.sources.io import read_table
+
+    cols = ["event_id", "event_type", "value"]
     with tempfile.TemporaryDirectory() as tmp:
-        stream = hourly_counts_stream(read_events_stream(spark, sf_dir))
+        stream = _events_stream(spark, sf_dir).select(*cols)
         q = run_to_parquet_sink(
             stream, f"{tmp}/out", checkpoint=f"{tmp}/ckpt"
         )
@@ -113,49 +51,10 @@ def test_foreach_batch_parquet_sink(spark, sf_dir):
         finally:
             q.stop()
         back = spark.read.parquet(f"{tmp}/out")
-        assert back.count() > 0
-        assert set(back.columns) == {
-            "hour",
-            "event_type",
-            "n_events",
-            "total_value",
-        }
-
-
-def test_dedup_stream_suppresses_replays(spark, sf_dir):
-    """Feed the events file TWICE (a replay) through the streaming
-    dedup; output must contain each event_id at most once and cover
-    every id (all replays land well inside the watermark horizon)."""
-    from time_series_prediction_spark.sources.io import read_table
-    from time_series_prediction_spark.streaming.events import dedup_stream
-
-    ev = read_table(spark, sf_dir, "events")
-    n_distinct = ev.select("event_id").distinct().count()
-    with tempfile.TemporaryDirectory() as d:
-        src = f"{d}/src"
-        raw = spark.read.option("pathGlobFilter", "events.parquet").parquet(sf_dir)
-        raw.write.mode("append").parquet(src)
-        raw.write.mode("append").parquet(src)  # the replay
-
-        stream = (
-            spark.readStream.schema(raw.schema)
-            .format("parquet")
-            .option("maxFilesPerTrigger", "1")  # replay arrives in a later batch
-            .load(src)
-            .withColumn("ts", F.col("ts").cast("timestamp"))
-        )
-        q = run_to_memory_sink(
-            dedup_stream(stream), "dedup_out", output_mode="append"
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    out = spark.sql(
-        "SELECT count(*) AS n, count(DISTINCT event_id) AS nd FROM dedup_out"
-    ).first()
-    assert out["n"] == out["nd"], "a duplicate event_id got through"
-    assert out["n"] == n_distinct
+        assert back.columns == cols
+        want = read_table(spark, sf_dir, "events").select(*cols)
+        assert back.count() == want.count() > 0
+        assert back.exceptAll(want).count() == 0
 
 
 def test_stream_stream_join_matches_batch(spark, sf_dir):
@@ -167,14 +66,19 @@ def test_stream_stream_join_matches_batch(spark, sf_dir):
         click_purchase_join_stream,
     )
 
-    clicks = read_events_stream(spark, sf_dir).where(
+    clicks = _events_stream(spark, sf_dir).where(
         F.col("event_type") == "click"
     )
-    purchases = read_events_stream(spark, sf_dir).where(
+    purchases = _events_stream(spark, sf_dir).where(
         F.col("event_type") == "purchase"
     )
-    stream = click_purchase_join_stream(clicks, purchases)
-    q = run_to_memory_sink(stream, "attrib_out", output_mode="append")
+    q = (
+        click_purchase_join_stream(clicks, purchases)
+        .writeStream.outputMode("append")
+        .format("memory")
+        .queryName("attrib_out")
+        .start()
+    )
     try:
         q.processAllAvailable()
     finally:
@@ -215,61 +119,6 @@ def test_stream_stream_join_matches_batch(spark, sf_dir):
     ), f"stream={len(got_pairs)} batch={len(batch_pairs)}"
 
 
-def test_idempotent_epoch_sink_replay_safe(spark, sf_dir):
-    """Epoch-keyed overwrite sink: output files land under
-    epoch_id=N dirs and re-running the SAME checkpointed query over
-    unchanged input produces no duplicate rows."""
-    from time_series_prediction_spark.streaming.events import (
-        run_idempotent_epoch_sink,
-    )
-
-    with tempfile.TemporaryDirectory() as tmp:
-        def run_once():
-            stream = hourly_counts_stream(read_events_stream(spark, sf_dir))
-            q = run_idempotent_epoch_sink(
-                stream, f"{tmp}/out", checkpoint=f"{tmp}/ckpt"
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-
-        run_once()
-        n1 = spark.read.parquet(f"{tmp}/out").count()
-        assert n1 > 0
-        run_once()  # restart from checkpoint: no new input, no new rows
-        n2 = spark.read.parquet(f"{tmp}/out").count()
-        assert n2 == n1
-
-
-def test_stream_static_join_matches_batch(spark, sf_dir):
-    """Stream-static enrichment == the same join+agg run as batch."""
-    from time_series_prediction_spark.sources.io import read_table
-    from time_series_prediction_spark.streaming.events import (
-        enriched_counts_stream,
-    )
-
-    dim = (
-        read_table(spark, sf_dir, "events")
-        .select("user_id")
-        .distinct()
-        .withColumn("cohort", F.col("user_id") % 5)
-    )
-    stream = enriched_counts_stream(read_events_stream(spark, sf_dir), dim)
-    q = run_to_memory_sink(stream, "enriched_out", output_mode="append")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = spark.sql(
-        "SELECT CAST(sum(n_events) AS BIGINT) AS n FROM enriched_out"
-    ).first()["n"]
-    ev = read_table(spark, sf_dir, "events")
-    want = ev.join(dim, "user_id").count()
-    assert got is not None and got <= want
-    assert got >= int(want * 0.9), f"stream={got} batch={want}"
-
-
 def test_streaming_zorder_ingest_builds_pruned_layout(spark, tmp_path):
     """The continuous lakehouse ingestion loop: a file stream lands
     micro-batch by micro-batch as z-ordered batch dirs with an
@@ -278,8 +127,6 @@ def test_streaming_zorder_ingest_builds_pruned_layout(spark, tmp_path):
     rebuild, range queries through it prune files yet match the full
     scan, every source row landed exactly once, and replaying a batch
     (same batch_id) changes nothing."""
-    import os
-
     from time_series_prediction_spark.operators.manifest import (
         build_stats_manifest,
         list_parquet_files,
@@ -289,7 +136,6 @@ def test_streaming_zorder_ingest_builds_pruned_layout(spark, tmp_path):
     from time_series_prediction_spark.streaming.layout import (
         current_manifest,
         manifest_root,
-        read_layout,
         zorder_ingest_sink,
     )
 
@@ -335,23 +181,23 @@ def test_streaming_zorder_ingest_builds_pruned_layout(spark, tmp_path):
         .first()
     )
     want = (
-        read_layout(spark, out)
+        _read_layout(spark, out)
         .where(F.col("x").between(10, 25))
         .agg(F.count(F.lit(1)), F.sum("payload"))
         .first()
     )
     assert tuple(got) == tuple(want) and got[0] > 0
     # exactly-once landing across the whole stream
-    assert read_layout(spark, out).count() == 30_000
+    assert _read_layout(spark, out).count() == 30_000
 
     # replay: re-running a batch with the same batch_id overwrites its
     # own directory and republishes a consistent manifest — no dupes
     sink = zorder_ingest_sink(out, ["x", "y"])
     extra = grid.where(F.col("payload") < 1_000)
     sink(extra, 999)
-    assert read_layout(spark, out).count() == 31_000
+    assert _read_layout(spark, out).count() == 31_000
     sink(extra, 999)  # replay
-    assert read_layout(spark, out).count() == 31_000
+    assert _read_layout(spark, out).count() == 31_000
     man2 = current_manifest(spark, manifest_root(out))
     rebuilt2 = build_stats_manifest(spark, out, ["x", "y"])
     assert sorted(map(tuple, man2.collect())) == sorted(
@@ -366,8 +212,6 @@ def test_streaming_layout_compact_vacuum_cycle(spark, tmp_path):
     identical, pruning intact), VACUUM reclaims superseded dirs after
     the retention window, and ingestion continues cleanly on the
     compacted table."""
-    import os
-
     from time_series_prediction_spark.operators.manifest import (
         list_parquet_files,
         prune_files,
@@ -377,7 +221,6 @@ def test_streaming_layout_compact_vacuum_cycle(spark, tmp_path):
         current_manifest,
         manifest_root,
         read_committed,
-        read_layout,
         vacuum_layout,
         zorder_ingest_sink,
     )
@@ -409,7 +252,7 @@ def test_streaming_layout_compact_vacuum_cycle(spark, tmp_path):
     committed_files = set(prune_files(man, {}))
     assert committed_files == set(list_parquet_files(cdir, spark))
     # raw recursive scan would double-count until vacuum
-    assert read_layout(spark, out).count() == 48_000
+    assert _read_layout(spark, out).count() == 48_000
     # stats pruning works on the compacted generation
     kept = prune_files(man, {"x": (10.0, 25.0)})
     assert 0 < len(kept) < len(committed_files)
@@ -418,7 +261,7 @@ def test_streaming_layout_compact_vacuum_cycle(spark, tmp_path):
     assert vacuum_layout(spark, out) == []
     removed = vacuum_layout(spark, out, grace_s=0.0)
     assert len(removed) == 4 and all("batch-" in d for d in removed)
-    assert read_layout(spark, out).count() == 24_000
+    assert _read_layout(spark, out).count() == 24_000
     assert sorted(
         map(tuple, read_committed(spark, out).collect())
     ) == before
@@ -445,7 +288,6 @@ def test_zorder_sink_replay_with_unnormalized_path(spark, tmp_path):
     from time_series_prediction_spark.streaming.layout import (
         current_manifest,
         manifest_root,
-        read_layout,
         zorder_ingest_sink,
     )
 
@@ -464,7 +306,7 @@ def test_zorder_sink_replay_with_unnormalized_path(spark, tmp_path):
     assert sorted(map(tuple, man.collect())) == sorted(
         map(tuple, rebuilt.collect())
     )
-    assert read_layout(spark, out).count() == 4_000
+    assert _read_layout(spark, out).count() == 4_000
 
 
 def test_layout_commit_protocol_over_file_uri(spark, sf_dir, tmp_path):
@@ -472,8 +314,6 @@ def test_layout_commit_protocol_over_file_uri(spark, sf_dir, tmp_path):
     work when every path is a ``file:`` URI routed through the Hadoop
     FileSystem API (the HDFS-portability contract) — publish, pointer
     flip, version pruning, committed read."""
-    import os
-
     from time_series_prediction_spark.sources.io import read_table
     from time_series_prediction_spark.streaming.layout import (
         current_manifest,
@@ -508,8 +348,6 @@ def test_fsops_publish_dir_race_semantics(spark, tmp_path):
     """publish_dir: first publisher wins; the loser's rename must NOT
     nest its build inside the winner's published dir (the Hadoop
     move-into-existing-dir trap)."""
-    import os
-
     from time_series_prediction_spark.sources.fsops import fs_for
 
     fs = fs_for(spark, str(tmp_path))

@@ -8,6 +8,7 @@ raw truth of everything that landed."""
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
@@ -23,11 +24,30 @@ from time_series_prediction_spark.streaming.layout import (
     read_committed,
 )
 from time_series_prediction_spark.streaming.pipeline import (
+    _link_dir,
     lakehouse_ingest_sink,
-    read_quarantine,
-    read_reports,
-    rejected_batches,
 )
+
+
+def _read_parquet_tree(spark, path):
+    """Every parquet file under ``path``: the sink keys its quarantine
+    and report artifacts by nested ``batch-{id}`` dirs."""
+    return (
+        spark.read.option("recursiveFileLookup", "true")
+        .option("pathGlobFilter", "*.parquet")
+        .parquet(path)
+    )
+
+
+def _commit_links(silver):
+    """The medallion sink's recorded cross-table commits, by batch."""
+    d = _link_dir(silver)
+    links = []
+    for name in os.listdir(d):
+        if name.startswith("batch-") and name.endswith(".json"):
+            with open(os.path.join(d, name)) as f:
+                links.append(json.load(f))
+    return sorted(links, key=lambda r: r["batch_id"])
 
 
 @pytest.fixture()
@@ -81,14 +101,14 @@ def test_composed_sink_end_to_end(spark, events_batches, tmp_path):
     assert committed.count() == truth_rows
 
     # quarantined rows carry their failure reasons
-    q = read_quarantine(spark, out + "_quarantine")
+    q = _read_parquet_tree(spark, out + "_quarantine")
     assert q.count() == poisoned.where("value < 0").count()
     assert all(
         "value_in_range" in r._failed_checks for r in q.collect()
     )
 
     # the duplicate-key batch left rejection artifacts, not data
-    rej = rejected_batches(spark, out)
+    rej = sorted(n for n in os.listdir(out) if n.startswith("_rejected-"))
     assert rej == ["_rejected-batch-2"]
     report = spark.read.parquet(
         os.path.join(out, "_rejected-batch-2", "_audit_report")
@@ -96,7 +116,7 @@ def test_composed_sink_end_to_end(spark, events_batches, tmp_path):
     assert any(r.check_name == "event_id_unique" and r.n_violations > 0 for r in report)
 
     # per-batch reports recorded each verdict
-    reports = {r.batch_id: r for r in read_reports(spark, out + "_report").collect()}
+    reports = {r.batch_id: r for r in _read_parquet_tree(spark, out + "_report").collect()}
     assert reports[0].verdict == "published"
     assert reports[1].verdict == "published"
     assert reports[1].n_quarantined == q.count()
@@ -339,10 +359,7 @@ def test_medallion_kill_between_commits_resumes_exactly_once(
         manifest_root,
         read_committed,
     )
-    from time_series_prediction_spark.streaming.pipeline import (
-        medallion_commit_links,
-        medallion_sink,
-    )
+    from time_series_prediction_spark.streaming.pipeline import medallion_sink
 
     bronze = str(tmp_path / "bronze")
     silver = str(tmp_path / "silver")
@@ -368,7 +385,7 @@ def test_medallion_kill_between_commits_resumes_exactly_once(
     # bronze is ahead: batch 1 landed there, not in silver, no link
     assert read_delta_log(spark, bronze).count() == 4
     assert read_committed(spark, silver).count() == 2
-    links = medallion_commit_links(spark, silver)
+    links = _commit_links(silver)
     assert [r["batch_id"] for r in links] == [0]
 
     # the stream replays batch 1 (checkpoint never advanced)
@@ -378,7 +395,7 @@ def test_medallion_kill_between_commits_resumes_exactly_once(
         r["k"]: r["v"] for r in read_committed(spark, silver).collect()
     }
     assert got == {1: 10, 2: 21, 3: 30}
-    links = medallion_commit_links(spark, silver)
+    links = _commit_links(silver)
     assert [r["batch_id"] for r in links] == [0, 1]
     # the link pins the exact (bronze, silver) version pair
     _f, _m, bronze_v, _t, _p = delta_snapshot(spark, bronze)
@@ -402,10 +419,7 @@ def test_medallion_links_keyed_by_app_id(spark, tmp_path):
     from time_series_prediction_spark.streaming.layout import (
         read_committed,
     )
-    from time_series_prediction_spark.streaming.pipeline import (
-        medallion_commit_links,
-        medallion_sink,
-    )
+    from time_series_prediction_spark.streaming.pipeline import medallion_sink
 
     bronze = str(tmp_path / "bronze")
     silver = str(tmp_path / "silver")
@@ -434,15 +448,15 @@ def test_medallion_links_keyed_by_app_id(spark, tmp_path):
     assert got == {1: 10, 2: 20, 3: 30, 4: 40}, (
         "app-b's batch 0 was dropped by app-a's stale link"
     )
-    links = medallion_commit_links(spark, silver)
+    links = _commit_links(silver)
     assert sorted(
         (link["app_id"], link["batch_id"]) for link in links
     ) == [("app-a", 0), ("app-b", 0)]
 
     # replay of app-b's batch 0 IS short-circuited by its own link
-    before = len(medallion_commit_links(spark, silver))
+    before = len(_commit_links(silver))
     sink_b(
         spark.createDataFrame([(3, 30), (4, 40)], "k long, v long"), 0
     )
-    assert len(medallion_commit_links(spark, silver)) == before
+    assert len(_commit_links(silver)) == before
     assert read_committed(spark, silver).count() == 4

@@ -158,6 +158,30 @@ def test_get_x_get_y(sdf, series):
         assert_arrays_close(r["y"], ref.ref_get_y(fs[i]), f"y[{i}]")
 
 
+def test_get_x_y_reject_short_series(spark):
+    """A negative slice start counts from the end, so without the
+    length guard a 400-day series gets an X inside y's window and a
+    456-day one an opaque START error. Series shorter than the window
+    fail the job with a message naming the length; 457+ keep 365/92."""
+    def frame(n):
+        return spark.createDataFrame(
+            [(n, [float(i) for i in range(n)])], "id long, balance array<float>"
+        )
+
+    for n in (400, 456):
+        with pytest.raises(Exception, match=f"at least 457 elements, got {n}"):
+            frame(n).select(ts.get_x("balance")).collect()
+        assert len(frame(n).select(ts.get_y("balance").alias("y")).first()["y"]) == 92
+    with pytest.raises(Exception, match="at least 92 elements, got 50"):
+        frame(50).select(ts.get_y("balance")).collect()
+    for n in (457, 500):
+        r = frame(n).select(
+            ts.get_x("balance").alias("X"), ts.get_y("balance").alias("y")
+        ).first()
+        assert r["X"] == [float(v) for v in range(n - 457, n - 92)]
+        assert r["y"] == [float(v) for v in range(n - 92, n)]
+
+
 def test_gradient(sdf, series):
     got = _collect(sdf.withColumn("g", ts.gradient("balance")), "g")
     want = [ref.ref_gradient(s) for s in _f32(series)]
@@ -166,20 +190,18 @@ def test_gradient(sdf, series):
 
 
 @pytest.mark.parametrize("serving", [False, True])
-@pytest.mark.parametrize("median", [True, False])
-def test_extrapolate_trend(sdf, series, serving, median):
+def test_extrapolate_trend(sdf, series, serving):
     df = sdf.withColumn("t", ts.trend("balance")).withColumn(
-        "e", ts.extrapolate_trend("t", median=median, serving=serving)
+        "e", ts.extrapolate_trend("t", serving=serving)
     )
     rows = df.orderBy("id").select("t", "e").collect()
     for i, r in enumerate(rows):
         want = ref.ref_extrapolate_trend(
             np.asarray(r["t"], dtype=np.float32).astype(float),
-            median=median,
             serving=serving,
         )
         assert len(r["e"]) == 92
-        assert_arrays_close(r["e"], want, f"extrap[{i},{median},{serving}]")
+        assert_arrays_close(r["e"], want, f"extrap[{i},{serving}]")
         # extrapolation is an arithmetic sequence (constant diff to
         # rounding + float32 quantization of the stored values)
         vals = np.asarray(r["e"], dtype=float)

@@ -3,14 +3,39 @@ verified against the written parquet's own row-group statistics."""
 
 from __future__ import annotations
 
+import glob
+import os
+
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from time_series_prediction_spark.operators.zorder import (
-    rowgroup_pruning_fraction,
     write_zordered,
     zorder_code,
 )
+
+
+def rowgroup_pruning_fraction(path: str, col: str, lo: float, hi: float) -> float:
+    """Fraction of parquet row groups whose [min, max] stats overlap
+    [lo, hi] for ``col`` — what a stats-pruning reader must scan.
+    Reads footers only (pyarrow), no data pages."""
+    files = sorted(glob.glob(os.path.join(path, "*.parquet")))
+    total = overlapping = 0
+    for f in files:
+        meta = pq.ParquetFile(f).metadata
+        idx = {
+            meta.row_group(0).column(i).path_in_schema: i
+            for i in range(meta.num_columns)
+        }[col]
+        for g in range(meta.num_row_groups):
+            st = meta.row_group(g).column(idx).statistics
+            total += 1
+            if st is None or st.min is None:
+                overlapping += 1  # no stats ⇒ must scan
+            elif not (st.max < lo or st.min > hi):
+                overlapping += 1
+    return overlapping / max(total, 1)
 
 
 @pytest.fixture(scope="module")

@@ -21,8 +21,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-ROLLUP_STATE_COLS = ("n", "total", "vmin", "vmax")
-
 
 def rollup_partials(
     batch: DataFrame, key_cols: list[str], value_col: str

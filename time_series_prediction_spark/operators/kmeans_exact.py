@@ -30,9 +30,9 @@ a DuckDB oracle can replay it bit-for-bit:
 Scale shape: training collects the ≤ ``sample_cap``-row sample to the
 driver ONCE and runs the exact Lloyd in NumPy (bounded memory/time at
 any corpus size — the classic train-on-a-sample discipline); the full
-corpus then pays a single JVM-side fold against the 16 centroid
-literals — no Python stage, no shuffle — and the cell equi-join bounds
-pair work by cell occupancy. Reference scope: beyond-reference
+corpus then pays a single Arrow-batched NumPy assignment pass against
+the 16 centroids — no shuffle — and the cell equi-join bounds pair
+work by cell occupancy. Reference scope: beyond-reference
 curation (SemDeDup, Abbas et al. 2023, arXiv:2303.09540); the
 reference repo has no embedding operators.
 """
@@ -57,37 +57,20 @@ _SCALE = 1 << 20
 # ---------------------------------------------------------------------------
 
 
-def _dists_to(V: np.ndarray, s: np.ndarray, m: int) -> np.ndarray:
-    """Per-row distance of int64 matrix ``V`` (n, d) to one centroid:
-    exact residuals, double squares, SEQUENTIAL dim-order sum — the
-    engines' fold order. The fold runs as one in-place accumulator
-    add per dimension (acc_j = acc_{j-1} + sq_j, the same per-element
-    rounding sequence as ``cumsum(...)[:, -1]``) so no (n, d) prefix
-    array is ever materialized."""
-    mi = int(m)
-    acc: np.ndarray | None = None
-    for j in range(V.shape[1]):
-        t = (V[:, j] * mi - int(s[j])).astype(np.float64)
-        t *= t
-        acc = t if acc is None else acc.__iadd__(t)
-    assert acc is not None
-    acc /= float(mi * mi)
-    return acc
-
-
 def _dists_to_all(
     V: np.ndarray, cents: list[tuple[int, np.ndarray, int]]
 ) -> np.ndarray:
     """(n, n_cells) distances of every row to every centroid in ONE
-    vectorized pass — replaces a per-cell Python loop of ``_dists_to``
-    calls. Bit-identical: the residual ``v·m − S`` stays exact int64
-    (|v|≤2^20, m≤4096 ⇒ |v·m|≤2^32, |S|≤2^32), the square is the
-    same one double product per element, and the dim-order sum runs
-    per (cell, row) as one in-place (n, n_cells) accumulator add per
-    dimension — the identical per-element rounding sequence as the
-    scalar path's cumsum, without the (C, n, d) residual/square/prefix
-    tensors the previous tensor formulation materialized (cache-sized
-    slices instead of DRAM-bound 30 MB temporaries: ~2× measured)."""
+    vectorized pass: exact residuals, double squares, SEQUENTIAL
+    dim-order sum — the engines' fold order. The residual ``v·m − S``
+    stays exact int64 (|v|≤2^20, m≤4096 ⇒ |v·m|≤2^32, |S|≤2^32), the
+    square is one double product per element, and the dim-order sum
+    runs per (cell, row) as one in-place (n, n_cells) accumulator add per
+    dimension — the identical per-element rounding sequence as
+    ``cumsum(...)[:, -1]`` over the squares, without the (C, n, d)
+    residual/square/prefix tensors a stacked formulation materializes
+    (cache-sized slices instead of DRAM-bound 30 MB temporaries: ~2×
+    measured)."""
     if not cents:
         return np.empty((len(V), 0), dtype=np.float64)
     S = np.stack([s for _c, s, _m in cents])             # (C, d) int64
@@ -126,37 +109,6 @@ def _train(V: np.ndarray, n_cells: int, n_iters: int) -> list[tuple[int, list[in
             nxt.append((cell, V[mask].sum(axis=0), mc))  # exact int64
         cents = nxt
     return [(c, [int(v) for v in s], m) for c, s, m in cents]
-
-
-def _cents_literal(cents: list[tuple[int, list[int], int]]) -> str:
-    items = ", ".join(
-        f"named_struct('cell', CAST({c} AS INT), "
-        f"'s', array({', '.join(f'{v}L' for v in s)}), "
-        f"'m', CAST({m} AS BIGINT))"
-        for c, s, m in cents
-    )
-    return f"array({items})"
-
-
-def _dist_sql(qv: str, s: str, m: str) -> str:
-    """Squared-distance SQL fragment (double), the exact op sequence
-    mirrored by the DuckDB oracle and the NumPy trainer."""
-    term = f"CAST(v * {m} - sv AS DOUBLE) * CAST(v * {m} - sv AS DOUBLE)"
-    return (
-        f"aggregate(zip_with({qv}, {s}, (v, sv) -> {term}), 0D, "
-        f"(a, x) -> a + x) / CAST({m} * {m} AS DOUBLE)"
-    )
-
-
-def _argmin_expr(cents_literal: str) -> str:
-    """Each distance computed ONCE per cell, then a lexicographic
-    struct sort (d, cell): the minimum distance wins, equal distances
-    fall to the lowest cell — the oracle's ``ORDER BY dist, cell``."""
-    return (
-        f"element_at(array_sort(transform({cents_literal}, "
-        f"ct -> named_struct('d', {_dist_sql('qv', 'ct.s', 'ct.m')}, "
-        f"'cell', ct.cell))), 1).cell"
-    )
 
 
 # training is deterministic per (corpus, params): registry queries
@@ -202,11 +154,10 @@ def _assign_cells_pass(
     cents: list[tuple[int, list[int], int]],
 ) -> DataFrame:
     """One Arrow-batched corpus pass producing (vec_id, qv, cell, nrm):
-    coarse-cell argmin + exact integer norm in vectorized NumPy with
-    the identical op sequence the interpreted JVM fold
-    (``_argmin_expr``) mirrors — ``_dists_to``'s sequential-cumsum
-    contract, argmin-first-minimum = lowest cell (``cents`` stay in
-    ascending cell order through training), |qv|≤2^20 so the int64
+    coarse-cell argmin + exact integer norm in vectorized NumPy —
+    ``_dists_to_all``'s sequential-cumsum contract,
+    argmin-first-minimum = lowest cell (``cents`` stay in ascending
+    cell order through training), |qv|≤2^20 so the int64
     norm ≤ d·2^40 is exact and its double conversion lossless. This is
     the same proven replacement ``_assign_encode_pass`` made for the
     PQ encode (which measured the JVM HOF fold ~5× slower than the
@@ -258,17 +209,6 @@ def lloyd_assign(
     return materialize(_assign_cells_pass(q, cents), eager=False)
 
 
-def _probe_expr(cents_literal: str, nprobe: int) -> str:
-    """The ``nprobe`` nearest cells for a query vector ``qv``, in
-    (distance, cell) order — the IVF probe list, same tie discipline
-    as the assignment argmin."""
-    return (
-        f"slice(transform(array_sort(transform({cents_literal}, "
-        f"ct -> named_struct('d', {_dist_sql('qv', 'ct.s', 'ct.m')}, "
-        f"'cell', ct.cell))), x -> x.cell), 1, {nprobe})"
-    )
-
-
 def _probe_cells(
     cents: list[tuple[int, list[int], int]],
     V: np.ndarray,
@@ -279,13 +219,10 @@ def _probe_cells(
     """The ``nprobe`` nearest cells per query — (distance asc, cell
     asc), the probe fold's tie discipline — computed DRIVER-side on
     the already-collected training sample (the query panel is the
-    ``vec_id < n_queries ≤ sample_cap`` prefix of it). Replaces the
-    JVM ``_probe_expr`` evaluation, whose plan carried the full
-    centroid literal (n_cells × dims int literals) and a corpus-scan
-    consumer just to reach the ≤ n_queries panel rows (guide §1.2:
-    bounded driver work beats a Spark job + giant-literal parse).
-    Same ``_dists_to`` op sequence, so the cell lists are
-    bit-identical to the fold's."""
+    ``vec_id < n_queries ≤ sample_cap`` prefix of it): bounded driver
+    work instead of a Spark job whose plan carries the full centroid
+    literal. Same ``_dists_to_all`` op sequence as the assignment, so
+    the cell lists follow the oracle's ``ORDER BY dist, cell``."""
     panel = ids < n_queries
     qids = ids[panel]
     Q = V[panel]
@@ -344,7 +281,7 @@ def ivf_ann_exact(
     of ``ivf_ann_exact_sql`` and the driver can oracle-check it.
 
     Scale shape is the real IVF one: the corpus is scanned once for
-    assignment (JVM fold over centroid literals, no Python), the
+    assignment (one Arrow-batched NumPy pass, ``_assign_cells_pass``), the
     candidate join is an equi-join on cell (pair work bounded by cell
     occupancy × nprobe, never all-pairs), and top-k is one window per
     query partition. Cosine = exact bigint dot / (double norms) —
@@ -572,9 +509,8 @@ def _assign_encode_pass(
     """One Arrow-batched corpus pass producing (vec_id, qv, cell,
     codes, nrm): coarse-cell argmin over the full vector, per-subspace
     dense-position code argmin, and the exact integer norm. All math
-    is ``_dists_to``'s sequential-cumsum contract — bit-identical to
-    the JVM fold expressions and the DuckDB CTEs, as the oracle
-    comparison proves end to end."""
+    is ``_dists_to_all``'s sequential-cumsum contract — bit-identical
+    to the DuckDB CTEs, as the oracle comparison proves end to end."""
     import pandas as pd
 
     cent_np = [(c, np.array(s, np.int64), m) for c, s, m in cents]
@@ -677,7 +613,7 @@ def pq_ann_exact(
     panel = (ids < n_queries)
     qids = ids[panel]
     # per-(query, subspace, code) ADC distances, precomputed
-    # driver-side with the exact _dists_to op sequence (as before)
+    # driver-side with the exact _dists_to_all op sequence
     book_np = [
         [(np.array(s, np.int64), m) for _c, s, m in bs] for bs in books
     ]

@@ -128,90 +128,6 @@ def decode_real(payload: bytes, modality: str):
     )
 
 
-RESIZED_SCHEMA = (
-    "doc_id bigint, modality string, width int, height int, "
-    "n_bytes bigint, content_md5 string, payload binary"
-)
-
-FRAMES_SCHEMA = (
-    "doc_id bigint, frame_idx int, n_bytes bigint, frame_payload binary"
-)
-
-
-def resize_images(
-    df: DataFrame, width: int = 32, height: int = 32
-) -> DataFrame:
-    """Resize plumbing via iterator ``mapInPandas``: payload →
-    fixed-size payload + (width, height) metadata, md5/byte accounting
-    recomputed. The DECODE+resample itself is a deterministic stub
-    (byte stream cycled/truncated to width·height — real impl: PIL
-    ``Image.open(...).resize((w, h))`` per ``decode_real``'s
-    contract); the Spark-side shape is real: schema evolution, bounded
-    Arrow batches, partition inheritance.
-
-    Corrupt-input policy (shared with sample_frames): empty/None
-    payloads are DROPPED, not emitted as zero images — downstream row
-    accounting must see only decodable media."""
-    import hashlib
-
-    target = width * height
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            keep = pdf["payload"].map(lambda p: p is not None and len(p) > 0)
-            pdf = pdf[keep]
-            resized = [
-                bytes((p * (target // len(p) + 1))[:target])
-                for p in pdf["payload"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "modality": pdf["modality"],
-                    "width": width,
-                    "height": height,
-                    "n_bytes": [len(r) for r in resized],
-                    "content_md5": [hashlib.md5(r).hexdigest() for r in resized],
-                    "payload": resized,
-                }
-            )
-
-    return df.mapInPandas(run, schema=RESIZED_SCHEMA)
-
-
-def sample_frames(df: DataFrame, n_frames: int = 4) -> DataFrame:
-    """Frame sampling plumbing: each video payload fans out to
-    ``n_frames`` rows (doc_id, frame_idx, frame_payload) — the 1→N
-    batch shape of real frame extraction (pyav: decode every k-th
-    keyframe). The stub slices the byte stream into n_frames equal
-    deterministic segments; empty payloads yield zero rows (a
-    corrupt-input drop, the behavior a real decoder needs)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, sizes, frames = [], [], [], []
-            for doc_id, p in zip(pdf["doc_id"], pdf["payload"]):
-                if p is None or len(p) == 0:
-                    continue
-                step = max(len(p) // n_frames, 1)
-                for i in range(n_frames):
-                    seg = bytes(p[i * step : (i + 1) * step] or p[-step:])
-                    ids.append(doc_id)
-                    idxs.append(i)
-                    sizes.append(len(seg))
-                    frames.append(seg)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "frame_idx": pd.Series(idxs, dtype="int32"),
-                    "n_bytes": pd.Series(sizes, dtype="int64"),
-                    "frame_payload": pd.Series(frames, dtype=object),
-                }
-            )
-
-    return df.mapInPandas(run, schema=FRAMES_SCHEMA)
-
-
 def extract_features(
     df: DataFrame,
     batch_size: int = 256,

@@ -37,7 +37,7 @@ def range_join(
     also matching on equi-key pairs [(point_key, interval_key), ...].
 
     ``point_col``/``start_col``/``end_col`` must be numeric (cast
-    timestamps with ``epoch_seconds`` first). Output columns = all
+    timestamps to epoch numbers first, e.g. ``unix_micros``). Output columns = all
     point columns + all interval columns (names must not collide).
     """
     pb = F.floor(F.col(point_col) / F.lit(bucket_width))
@@ -66,8 +66,3 @@ def _and(conds: list[Column]) -> Column:
     for c in conds[1:]:
         out = out & c
     return out
-
-
-def epoch_seconds(col: str) -> Column:
-    """Timestamp → epoch seconds as long (for range_join bucketing)."""
-    return F.unix_timestamp(F.col(col))

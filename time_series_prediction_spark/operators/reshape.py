@@ -1,4 +1,4 @@
-"""Wide ⇄ long reshaping for time series.
+"""Long → wide reshaping for time series.
 
 The reference stores one row per series with the whole daily series in
 an ``array<float>`` column plus a shared ``array<date>`` axis
@@ -6,54 +6,19 @@ an ``array<float>`` column plus a shared ``array<date>`` axis
 layout is ideal for model I/O (one training example per row) but
 hostile to Catalyst: every per-series transform becomes an opaque UDF.
 
-The engine keeps BOTH layouts first-class:
+The flagship queries read daily observations in long form
+(series_id, ds: date, value: double) — one row per observation — and
+collapse them into that wide form to feed the array pipeline:
+(series_id, transactiondate: array<date>, balance: array<float>).
 
-* wide:  (series_id, transactiondate: array<date>, balance: array<float>, ...)
-* long:  (series_id, ds: date, value: double) — one row per observation
-
-Long form makes trend / gradient / slicing classic Window operators
-(JVM-side, whole-stage-codegen'd); wide form feeds batch model scoring.
-
-Scale note: ``posexplode`` multiplies rows by series length (487×) but
-keeps them partition-local — no shuffle. The reverse direction groups
-by series id: one shuffle, which AQE sizes. At 100 TB, partition the
-long table by a date bucket so scans prune, and sort within series for
-sort-merge-free window evaluation.
+Scale note: the collapse groups by series id: one shuffle, which AQE
+sizes.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def wide_to_long(
-    df: DataFrame,
-    id_col: str = "primaryaccountholder",
-    date_col: str = "transactiondate",
-    value_col: str = "balance",
-    out_ds: str = "ds",
-    out_value: str = "value",
-    keep_cols: list[str] | None = None,
-) -> DataFrame:
-    """Explode (id, array<date>, array<float>) → (id, ds, value, pos).
-
-    Uses ``posexplode(arrays_zip(...))`` so date and value stay aligned
-    by position; ``pos`` is retained for order-sensitive ops.
-    """
-    keep = [F.col(c) for c in (keep_cols or [])]
-    zipped = F.arrays_zip(F.col(date_col), F.col(value_col))
-    return df.select(
-        F.col(id_col),
-        *keep,
-        F.posexplode(zipped).alias("pos", "_z"),
-    ).select(
-        F.col(id_col),
-        *[F.col(c) for c in (keep_cols or [])],
-        F.col("pos"),
-        F.col(f"_z.{date_col}").alias(out_ds),
-        F.col(f"_z.{value_col}").cast("double").alias(out_value),
-    )
 
 
 def long_to_wide(

@@ -171,37 +171,6 @@ def cosine_topk(
     )
 
 
-def lsh_bucket(
-    vec_col: str, n_planes: int = 12, seed: int = 42, dim: int = 64
-) -> Column:
-    """Random-hyperplane LSH bucket id (bigint of n_planes sign bits).
-
-    Plane components are generated driver-side from the seed (numpy
-    PCG64 — identical on every run/cluster) and embedded as a LITERAL
-    nested array, so the per-row work is n_planes·dim multiply-adds in
-    codegen — no hashing or transcendentals in the inner loop, and no
-    model state to ship: the literal travels inside the plan."""
-    import numpy as np
-
-    planes = np.random.default_rng(seed).standard_normal((n_planes, dim))
-    lit = (
-        "array("
-        + ", ".join(
-            "array(" + ", ".join(f"{float(v)!r}D" for v in row) + ")" for row in planes
-        )
-        + ")"
-    )
-    proj = (
-        f"aggregate(sequence(0, {dim - 1}), 0D, "
-        f"(acc, i) -> acc + CAST({vec_col}[i] AS DOUBLE) * _pl[p][i])"
-    )
-    return F.expr(
-        f"transform(array({lit}), _pl -> "
-        f"aggregate(sequence(0, {n_planes - 1}), 0L, (acc, p) -> "
-        f"acc + CASE WHEN {proj} > 0D THEN shiftleft(1L, p) ELSE 0L END))[0]"
-    )
-
-
 def lsh_table_buckets(
     n_planes: int, n_tables: int, seed: int = 42
 ) -> Column:
@@ -213,8 +182,7 @@ def lsh_table_buckets(
     dense projections are BLAS work — the Arrow batch + matmul path is
     ~1000× the throughput of interpreted array-lambda folds, and the
     planes are regenerated from the seed inside each worker (no model
-    state shipped). Table t's planes use rng(seed + 1000·t), identical
-    to ``lsh_bucket``'s, so the two implementations bucket identically.
+    state shipped). Table t's planes use rng(seed + 1000·t).
     """
     @pandas_udf("array<bigint>")
     def _buckets(vecs: pd.Series) -> pd.Series:
@@ -307,9 +275,9 @@ from time_series_prediction_spark.session_memo import session_memo
 _CENTROID_CACHE: dict[tuple, np.ndarray] = session_memo({})
 
 # Hash-ordered training-sample cache: the seeded TakeOrdered sample is
-# the same for every trainer over the same corpus (IVF centroids and
-# PQ codebooks both init from its head), so one session fetches it
-# once. ≤ n_sample × dim float64 — a few MB.
+# the same for every training run over the same corpus, whatever its
+# n_cells or n_iters, so one session fetches it once. ≤ n_sample × dim
+# float64 — a few MB.
 _TRAIN_SAMPLE_CACHE: dict[tuple, np.ndarray] = session_memo({})
 
 
@@ -372,7 +340,7 @@ def ivf_centroids(
       job per iteration).
     * ``train_sample=N`` — the N smallest-seeded-hash vectors
       (``_hash_ordered_sample``: one TakeOrdered job, shared across
-      trainers per session) iterate in numpy on the driver: training
+      training runs per session) iterate in numpy on the driver: training
       cost constant in corpus size, zero cluster jobs per iteration.
       Same Lloyd semantics as the distributed path (cosine
       assignment, ties → lowest cell, raw-vector means, empty cells
@@ -497,14 +465,19 @@ def _centroid_partials(df: DataFrame, centroids: np.ndarray) -> DataFrame:
     )
 
 
+def _unit_centroid_mat(centroids: np.ndarray) -> np.ndarray:
+    """dim x cells unit-normalized centroid matrix (cosine projection)."""
+    norms = np.linalg.norm(centroids, axis=1)
+    norms[norms == 0] = 1.0
+    return (centroids / norms[:, None]).T
+
+
 def nearest_cells_udf(centroids: np.ndarray, nprobe: int = 1):
     """pandas_udf: array<float> vector → array<int> of the nprobe
     nearest centroid ids by cosine (ties broken by cell id). Dense
     matmul against a closure-captured centroid matrix — the Python
     exception earned by measurement (see lsh_table_buckets)."""
-    norms = np.linalg.norm(centroids, axis=1)
-    norms[norms == 0] = 1.0
-    unit = (centroids / norms[:, None]).T  # dim × cells
+    unit = _unit_centroid_mat(centroids)
     np_probe = min(nprobe, len(centroids))
 
     @pandas_udf("array<int>")
@@ -575,588 +548,5 @@ def ivf_ann_topk(
             "corpus_id",
             "cosine",
             F.col("rank").cast("int").alias("rank"),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# Product quantization (IVF-PQ's compression half)
-# ---------------------------------------------------------------------------
-#
-# PQ splits each (unit-normalized) vector into n_sub contiguous
-# subspaces and vector-quantizes each subspace against its own small
-# codebook; a vector compresses to n_sub small integers. Query scoring
-# is ADC (asymmetric distance computation): per query, a lookup table
-# of query-subvector · sub-centroid partial inner products; a corpus
-# vector's approximate score is the sum of n_sub table lookups — no
-# float vector ever touched at scan time. This is the standard
-# billion-vector design (IVF-PQ): the corpus side stores codes
-# (n_sub bytes instead of dim floats) and the scan is integer indexing.
-
-_PQ_CODEBOOK_CACHE: dict[tuple, np.ndarray] = session_memo({})
-
-
-def _residualize(matn: np.ndarray, centroids: np.ndarray) -> np.ndarray:
-    """Residuals of unit-normalized vectors to their nearest (cosine,
-    ties → lowest id) UNIT coarse centroid — the quantity IVF-PQ
-    encodes. Matches pq_encode_cells_udf's cell assignment exactly."""
-    unit = _unit_centroid_mat(centroids)
-    cos = matn @ unit
-    order = np.lexsort(
-        (np.arange(cos.shape[1])[None, :].repeat(len(matn), 0), -cos), axis=1
-    )
-    return matn - unit.T[order[:, 0]]
-
-
-def pq_codebooks(
-    corpus: DataFrame,
-    n_sub: int = 16,
-    n_codes: int = 32,
-    n_iters: int = 3,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    seed: int = 42,
-    cache_key: str | None = None,
-    train_sample: int | None = None,
-    centroids: np.ndarray | None = None,
-) -> np.ndarray:
-    """Train PQ codebooks: (n_sub, n_codes, sub_dim) sub-centroids via
-    per-subspace Lloyd on UNIT-NORMALIZED vectors (so summed partial
-    inner products approximate cosine).
-
-    Two training paths, same Lloyd semantics (Euclidean assignment,
-    ties → lowest code; empty cells keep their old sub-centroid):
-
-    * ``train_sample=None`` — fully distributed: all subspaces train
-      in the SAME fused mapInPandas pass per iteration (one corpus
-      scan trains every codebook); partitions emit bounded
-      (subspace, cell, part_id, n, sums) partials, merged driver-side
-      in sorted order so float summation is reproducible.
-    * ``train_sample=N`` — the standard quantizer-training design at
-      scale (a PQ codebook needs thousands of examples, not the
-      corpus): the N corpus vectors with the smallest seeded hash — a
-      reproducible pseudo-random sample, fetched with ONE TakeOrdered
-      job (map-side partial top-N, no full sort) — train in numpy on
-      the driver. Training cost becomes constant in corpus size; the
-      distributed work is encoding and scanning, where the data is.
-
-    Init mirrors ivf_centroids: the n_codes seeded-hash-smallest
-    vectors seed every subspace's codebook (identical in both paths —
-    they are the first n_codes rows of the hash-ordered sample).
-
-    With ``centroids`` given, codebooks are trained on RESIDUALS to
-    the nearest coarse centroid (standard IVF-PQ, Jégou et al. 2011):
-    residual magnitudes are much smaller than raw coordinates, so the
-    same code budget quantizes finer — better recall at identical code
-    size. The caller must then encode/score residuals too
-    (pq_adc_candidates residual mode)."""
-    # the memo must identify WHICH coarse centroids residuals were
-    # trained against, not merely that residual mode was on — otherwise
-    # codebooks trained for one quantizer are silently served for
-    # another and ADC scores are wrong with no error
-    import hashlib as _hashlib
-
-    cent_id = (
-        None
-        if centroids is None
-        else (
-            centroids.shape,
-            _hashlib.md5(np.ascontiguousarray(centroids).tobytes()).hexdigest(),
-        )
-    )
-    memo = (
-        (
-            cache_key, n_sub, n_codes, n_iters, vec_col, id_col, seed,
-            train_sample, cent_id,
-        )
-        if cache_key is not None
-        else None
-    )
-    if memo is not None and memo in _PQ_CODEBOOK_CACHE:
-        return _PQ_CODEBOOK_CACHE[memo]
-    df = corpus.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
-    if train_sample is not None:
-        if train_sample < n_codes:
-            raise ValueError(f"train_sample {train_sample} < n_codes {n_codes}")
-        mat = _hash_ordered_sample(df, train_sample, seed, cache_key)
-        vn = np.linalg.norm(mat, axis=1)
-        vn[vn == 0] = 1.0
-        mat = mat / vn[:, None]
-        if centroids is not None:
-            mat = _residualize(mat, centroids)
-        books = _pq_books_init(mat[:n_codes], n_sub)
-        sub_dim = books.shape[2]
-        for _ in range(n_iters):
-            new = books.copy()
-            for m in range(n_sub):
-                sub = mat[:, m * sub_dim : (m + 1) * sub_dim]
-                d2 = ((sub[:, None, :] - books[m][None, :, :]) ** 2).sum(axis=2)
-                cell = np.argmin(d2, axis=1)
-                counts = np.bincount(cell, minlength=n_codes)
-                sums = np.zeros((n_codes, sub_dim))
-                np.add.at(sums, cell, sub)
-                live = counts > 0
-                new[m][live] = sums[live] / counts[live, None]
-            books = new
-        if memo is not None:
-            _PQ_CODEBOOK_CACHE[memo] = books
-        return books
-    df = df.cache()
-    init_rows = (
-        df.orderBy(F.xxhash64("_id", F.lit(seed)), "_id")
-        .limit(n_codes)
-        .select("_v")
-        .collect()
-    )
-    init = np.asarray([np.asarray(r["_v"], dtype=np.float64) for r in init_rows])
-    vn = np.linalg.norm(init, axis=1)
-    vn[vn == 0] = 1.0
-    init = init / vn[:, None]
-    if centroids is not None:
-        init = _residualize(init, centroids)
-    books = _pq_books_init(init, n_sub)
-
-    for _ in range(n_iters):
-        stats = _pq_partials(df, books, centroids).collect()
-        sums = np.zeros_like(books)
-        counts = np.zeros((n_sub, n_codes))
-        for r in sorted(stats, key=lambda r: (r["sub"], r["cell"], r["part_id"])):
-            sums[r["sub"], r["cell"]] += np.asarray(r["sums"], dtype=np.float64)
-            counts[r["sub"], r["cell"]] += r["n"]
-        nonempty = counts > 0
-        new = books.copy()  # empty cells keep their old sub-centroid
-        new[nonempty] = sums[nonempty] / counts[nonempty][:, None]
-        books = new
-    df.unpersist()
-    if memo is not None:
-        _PQ_CODEBOOK_CACHE[memo] = books
-    return books
-
-
-def _pq_books_init(init_unit: np.ndarray, n_sub: int) -> np.ndarray:
-    """(n_codes, dim) unit-normalized init vectors → (n_sub, n_codes,
-    sub_dim) initial codebooks (each subspace seeded by its slice)."""
-    dim = init_unit.shape[1]
-    if dim % n_sub:
-        raise ValueError(f"dim {dim} not divisible by n_sub {n_sub}")
-    sub_dim = dim // n_sub
-    return np.stack(
-        [init_unit[:, m * sub_dim : (m + 1) * sub_dim] for m in range(n_sub)]
-    )
-
-
-def _pq_partials(
-    df: DataFrame, books: np.ndarray, centroids: np.ndarray | None = None
-) -> DataFrame:
-    """One fused PQ-Lloyd scan: per partition, assign every vector's
-    n_sub sub-vectors to their nearest sub-centroids (Euclidean,
-    ties → lowest code, matching pq_encode_udf) and emit per-(sub,
-    cell) partial sums. ≤ partitions · n_sub · n_codes output rows.
-    With ``centroids``, trains on coarse-centroid residuals."""
-    n_sub, n_codes, sub_dim = books.shape
-
-    def part(batches):
-        from pyspark import TaskContext
-
-        sums = np.zeros((n_sub, n_codes, sub_dim))
-        counts = np.zeros((n_sub, n_codes), dtype=np.int64)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            mat = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf["_v"]]
-            )
-            vn = np.linalg.norm(mat, axis=1)
-            vn[vn == 0] = 1.0
-            mat = mat / vn[:, None]
-            if centroids is not None:
-                mat = _residualize(mat, centroids)
-            for m in range(n_sub):
-                sub = mat[:, m * sub_dim : (m + 1) * sub_dim]
-                # B × n_codes squared distances; argmin ties → lowest code
-                d2 = ((sub[:, None, :] - books[m][None, :, :]) ** 2).sum(axis=2)
-                cell = np.argmin(d2, axis=1)
-                np.add.at(sums[m], cell, sub)
-                counts[m] += np.bincount(cell, minlength=n_codes)
-        pid = TaskContext.get().partitionId()
-        subs, cells = np.nonzero(counts)
-        yield pd.DataFrame(
-            {
-                "sub": pd.Series(subs, dtype="int32"),
-                "cell": pd.Series(cells, dtype="int32"),
-                "part_id": pd.Series([pid] * len(subs), dtype="int32"),
-                "n": pd.Series(counts[subs, cells], dtype="int64"),
-                "sums": [list(map(float, sums[s, c])) for s, c in zip(subs, cells)],
-            }
-        )
-
-    return df.select("_v").mapInPandas(
-        part, schema="sub int, cell int, part_id int, n long, sums array<double>"
-    )
-
-
-def pq_encode_udf(books: np.ndarray):
-    """pandas_udf: array<float> vector → array<int> of n_sub code ids
-    (nearest sub-centroid per subspace, on the unit-normalized vector).
-    The corpus compresses to n_sub small ints per row — the storage
-    format an IVF-PQ index scans."""
-    n_sub, n_codes, sub_dim = books.shape
-
-    @pandas_udf("array<int>")
-    def _encode(vecs: pd.Series) -> pd.Series:
-        if len(vecs) == 0:
-            return pd.Series([], dtype=object)
-        mat = np.asarray([np.asarray(v, dtype=np.float64) for v in vecs])
-        vn = np.linalg.norm(mat, axis=1)
-        vn[vn == 0] = 1.0
-        mat = mat / vn[:, None]
-        codes = np.empty((len(mat), n_sub), dtype=np.int32)
-        for m in range(n_sub):
-            sub = mat[:, m * sub_dim : (m + 1) * sub_dim]
-            d2 = ((sub[:, None, :] - books[m][None, :, :]) ** 2).sum(axis=2)
-            codes[:, m] = np.argmin(d2, axis=1)
-        return pd.Series(list(codes))
-
-    return _encode
-
-
-def pq_lut_udf(books: np.ndarray):
-    """pandas_udf: query vector → ADC lookup table as
-    array<array<double>> (n_sub rows of n_codes partial inner
-    products of the unit-normalized query sub-vector with each
-    sub-centroid)."""
-    n_sub, n_codes, sub_dim = books.shape
-
-    @pandas_udf("array<array<double>>")
-    def _lut(vecs: pd.Series) -> pd.Series:
-        if len(vecs) == 0:
-            return pd.Series([], dtype=object)
-        mat = np.asarray([np.asarray(v, dtype=np.float64) for v in vecs])
-        vn = np.linalg.norm(mat, axis=1)
-        vn[vn == 0] = 1.0
-        mat = mat / vn[:, None]
-        out = []
-        for row in mat:
-            tab = [
-                list(
-                    map(
-                        float,
-                        books[m] @ row[m * sub_dim : (m + 1) * sub_dim],
-                    )
-                )
-                for m in range(n_sub)
-            ]
-            out.append(tab)
-        return pd.Series(out)
-
-    return _lut
-
-
-def _unit_centroid_mat(centroids: np.ndarray) -> np.ndarray:
-    """dim x cells unit-normalized centroid matrix (cosine projection)."""
-    norms = np.linalg.norm(centroids, axis=1)
-    norms[norms == 0] = 1.0
-    return (centroids / norms[:, None]).T
-
-
-def pq_encode_cells_udf(
-    books: np.ndarray, centroids: np.ndarray, residual: bool = False
-):
-    """Fused corpus-side UDF: vector → struct(code: array<int>,
-    cell: int) — PQ codes AND the IVF cell in ONE Arrow pass. The
-    vectors are the expensive thing to move into Python; computing
-    both outputs per batch halves the corpus-side UDF stages vs
-    separate encode + assign passes (measured 1.7 s → 0.8 s at
-    sf0.1). Cell assignment reproduces nearest_cells_udf exactly
-    (cosine, ties → lowest cell id); codes reproduce pq_encode_udf.
-
-    ``residual=True`` (standard IVF-PQ) encodes the vector's residual
-    to its assigned UNIT centroid instead of the raw subvectors —
-    requires residual-trained ``books`` (pq_codebooks with
-    centroids)."""
-    n_sub, n_codes, sub_dim = books.shape
-    unit = _unit_centroid_mat(centroids)
-
-    @pandas_udf("struct<code: array<int>, cell: int>")
-    def _enc(vecs: pd.Series) -> pd.DataFrame:
-        if len(vecs) == 0:
-            return pd.DataFrame({"code": [], "cell": []})
-        mat = np.asarray([np.asarray(v, dtype=np.float64) for v in vecs])
-        vn = np.linalg.norm(mat, axis=1)
-        vn[vn == 0] = 1.0
-        matn = mat / vn[:, None]
-        cos = matn @ unit
-        order = np.lexsort(
-            (np.arange(cos.shape[1])[None, :].repeat(len(mat), 0), -cos),
-            axis=1,
-        )
-        enc = matn - unit.T[order[:, 0]] if residual else matn
-        codes = np.empty((len(mat), n_sub), dtype=np.int32)
-        for m in range(n_sub):
-            sub = enc[:, m * sub_dim : (m + 1) * sub_dim]
-            d2 = ((sub[:, None, :] - books[m][None, :, :]) ** 2).sum(axis=2)
-            codes[:, m] = np.argmin(d2, axis=1)
-        return pd.DataFrame(
-            {"code": list(codes), "cell": order[:, 0].astype(np.int32)}
-        )
-
-    return _enc
-
-
-def pq_lut_cells_udf(books: np.ndarray, centroids: np.ndarray, nprobe: int):
-    """Fused query-side UDF: vector → struct(lut: array<array<double>>,
-    cells: array<int>, biases: array<double>) — the ADC lookup table,
-    the nprobe probed cells, AND the per-cell score bias q·centroid in
-    one Arrow pass (same fusion rationale as pq_encode_cells_udf).
-
-    The bias is what residual scoring needs: with x ≈ cent_c + r̂,
-    q·x ≈ q·cent_c + Σ_m lut[m][code_m]. Raw (non-residual) scoring
-    simply ignores the biases column — the LUT itself is identical in
-    both modes (books @ query subvectors)."""
-    n_sub, n_codes, sub_dim = books.shape
-    unit = _unit_centroid_mat(centroids)
-    np_probe = min(nprobe, len(centroids))
-
-    @pandas_udf(
-        "struct<lut: array<array<double>>, cells: array<int>, "
-        "biases: array<double>>"
-    )
-    def _lut(vecs: pd.Series) -> pd.DataFrame:
-        if len(vecs) == 0:
-            return pd.DataFrame({"lut": [], "cells": [], "biases": []})
-        mat = np.asarray([np.asarray(v, dtype=np.float64) for v in vecs])
-        vn = np.linalg.norm(mat, axis=1)
-        vn[vn == 0] = 1.0
-        matn = mat / vn[:, None]
-        luts = [
-            [
-                list(map(float, books[m] @ row[m * sub_dim : (m + 1) * sub_dim]))
-                for m in range(n_sub)
-            ]
-            for row in matn
-        ]
-        cos = matn @ unit
-        order = np.lexsort(
-            (np.arange(cos.shape[1])[None, :].repeat(len(mat), 0), -cos),
-            axis=1,
-        )
-        probed = order[:, :np_probe]
-        biases = np.take_along_axis(cos, probed, axis=1)
-        return pd.DataFrame(
-            {
-                "lut": luts,
-                "cells": list(probed.astype(np.int32)),
-                "biases": [list(map(float, b)) for b in biases],
-            }
-        )
-
-    return _lut
-
-
-def pq_adc_candidates(
-    corpus: DataFrame,
-    queries: DataFrame,
-    books: np.ndarray,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    centroids: np.ndarray | None = None,
-    nprobe: int = 4,
-    residual: bool = False,
-) -> DataFrame:
-    """ADC-scored candidate pairs (query_id, corpus_id, adc_score).
-
-    Flat mode (``centroids`` None): every query scores every corpus
-    code — a broadcast join over the code column only. IVF mode:
-    corpus codes are bucketed by nearest coarse centroid (one fused
-    Arrow pass computes codes + cell) and each query probes its
-    ``nprobe`` nearest cells, so the ADC scan touches
-    ~nprobe/n_cells of the code table per query instead of all of it —
-    the join is an equi-join on cell id (BroadcastHashJoin, never a
-    nested loop). Factored out of ``pq_ann_topk`` so tests can pin the
-    candidate count (the flat-scan property) directly."""
-    # ADC: sum of one table lookup per subspace — pure codegen
-    score = F.expr(
-        "aggregate(zip_with(code, lut, (cd, row) -> row[cd]), 0D, (a, v) -> a + v)"
-    )
-    if residual and centroids is None:
-        raise ValueError("residual ADC requires coarse centroids")
-    if centroids is None:
-        c = corpus.select(
-            F.col(id_col).alias("corpus_id"),
-            pq_encode_udf(books)(F.col(vec_col)).alias("code"),
-        )
-        q = queries.select(
-            F.col(id_col).alias("query_id"),
-            pq_lut_udf(books)(F.col(vec_col)).alias("lut"),
-        )
-        return c.join(
-            F.broadcast(q), F.col("corpus_id") != F.col("query_id")
-        ).select("query_id", "corpus_id", score.alias("adc_score"))
-    c = corpus.select(
-        F.col(id_col).alias("corpus_id"),
-        pq_encode_cells_udf(books, centroids, residual=residual)(
-            F.col(vec_col)
-        ).alias("_s"),
-    ).select("corpus_id", F.col("_s.code").alias("code"), F.col("_s.cell").alias("cell"))
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        pq_lut_cells_udf(books, centroids, nprobe)(F.col(vec_col)).alias("_s"),
-    ).select(
-        "query_id",
-        F.col("_s.lut").alias("lut"),
-        F.explode(
-            F.arrays_zip(F.col("_s.cells").alias("cell"), F.col("_s.biases").alias("bias"))
-        ).alias("_cb"),
-    ).select(
-        "query_id",
-        "lut",
-        F.col("_cb.cell").alias("cell"),
-        F.col("_cb.bias").alias("bias"),
-    )
-    final_score = (F.col("bias") + score) if residual else score
-    return (
-        c.join(F.broadcast(q), ["cell"])
-        .where(F.col("corpus_id") != F.col("query_id"))
-        .select("query_id", "corpus_id", final_score.alias("adc_score"))
-    )
-
-
-def pq_ann_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    n_sub: int = 16,
-    n_codes: int = 32,
-    n_iters: int = 3,
-    seed: int = 42,
-    books: np.ndarray | None = None,
-    cache_key: str | None = None,
-    rerank: int = 0,
-    n_cells: int | None = None,
-    nprobe: int = 4,
-    ivf_iters: int = 2,
-    centroids: np.ndarray | None = None,
-    train_sample: int | None = None,
-    residual: bool = False,
-) -> DataFrame:
-    """PQ-compressed approximate top-k by ADC scan, optionally refined
-    by an exact re-rank of the ADC shortlist (``rerank`` = oversample
-    factor; 0 = pure ADC scores).
-
-    Scale shape: the corpus side is ONE encode pass, then every scan
-    touches only the n_sub-int code column — at a billion vectors the
-    working set shrinks dim·4 / n_sub ≈ 16x (and the float vectors
-    are never read again). Queries broadcast with their lookup
-    tables; the score is a NATIVE zip_with/aggregate expression over
-    the code array (codegen — no Python in the scan), so the join
-    output never materializes any vector. The refine stage (the
-    standard IVF-PQ design) re-reads true vectors for only
-    k·rerank rows per query — an equi-join on the shortlist ids, cost
-    independent of corpus size. Recall is pinned in tests against
-    cosine_topk.
-
-    Pass ``n_cells`` (or pre-trained ``centroids``) to compose with
-    the IVF coarse quantizer — full IVF-PQ: the code table is bucketed
-    by nearest centroid (reusing ``ivf_centroids``, so a session that
-    already trained IVF pays nothing extra) and each query ADC-scores
-    only its ``nprobe`` probed cells. That caps the scanned candidates
-    at ~corpus·nprobe/n_cells per query — the flat-ADC full scan is
-    gone, which is what survives a billion-vector corpus. nprobe =
-    n_cells degenerates to the flat scan (pinned in tests).
-
-    ``residual=True`` (standard IVF-PQ; requires the coarse quantizer)
-    trains the codebooks on coarse-centroid residuals and scores
-    q·cent_c + ADC(residual) — better recall at identical code size,
-    since residual magnitudes are far smaller than raw coordinates."""
-    if residual and n_cells is None and centroids is None:
-        raise ValueError("residual PQ requires n_cells or centroids")
-    if centroids is None and n_cells is not None:
-        centroids = ivf_centroids(
-            corpus, n_cells=n_cells, n_iters=ivf_iters,
-            vec_col=vec_col, id_col=id_col, seed=seed, cache_key=cache_key,
-            train_sample=train_sample,
-        )
-    if books is None:
-        books = pq_codebooks(
-            corpus, n_sub=n_sub, n_codes=n_codes, n_iters=n_iters,
-            vec_col=vec_col, id_col=id_col, seed=seed, cache_key=cache_key,
-            train_sample=train_sample,
-            centroids=centroids if residual else None,
-        )
-    scored = pq_adc_candidates(
-        corpus, queries, books,
-        vec_col=vec_col, id_col=id_col,
-        centroids=centroids, nprobe=nprobe, residual=residual,
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("adc_score"), F.asc("corpus_id")
-    )
-    shortlist_k = k * rerank if rerank else k
-    shortlist = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= shortlist_k)
-    )
-    if not rerank:
-        return shortlist.select(
-            "query_id",
-            "corpus_id",
-            "adc_score",
-            F.col("rank").cast("int").alias("rank"),
-        )
-    cvec = corpus.select(
-        F.col(id_col).alias("corpus_id"), quantize(vec_col).alias("cvec")
-    )
-    qvec = queries.select(
-        F.col(id_col).alias("query_id"), quantize(vec_col).alias("qvec")
-    )
-    refined = (
-        shortlist.select("query_id", "corpus_id")
-        .join(cvec, "corpus_id")
-        .join(F.broadcast(qvec), "query_id")
-        .select(
-            "query_id", "corpus_id", cosine_expr("qvec", "cvec").alias("cosine")
-        )
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("corpus_id")
-    )
-    return (
-        refined.withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "corpus_id",
-            "cosine",
-            F.col("rank").cast("int").alias("rank"),
-        )
-    )
-
-
-def centroids_by_label(
-    df: DataFrame, vec_col: str = "embedding", label_col: str = "label"
-) -> DataFrame:
-    """Per-label mean embedding from exact quantized integer sums
-    (deterministic elementwise average)."""
-    dim_df = df.select(
-        F.col(label_col),
-        F.posexplode(quantize(vec_col)).alias("dim", "q"),
-    )
-    per_dim = dim_df.groupBy(label_col, "dim").agg(
-        F.sum("q").alias("s"), F.count(F.lit(1)).alias("n")
-    )
-    return (
-        per_dim.groupBy(label_col)
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("dim"), F.col("s"), F.col("n")))
-            ).alias("_parts")
-        )
-        .select(
-            label_col,
-            F.expr(
-                f"transform(_parts, p -> CAST(p.s AS DOUBLE) / p.n / {_SCALE})"
-            ).alias("centroid"),
         )
     )

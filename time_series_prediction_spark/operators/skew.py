@@ -43,47 +43,3 @@ def salted_sum_count(
     return phase1.groupBy(*key_cols).agg(
         F.sum("_ps").alias(sum_alias), F.sum("_pc").cast("bigint").alias(count_alias)
     )
-
-
-def salted_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: list[str],
-    n_salts: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Skew-resistant equi join: the big/skewed ``left`` gets a salt in
-    [0, n_salts); the smaller ``right`` is replicated n_salts× (explode
-    of a literal sequence) so every (key, salt) pair still meets its
-    match. A hot key's rows now spread over n_salts shuffle partitions
-    instead of one straggler task.
-
-    This is the manual form of AQE's skew-join splitting — kept
-    explicit for engines/configs where AQE can't apply (e.g. the hot
-    side feeds a window) and asserted bit-identical to the plain join
-    in tests. The salt is derived deterministically from the left
-    row's full content (xxhash64), but ANY salt assignment yields the
-    same join result — determinism here only aids debugging.
-
-    Cost model: replication multiplies the right side's shuffle volume
-    by n_salts — use when |right| ≪ |left| but right is too big (or
-    too skew-matched) to broadcast outright.
-
-    ``how`` is restricted to left-preserving joins: with the right side
-    replicated n_salts×, a right/full outer join would emit every
-    UNMATCHED right row n_salts times, diverging from the plain join.
-    """
-    allowed = {"inner", "left", "left_outer", "leftouter", "left_semi",
-               "leftsemi", "semi", "left_anti", "leftanti", "anti"}
-    if how not in allowed:
-        raise ValueError(
-            f"salted_join: how={how!r} unsupported — the replicated right "
-            f"side duplicates unmatched right rows under right/full outer "
-            f"joins; use one of {sorted(allowed)}"
-        )
-    salt = F.pmod(F.xxhash64(*[F.col(c) for c in left.columns]), F.lit(n_salts))
-    l_salted = left.withColumn("_salt", salt)
-    r_salted = right.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
-    )
-    return l_salted.join(r_salted, on + ["_salt"], how).drop("_salt")

@@ -31,11 +31,6 @@ LANG_MARKERS: dict[str, str] = {
 }
 
 
-def tokens(text: str = "text") -> Column:
-    """Whitespace tokenization (single-space delimited corpora)."""
-    return F.split(F.col(text), " ")
-
-
 def token_count(text: str = "text") -> Column:
     return F.expr(f"size(split({text}, ' '))")
 

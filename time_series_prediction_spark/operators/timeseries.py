@@ -74,12 +74,6 @@ def _nanmedian(arr: str) -> str:
     return _let(f"array_sort(filter({arr}, v -> NOT isnan(v)))", "_s", body)
 
 
-def _nanmean(arr: str) -> str:
-    return _let(
-        f"filter({arr}, v -> NOT isnan(v))", "_f", f"({_sum('_f')} / size(_f))"
-    )
-
-
 # ---------------------------------------------------------------------------
 # W1: trend (seasonal-decompose moving average + edge extrapolation)
 # ---------------------------------------------------------------------------
@@ -220,22 +214,39 @@ def rescaling(x: str, mean: str = "mean", std: str = "std") -> Column:
 # ---------------------------------------------------------------------------
 
 
+def _require_length(x: str, n: int, what: str, body: str) -> str:
+    """``body`` for series of at least ``n`` elements, else fail the
+    job naming the length. A negative ``slice`` start counts from the
+    end, so a short series would otherwise yield a wrong window (X
+    overlapping y), an empty one, or an opaque START error."""
+    return (
+        f"CASE WHEN size({x}) < {n} THEN raise_error(concat("
+        f"'{what} needs a series of at least {n} elements, got ', "
+        f"CAST(size({x}) AS STRING))) ELSE {body} END"
+    )
+
+
 def get_x(x: str, x_days: int = 365, y_days: int = 92) -> Column:
     """W6: history slice ``x[-X-y : -y]``, bround 3
-    (reference ``notebooks/utils.py:320-331``)."""
-    return F.expr(
-        f"transform(slice({x}, size({x}) - {x_days + y_days} + 1, {x_days}), "
-        f"v -> CAST(bround(CAST(v AS DOUBLE), 3) AS FLOAT))"
-    )
+    (reference ``notebooks/utils.py:320-331``). A series shorter than
+    ``x_days + y_days`` fails the job."""
+    n = x_days + y_days
+    return F.expr(_require_length(
+        x, n, f"get_x (x_days {x_days} + y_days {y_days})",
+        f"transform(slice({x}, size({x}) - {n} + 1, {x_days}), "
+        f"v -> CAST(bround(CAST(v AS DOUBLE), 3) AS FLOAT))",
+    ))
 
 
 def get_y(x: str, y_days: int = 92) -> Column:
     """W7: label slice ``x[-y:]``, bround 3
-    (reference ``notebooks/utils.py:334-344``)."""
-    return F.expr(
+    (reference ``notebooks/utils.py:334-344``). A series shorter than
+    ``y_days`` fails the job."""
+    return F.expr(_require_length(
+        x, y_days, f"get_y (y_days {y_days})",
         f"transform(slice({x}, size({x}) - {y_days} + 1, {y_days}), "
-        f"v -> CAST(bround(CAST(v AS DOUBLE), 3) AS FLOAT))"
-    )
+        f"v -> CAST(bround(CAST(v AS DOUBLE), 3) AS FLOAT))",
+    ))
 
 
 # ---------------------------------------------------------------------------
@@ -268,14 +279,13 @@ def extrapolate_trend(
     trend_col: str,
     window_days: int = 183,
     horizon_days: int = 92,
-    median: bool = True,
     serving: bool = False,
 ) -> Column:
     """W9: linear trend extrapolation (reference ``notebooks/utils.py:347-382``).
 
-    slope = gradient(trend); aggregated slope = nanmedian (or nanmean)
-    of the last ``window+horizon`` slopes in train mode / last
-    ``window`` in serving; anchor = trend[-1-horizon] (train) or
+    slope = gradient(trend); aggregated slope = nanmedian of the last
+    ``window+horizon`` slopes in train mode / last ``window`` in
+    serving; anchor = trend[-1-horizon] (train) or
     trend[-1] (serve); then the day-by-day recurrence
     ``out[d] = slope + out[d-1]`` as a sequential fold (see module
     doc), bround 3, float32.
@@ -287,7 +297,7 @@ def extrapolate_trend(
         else f"size({trend_col}) - 1"
     )
     anchor = f"CAST({trend_col}[{anchor_idx}] AS DOUBLE)"
-    agg = _nanmedian("_last") if median else _nanmean("_last")
+    agg = _nanmedian("_last")
     fold = (
         f"aggregate(sequence(1, {horizon_days}), CAST(array() AS ARRAY<DOUBLE>), "
         f"(acc, d) -> concat(acc, array(_agg + coalesce(element_at(acc, -1), {anchor}))))"
@@ -305,9 +315,7 @@ def extrapolate_trend(
 # ---------------------------------------------------------------------------
 
 
-def trajectory(
-    trend_col: str, window_months: int = 6, median: bool = True
-) -> Column:
+def trajectory(trend_col: str, window_months: int = 6) -> Column:
     """W10: monthly trajectory metric (reference ``notebooks/utils.py:385-405``):
     ``round(nanmedian(gradient(trend)[-int(30.5*m):]) * 30.5, 3)`` as float.
 
@@ -316,7 +324,7 @@ def trajectory(
     float type.
     """
     n_days = int(30.5 * window_months)
-    agg = _nanmedian("_last") if median else _nanmean("_last")
+    agg = _nanmedian("_last")
     body = _let(
         f"slice(_g, greatest(size(_g) - {n_days} + 1, 1), {n_days})",
         "_last",

@@ -175,64 +175,3 @@ def write_zordered_partitioned(
         .partitionBy(*part_cols)
         .parquet(path)
     )
-
-
-def append_zordered(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    n_files: int = 8,
-    bits: int = 16,
-) -> None:
-    """Append ``df`` to an existing layout as NEW z-ordered files —
-    the lakehouse ingestion flow: history is never rewritten, the
-    batch arrives as its own ``n_files`` Morton-sorted files, and an
-    incremental ``update_manifest`` folds just their footers in.
-
-    The batch's ranks normalize over the BATCH's min/max (each append
-    clusters within itself, exactly like per-batch OPTIMIZE ZORDER in
-    Delta): stats pruning stays effective per file; cross-batch curve
-    overlap is the standard accumulating cost that periodic
-    re-optimization (a full ``write_zordered``) resets."""
-    ranked, code = zorder_code(df, cols, bits=bits)
-    ranked = ranked.withColumn("_zcode", code)
-    (
-        ranked.repartitionByRange(n_files, "_zcode")
-        .sortWithinPartitions("_zcode")
-        .drop("_zcode", *[f"_zr_{c}" for c in cols])
-        .write.mode("append")
-        .parquet(path)
-    )
-
-
-def rowgroup_pruning_fraction(
-    path: str, col: str, lo: float, hi: float
-) -> float:
-    """Fraction of parquet row groups whose [min, max] stats overlap
-    [lo, hi] for ``col`` — what a stats-pruning reader must scan.
-    Reads footers only (pyarrow), no data pages."""
-    import glob
-    import os
-
-    import pyarrow.parquet as pq
-
-    files = (
-        sorted(glob.glob(os.path.join(path, "*.parquet")))
-        if os.path.isdir(path)
-        else [path]
-    )
-    total = overlapping = 0
-    for f in files:
-        meta = pq.ParquetFile(f).metadata
-        idx = {
-            meta.row_group(0).column(i).path_in_schema: i
-            for i in range(meta.num_columns)
-        }[col]
-        for g in range(meta.num_row_groups):
-            st = meta.row_group(g).column(idx).statistics
-            total += 1
-            if st is None or st.min is None:
-                overlapping += 1  # no stats ⇒ must scan
-            elif not (st.max < lo or st.min > hi):
-                overlapping += 1
-    return overlapping / max(total, 1)

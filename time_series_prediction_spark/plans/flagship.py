@@ -55,7 +55,6 @@ def cashflow_wide_pipeline(
                 "trend",
                 window_days=trend_window_days,
                 horizon_days=horizon_days,
-                median=True,
                 serving=True,
             ),
         )
@@ -195,7 +194,6 @@ def cashflow_holdout_eval(
                 "trend",
                 window_days=trend_window_days,
                 horizon_days=h,
-                median=True,
                 serving=True,
             ),
         )

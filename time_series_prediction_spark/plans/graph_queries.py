@@ -260,8 +260,7 @@ def association_rules(
     (deterministic: frequency desc, item asc — the standard
     FP-growth-style "keep the heavy items" cut, which preserves the
     high-support pairs the min-support filter would keep anyway).
-    Only baskets over the cap pay the truncation join; count them
-    with ``count_truncated_baskets`` when auditing a feed."""
+    Only baskets over the cap pay the truncation join."""
     from time_series_prediction_spark.operators.materialize import (
         materialize,
     )
@@ -336,22 +335,6 @@ def association_rules(
     return scored.orderBy(
         F.desc("lift"), F.asc("x"), F.asc("y")
     ).limit(top_k)
-
-
-def count_truncated_baskets(
-    items: DataFrame,
-    basket_col: str,
-    item_col: str,
-    max_basket_width: int = 64,
-) -> int:
-    """How many baskets exceed the width cap (and so were truncated
-    by ``association_rules``) — the audit hook for a new feed."""
-    return (
-        items.groupBy(basket_col)
-        .agg(F.count_distinct(item_col).alias("w"))
-        .where(F.col("w") > max_basket_width)
-        .count()
-    )
 
 
 def basket_association_rules(

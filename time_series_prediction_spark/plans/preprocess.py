@@ -95,13 +95,12 @@ def pre_processing(
             "balance_trend_1MW",
             window_days=trend_window_days,
             horizon_days=y_days,
-            median=True,
             serving=serving,
         ),
     )
     if serving:
         out = out.withColumn(
-            "trajectory_6months", ts.trajectory("balance_trend_1MW", 6, True)
+            "trajectory_6months", ts.trajectory("balance_trend_1MW", 6)
         )
     return out
 

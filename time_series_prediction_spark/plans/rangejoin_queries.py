@@ -2,8 +2,10 @@
 
 Beyond-reference scope: the reference's only join is a 1-row crossJoin
 (SURVEY §2.3); these exercise the bucketed point-in-interval join
-(operators/rangejoin.py) and the IVF coarse-quantizer ANN
-(operators/similarity.ivf_ann_topk).
+(operators/rangejoin.py) and the IVF and IVF-PQ ANN on the
+exact-integer quantizer (operators/kmeans_exact.py). The float-trained
+IVF path, operators/similarity.ivf_ann_topk, stays the library surface
+for real embeddings.
 
 Determinism contract matches the other plan modules: money/value
 aggregates in exact integer cents; time predicates in exact integer
@@ -96,19 +98,13 @@ def embedding_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     in-cell cosine, per-query top-k) on the EXACT-integer quantizer
     (operators/kmeans_exact.py), so the 'iterative training is not
     SQL-expressible' barrier falls: the oracle replays training as
-    unrolled CTEs and the driver hash-checks the whole ANN answer.
-    The float-trained generic path (similarity.ivf_ann_topk) remains
-    the library surface for real embeddings; recall floors for it are
-    pinned in tests/test_rangejoin_ivf.py."""
+    unrolled CTEs and the driver hash-checks the whole ANN answer."""
     from time_series_prediction_spark.operators.kmeans_exact import (
         ivf_ann_exact,
     )
 
     emb = read_table(spark, sf_dir, "embeddings")
     return ivf_ann_exact(emb, k=5, nprobe=8, n_queries=10, cache_key=sf_dir)
-
-
-EMBEDDING_IVF_ANN_SQL: str | None = None  # built lazily below
 
 
 def embedding_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -122,10 +118,7 @@ def embedding_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-rank run on the EXACT-integer quantizer
     (operators/kmeans_exact.pq_ann_exact), so the oracle replays the
     whole pipeline as unrolled CTEs and the driver hash-checks it —
-    no rows-only waiver. The float-trained generic path
-    (similarity.pq_ann_topk, incl. residual encoding) remains the
-    library surface; its recall floors and candidate bounds are
-    pinned in tests/test_rangejoin_ivf.py."""
+    no rows-only waiver."""
     from time_series_prediction_spark.operators.kmeans_exact import (
         pq_ann_exact,
     )

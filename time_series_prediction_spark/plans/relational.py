@@ -554,8 +554,7 @@ GROUP BY p_brand, CAST(floor(p_size / 10) AS INTEGER)
 
 
 def events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hourly event aggregates (date_trunc bucketing — the batch twin of
-    the streaming windowed agg in streaming/events.py)."""
+    """Hourly event aggregates (date_trunc bucketing)."""
     ev = read_table(spark, sf_dir, "events")
     return (
         ev.groupBy(

@@ -62,6 +62,17 @@ def _assigned(
 
 
 def _prune_pairs_from(q: DataFrame, tau: float) -> DataFrame:
+    """(kept_id, pruned_id, cell, cosine) pairs: within each k-means
+    cell, every vector whose cosine to a SMALLER-id cellmate reaches
+    ``tau`` is pruned in favor of that cellmate (deterministic
+    keep-lowest-id policy — SemDeDup keeps one representative per
+    near-twin set; id order stands in for its 'keep the prototype'
+    choice and makes reruns reproducible).
+
+    Pairing is an equi-join on cell id over one materialized
+    assignment frame ``q`` (both join sides share its scan);
+    per-vector norms are precomputed so each candidate pair pays one
+    integer dot product."""
     dot = F.expr(
         "CAST(aggregate(zip_with(a.qv, b.qv, (x, y) -> x * y), 0L, "
         "(acc, v) -> acc + v) AS DOUBLE)"
@@ -81,27 +92,6 @@ def _prune_pairs_from(q: DataFrame, tau: float) -> DataFrame:
         )
         .where(F.col("cosine") >= tau)
     )
-
-
-def semantic_prune_pairs(
-    emb: DataFrame,
-    n_cells: int = _N_CELLS,
-    tau: float = _TAU,
-    cache_key: str | None = None,
-) -> DataFrame:
-    """(kept_id, pruned_id, cell, cosine) pairs: within each k-means
-    cell, every vector whose cosine to a SMALLER-id cellmate reaches
-    ``tau`` is pruned in favor of that cellmate (deterministic
-    keep-lowest-id policy — SemDeDup keeps one representative per
-    near-twin set; id order stands in for its 'keep the prototype'
-    choice and makes reruns reproducible).
-
-    Pairing is an equi-join on cell id over one materialized
-    assignment frame (both join sides share the scan+UDF work);
-    per-vector norms are precomputed so each candidate pair pays one
-    integer dot product.
-    """
-    return _prune_pairs_from(_assigned(emb, n_cells, cache_key), tau)
 
 
 def dedup_semantic_prune(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -66,7 +66,6 @@ TYPE_OVERLAP_SQL = portable_hll_overlap_sql("events", m=_HLL_M)
 _APPROX_DISTINCT_SPARK = portable_hll_daily_sql("_psk_events", m=_HLL_M)
 _DAU_ROLLUP_SPARK = portable_hll_daily_sql("_psk_events", m=_HLL_M, shard_mod=8)
 _QUANTILE_PORTABLE_SPARK = portable_quantile_sql("_psk_lineitem")
-_TYPE_OVERLAP_SPARK = portable_hll_overlap_sql("_psk_events", m=_HLL_M)
 
 
 def approx_distinct_users_daily(spark: SparkSession, sf_dir: str) -> DataFrame:

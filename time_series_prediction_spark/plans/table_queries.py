@@ -959,7 +959,7 @@ def orders_delta_dv_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scan through the deletion vectors: the two DV deletes must
     equal the oracle's plain WHERE over raw orders — no rewrite
     happened, only bitmap sidecars."""
-    from time_series_prediction_spark.sources.io import read_delta
+    from time_series_prediction_spark.sources.deltalog import read_delta
 
     data = orders_delta_dv_layout(spark, sf_dir)
     return (
@@ -1133,7 +1133,7 @@ def orders_delta_clone_scan(
         delta_clone,
         delta_delete,
     )
-    from time_series_prediction_spark.sources.io import read_delta
+    from time_series_prediction_spark.sources.deltalog import read_delta
 
     src_data = orders_delta_dv_layout(spark, sf_dir)
     root = os.path.join(tempfile.gettempdir(), "tsp_layouts")
@@ -1229,7 +1229,7 @@ def orders_delta_merge_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     deletion-vector-hidden, not rewritten), inserts appear, untouched
     rows survive; the key checksum pins row identity, not just
     counts."""
-    from time_series_prediction_spark.sources.io import read_delta
+    from time_series_prediction_spark.sources.deltalog import read_delta
 
     data = orders_delta_merge_layout(spark, sf_dir)
     return (
@@ -1271,7 +1271,7 @@ def orders_delta_restore_scan(
     """The RESTOREd head equals v0 exactly — the merge's DV hides and
     inserted files roll back in one commit while v1 stays readable
     (``orders_delta_merge_scan`` reads it from the same fixture)."""
-    from time_series_prediction_spark.sources.io import read_delta
+    from time_series_prediction_spark.sources.deltalog import read_delta
 
     data = orders_delta_merge_layout(spark, sf_dir)
     return (
@@ -1314,7 +1314,7 @@ def orders_delta_update_scan(
         delta_update,
         write_delta_log,
     )
-    from time_series_prediction_spark.sources.io import read_delta
+    from time_series_prediction_spark.sources.deltalog import read_delta
 
     src = os.path.join(sf_dir, "orders.parquet")
     root = os.path.join(tempfile.gettempdir(), "tsp_layouts")
@@ -1615,7 +1615,7 @@ def orders_delta_alter_scan(
         delta_rename_column,
         write_delta_log,
     )
-    from time_series_prediction_spark.sources.io import read_delta
+    from time_series_prediction_spark.sources.deltalog import read_delta
 
     src = os.path.join(sf_dir, "orders.parquet")
     root = os.path.join(tempfile.gettempdir(), "tsp_layouts")
@@ -1750,7 +1750,7 @@ def orders_delta_reorg_scan(
         delta_snapshot,
         write_delta_log,
     )
-    from time_series_prediction_spark.sources.io import read_delta
+    from time_series_prediction_spark.sources.deltalog import read_delta
 
     src = os.path.join(sf_dir, "orders.parquet")
     root = os.path.join(tempfile.gettempdir(), "tsp_layouts")
@@ -2011,7 +2011,7 @@ def orders_delta_log_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders, so the comparison pins the log semantics (tombstoned
     generations excluded, appended files included) — the exact
     behavior the pre-r8 parquet fallback got wrong."""
-    from time_series_prediction_spark.sources.io import read_delta
+    from time_series_prediction_spark.sources.deltalog import read_delta
 
     data = orders_delta_layout(spark, sf_dir)
     return (
@@ -2091,7 +2091,7 @@ def events_delta_stream_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scan of the streamed native-Delta events table: must equal the
     plain batch aggregate over raw events however the feed batched —
     and despite the replayed micro-batch in the build."""
-    from time_series_prediction_spark.sources.io import read_delta
+    from time_series_prediction_spark.sources.deltalog import read_delta
 
     data = events_delta_stream_layout(spark, sf_dir)
     return (
@@ -2208,7 +2208,7 @@ def events_delta_table_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     the table exactly. Shares ``events_delta_tail_layout`` with
     ``events_delta_tail_scan`` (one fixture, two oracle-checked
     surfaces: the tail fold and the maintained table)."""
-    from time_series_prediction_spark.sources.io import read_delta
+    from time_series_prediction_spark.sources.deltalog import read_delta
 
     path = events_delta_tail_layout(spark, sf_dir)
     return (
@@ -2351,7 +2351,7 @@ def events_delta_pyds_stream_scan(
         delta_snapshot,
         write_delta_log,
     )
-    from time_series_prediction_spark.sources.io import read_delta
+    from time_series_prediction_spark.sources.deltalog import read_delta
 
     src = os.path.join(sf_dir, "events.parquet")
     root = os.path.join(tempfile.gettempdir(), "tsp_layouts")
@@ -2490,7 +2490,7 @@ def orders_delta_convert_scan(
     life: a DV DELETE (%19 keys) and an append. The oracle states the
     final logical content relationally; time travel to v0 still
     serves the pre-conversion state (asserted in the build)."""
-    from time_series_prediction_spark.sources.io import read_delta
+    from time_series_prediction_spark.sources.deltalog import read_delta
 
     data = _orders_convert_layout(spark, sf_dir)
     return (
@@ -2662,7 +2662,7 @@ def orders_delta_incremental_scan(
         read_delta_with_row_ids,
         write_delta_log,
     )
-    from time_series_prediction_spark.sources.io import read_delta
+    from time_series_prediction_spark.sources.deltalog import read_delta
 
     src = os.path.join(sf_dir, "orders.parquet")
     root = os.path.join(tempfile.gettempdir(), "tsp_layouts")
@@ -2771,7 +2771,7 @@ def orders_delta_pyds_constrained_scan(
         read_delta_log,
         write_delta_log,
     )
-    from time_series_prediction_spark.sources.io import read_delta
+    from time_series_prediction_spark.sources.deltalog import read_delta
 
     src = os.path.join(sf_dir, "orders.parquet")
     root = os.path.join(tempfile.gettempdir(), "tsp_layouts")
@@ -2864,7 +2864,7 @@ def orders_delta_pyds_partitioned_sink_scan(
     from time_series_prediction_spark.sources.delta_datasource import (
         register_tspdelta,
     )
-    from time_series_prediction_spark.sources.io import read_delta
+    from time_series_prediction_spark.sources.deltalog import read_delta
 
     src = os.path.join(sf_dir, "orders.parquet")
     root = os.path.join(tempfile.gettempdir(), "tsp_layouts")
@@ -2958,7 +2958,7 @@ def orders_delta_pyds_rowtracked_sink_scan(
         read_delta_with_row_ids,
         write_delta_log,
     )
-    from time_series_prediction_spark.sources.io import read_delta
+    from time_series_prediction_spark.sources.deltalog import read_delta
 
     src = os.path.join(sf_dir, "orders.parquet")
     root = os.path.join(tempfile.gettempdir(), "tsp_layouts")
@@ -3048,7 +3048,7 @@ def orders_delta_partitioned_incremental_scan(
         read_delta_with_row_ids,
         write_delta_log,
     )
-    from time_series_prediction_spark.sources.io import read_delta
+    from time_series_prediction_spark.sources.deltalog import read_delta
 
     src = os.path.join(sf_dir, "orders.parquet")
     root = os.path.join(tempfile.gettempdir(), "tsp_layouts")

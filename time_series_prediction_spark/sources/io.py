@@ -7,14 +7,16 @@ Covers the reference's source/sink inventory (SURVEY §2.1):
                                      1-row-DF crossJoin; reference
                                      ``src/demo/create_time_series.py:193-195``)
   S3 Parquet scan / S6 sink       -> spark.read.parquet / df.write.parquet
-  S4 Delta scan / S7 sink         -> optional: falls back to parquet when
-                                     delta-spark jars are absent
+  S4 Delta scan / S7 sink         -> ``sources/deltalog.read_delta``
+                                     (delta-spark when its jars are
+                                     present, else the native log) and
+                                     ``deltalog.write_delta_log``
   S5 JSON config scan / S8 managed-table sink -> not implemented: no
                                      lifecycle step uses them
   S9 driver collect               -> built-in (toPandas/show/count)
 
-Also the engine's fixture-table registry for the driver-generated
-TPC-H-ish tables under /root/testdata/sf*/.
+``read_table`` loads the driver-generated fixture tables
+(``<sf_dir>/<name>.parquet``).
 """
 
 from __future__ import annotations
@@ -37,19 +39,6 @@ from time_series_prediction_spark.session_memo import session_memo
 # bench.py clears it at every pass boundary like all session memos,
 # so each timed pass still pays one first-touch inference per table.
 _READ_TABLE_MEMO: dict = session_memo({})
-
-TPCH_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
@@ -171,141 +160,3 @@ def write_partitioned(
     """Partitioned parquet sink — the 100 TB layout: partition pruning on
     ``partition_cols`` turns full scans into directory-level skips."""
     df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
-
-
-def _delta_available(spark: SparkSession) -> bool:
-    # NB: attribute access on spark._jvm is lazy (py4j returns a
-    # JavaPackage without touching the JVM), so probing an attribute
-    # never raises — resolve the class by name instead.
-    try:
-        spark._jvm.java.lang.Class.forName(  # noqa: SLF001
-            "org.apache.spark.sql.delta.DeltaLog"
-        )
-        return True
-    except Exception:
-        return False
-
-
-def _tz_for_zone_id(zone_id: str):
-    """tzinfo for a Spark session-timezone id. Spark accepts BOTH
-    region ids ('Asia/Tokyo') and offset-style ids ('GMT+08:00',
-    '+08:00', 'UTC+8') — ZoneInfo raises KeyError on the latter, so
-    fall back to parsing the fixed offset ourselves; last resort is
-    UTC (better a documented default than a crashed time travel)."""
-    import datetime as _dt
-
-    try:
-        import zoneinfo as _zi
-
-        return _zi.ZoneInfo(zone_id)
-    except Exception:  # noqa: BLE001 — offset-style ids
-        import re as _re
-
-        m = _re.fullmatch(
-            r"(?:GMT|UTC|UT)?\s*([+-])(\d{1,2})"
-            r"(?::?(\d{2}))?(?::?(\d{2}))?",
-            zone_id.strip(),
-        )
-        if m:
-            sgn = 1 if m.group(1) == "+" else -1
-            return _dt.timezone(
-                sgn
-                * _dt.timedelta(
-                    hours=int(m.group(2)),
-                    minutes=int(m.group(3) or 0),
-                    seconds=int(m.group(4) or 0),
-                )
-            )
-        return _dt.timezone.utc
-
-
-def read_delta(
-    spark: SparkSession,
-    path: str,
-    version: int | None = None,
-    timestamp_ms: int | None = None,
-) -> DataFrame:
-    """S4: Delta scan (reference ``src/demo/training.py:158``).
-
-    Resolution order: the real delta-spark reader when its jars are
-    present; otherwise the NATIVE transaction-log reader
-    (``sources/deltalog.py`` — reconstructs the snapshot from
-    ``_delta_log`` per the published protocol, so removed-but-not-
-    vacuumed files are correctly excluded and ``version`` gives
-    time travel); plain parquet only when the directory carries no
-    Delta log at all. The old parquet-only fallback was silently
-    WRONG on a real Delta table (it read tombstoned files)."""
-    if version is not None and timestamp_ms is not None:
-        raise ValueError("pass version OR timestamp_ms, not both")
-    if _delta_available(spark):
-        reader = spark.read.format("delta")
-        if version is not None:
-            reader = reader.option("versionAsOf", str(version))
-        if timestamp_ms is not None:
-            import datetime as _dt
-
-            # delta-spark parses this string in the SESSION timezone;
-            # a bare UTC wall-clock string time-travelled to the wrong
-            # instant on any non-UTC session (while the native path
-            # below uses epoch ms correctly) — keep both paths on the
-            # same instant by rendering in the session zone
-            tz = _tz_for_zone_id(
-                spark.conf.get("spark.sql.session.timeZone")
-            )
-            reader = reader.option(
-                "timestampAsOf",
-                _dt.datetime.fromtimestamp(
-                    timestamp_ms / 1000.0, tz=tz
-                ).strftime("%Y-%m-%d %H:%M:%S"),
-            )
-        return reader.load(path)
-    from time_series_prediction_spark.sources.deltalog import (
-        DeltaProtocolUnsupported,
-        has_delta_log,
-        is_delta_table,
-        read_delta_log,
-        version_at_timestamp,
-    )
-
-    if is_delta_table(spark, path):
-        if timestamp_ms is not None:
-            version = version_at_timestamp(spark, path, timestamp_ms)
-        return read_delta_log(spark, path, version=version)
-    if has_delta_log(spark, path):
-        # the _delta_log exists but holds no classic commit/checkpoint
-        # chain this reader can replay (multi-part or v2/UUID
-        # checkpoints after log cleanup). It IS a Delta table — a
-        # plain-parquet fallback here would silently include
-        # tombstoned files, the exact wrong answer deltalog.py exists
-        # to prevent.
-        raise DeltaProtocolUnsupported(
-            f"{path} carries a _delta_log this native reader cannot "
-            "replay (no classic <v>.json / <v>.checkpoint.parquet "
-            "chain — likely multi-part or v2 checkpoints); install "
-            "delta-spark to read it"
-        )
-    if version is not None:
-        raise ValueError(
-            f"{path} is not a Delta table — no time travel on plain "
-            "parquet"
-        )
-    return spark.read.parquet(path)
-
-
-def write_delta(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """S7: Delta sink (reference
-    ``notebooks/training_new_petastorm.py:182``): the real delta-spark
-    writer when its jars are present, otherwise the NATIVE
-    transaction-log writer (``sources/deltalog.write_delta_log``) —
-    parquet data plus a protocol-1 ``_delta_log`` commit, readable by
-    any Delta reader (and by ``read_delta``'s log-aware path, so an
-    overwrite correctly hides the previous generation instead of
-    double-counting it the way the old parquet fallback did)."""
-    if _delta_available(df.sparkSession):
-        df.write.format("delta").mode(mode).save(path)
-    else:
-        from time_series_prediction_spark.sources.deltalog import (
-            write_delta_log,
-        )
-
-        write_delta_log(df, path, mode=mode)

@@ -1,16 +1,13 @@
-"""Structured Streaming ingestion for the events table.
+"""Structured Streaming over the events table.
 
 The reference has NO streaming surface (SURVEY §2.9 — batch arrays
-only); this is engine stretch scope: the same events analytics as
-plans/relational.events_hourly, expressed as an incremental streaming
-query with watermarking, so the engine covers continuous ingestion at
-the 100 TB tier (file/kafka source → windowed state → append sink).
+only); this is engine stretch scope, used by the registry's
+``events_stream_join_scan`` query (plans/layout_queries.py):
 
-Patterns covered:
-* tumbling/sliding window aggregation with a watermark bounding state
-* session windows (``F.session_window``) — the streaming twin of the
-  batch lag+cumsum sessionization
-* ``foreachBatch`` parquet sink for exactly-once-style materialization
+* a watermarked STREAM-STREAM interval join (click → purchase
+  attribution) whose state the engine can evict;
+* a ``foreachBatch`` parquet sink for exactly-once-style
+  materialization.
 
 Tests drive these with the fixture parquet files as a file-stream
 source and ``processAllAvailable()`` (a bounded drain), which executes
@@ -19,129 +16,9 @@ the real incremental engine — not a batch rewrite.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
-
-EVENTS_RAW_SCHEMA = (
-    "event_id bigint, ts timestamp_ntz, user_id bigint, event_type string, "
-    "value double, props string"
-)
-
-
-def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the events parquet, normalizing ``ts``
-    to a plain UTC timestamp for BOTH fixture encodings — the same
-    compat surface as io.read_table (file streams need an explicit
-    schema, so the stored type is probed first with one batch
-    footer read):
-
-    * TIMESTAMP(MICROS, isAdjustedToUTC=false) → TIMESTAMP_NTZ,
-      reinterpreted as a UTC instant.
-    * legacy TIMESTAMP(NANOS) → bigint under nanosAsLong, converted
-      by exact integer ns→us division.
-    """
-    import os
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    ts_type = dict(
-        spark.read.parquet(os.path.join(sf_dir, "events.parquet")).dtypes
-    ).get("ts")
-    if ts_type == "bigint":  # rounds-1/2 nanos fixtures
-        schema = EVENTS_RAW_SCHEMA.replace("ts timestamp_ntz", "ts bigint")
-        ts_conv = F.timestamp_micros(F.expr("ts div 1000"))
-    else:
-        schema = EVENTS_RAW_SCHEMA
-        ts_conv = F.col("ts").cast("timestamp")
-    # file-stream sources require a directory: stream the fixture dir
-    # with a glob filter selecting only the events file
-    raw = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("pathGlobFilter", "events.parquet")
-        .load(sf_dir)
-    )
-    return raw.withColumn("ts", ts_conv)
-
-
-def hourly_counts_stream(
-    events: DataFrame, watermark: str = "2 hours"
-) -> DataFrame:
-    """Windowed aggregation with watermark: count/sum per (hour,
-    event_type). The watermark bounds state: late rows beyond it are
-    dropped and completed windows are emitted/evicted — the property
-    that keeps state size constant on an unbounded stream."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour"), F.col("event_type"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum("value").alias("total_value"),
-        )
-        .select(
-            F.col("window.start").alias("hour"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
-    )
-
-
-def session_stream(
-    events: DataFrame, gap: str = "30 minutes", watermark: str = "2 hours"
-) -> DataFrame:
-    """Session-window aggregation: the streaming equivalent of
-    plans/relational.events_sessionization (30-min inactivity gap),
-    with state eviction driven by the watermark."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap), F.col("user_id"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum("value").alias("session_value"),
-        )
-        .select(
-            F.col("session_window.start").alias("session_start"),
-            F.col("session_window.end").alias("session_end"),
-            "user_id",
-            "n_events",
-            "session_value",
-        )
-    )
-
-
-def enriched_counts_stream(
-    events: DataFrame, dim: DataFrame, watermark: str = "2 hours"
-) -> DataFrame:
-    """Stream-static join + windowed aggregation: each micro-batch
-    hash-joins against the static dimension (broadcast — it never
-    changes mid-query), then counts per (hour, dimension attribute).
-    The pattern for enriching an event firehose with slowly-changing
-    reference data at ingest time; the static side is re-read per
-    batch only if its source supports it, so keep it small or cached.
-    ``dim`` must carry (user_id, cohort)."""
-    joined = events.join(F.broadcast(dim), "user_id")
-    return (
-        joined.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour"), F.col("cohort"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(F.col("window.start").alias("hour"), "cohort", "n_events")
-    )
-
-
-def dedup_stream(
-    events: DataFrame, watermark: str = "2 hours"
-) -> DataFrame:
-    """Streaming exact deduplication on event_id —
-    ``dropDuplicatesWithinWatermark``: the streaming twin of
-    dedup.exact_dedup. State holds only ids younger than the
-    watermark, so memory is bounded on an unbounded stream (a plain
-    dropDuplicates would grow state forever); any replay/duplicate
-    arriving within the watermark horizon is suppressed."""
-    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
-        ["event_id"]
-    )
 
 
 def click_purchase_join_stream(
@@ -187,43 +64,6 @@ def click_purchase_join_stream(
         "purchase_id",
         "purchase_ts",
         "purchase_value",
-    )
-
-
-def run_idempotent_epoch_sink(
-    df: DataFrame, path: str, checkpoint: str, output_mode: str = "append"
-) -> StreamingQuery:
-    """foreachBatch sink with exactly-once EFFECT on a plain parquet
-    target: each micro-batch overwrites its own ``epoch_id=N``
-    directory, so a replayed epoch (restart between sink write and
-    checkpoint commit) rewrites the same files instead of appending
-    duplicates. Idempotent-by-path is the standard exactly-once recipe
-    when the sink has no transactions (with Delta, foreachBatch would
-    MERGE on a key instead)."""
-
-    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(
-            f"{path}/epoch_id={epoch_id}"
-        )
-
-    return (
-        df.writeStream.outputMode(output_mode)
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(write_batch)
-        .start()
-    )
-
-
-def run_to_memory_sink(
-    df: DataFrame, name: str, output_mode: str = "append"
-) -> StreamingQuery:
-    """Start the streaming query into an in-memory table (tests /
-    smoke); caller drains with processAllAvailable()."""
-    return (
-        df.writeStream.outputMode(output_mode)
-        .format("memory")
-        .queryName(name)
-        .start()
     )
 
 

@@ -436,9 +436,9 @@ def compact_layout(
     ``vacuum_layout`` reclaims them. Returns the new generation dir,
     or None when nothing has been committed yet.
 
-    This resets the cross-batch curve overlap ``append_zordered``'s
-    per-batch normalization accumulates — the periodic re-optimize
-    every lakehouse runs.
+    This resets the cross-batch curve overlap that per-batch
+    z-order normalization (``zorder_ingest_sink``) accumulates — the
+    periodic re-optimize every lakehouse runs.
 
     Concurrency: the commit is PINNED to ``v + 1`` where ``v`` is the
     version the file set and deletion vector were read from — any
@@ -613,15 +613,4 @@ def read_committed(
     return apply_dv(
         pruned_scan(spark, man, {}, merge_schema=merge_schema),
         version_dv(spark, root, v),
-    )
-
-
-def read_layout(spark: SparkSession, data_path: str) -> DataFrame:
-    """Full-table read of a streamed layout: per-batch subdirectories
-    are plain nested dirs (NOT partition dirs — no schema column is
-    derived from them), so the scan needs recursive lookup."""
-    return (
-        spark.read.option("recursiveFileLookup", "true")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(data_path)
     )

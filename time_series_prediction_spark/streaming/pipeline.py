@@ -3,7 +3,7 @@ ONE ``foreachBatch`` body.
 
 Rounds 5–6 built the three ingestion disciplines separately —
 row-level quarantine (``streaming/audit.py``), the batch-level
-write-audit-publish gate (``operators/wap.py``), and z-ordered append
+write-audit-publish gate, and z-ordered append
 with incremental manifest commits (``streaming/layout.py``). A real
 pipeline runs them as ONE sink per micro-batch:
 
@@ -48,13 +48,18 @@ from time_series_prediction_spark.operators.quality_checks import (
     ColumnCheck,
     audit_columns,
 )
-from time_series_prediction_spark.operators.wap import violation_summary
 from time_series_prediction_spark.sources.fsops import fs_for
 from time_series_prediction_spark.streaming.audit import split_by_checks
 from time_series_prediction_spark.streaming.layout import (
     commit_zordered_batch,
     manifest_root,
 )
+
+
+def violation_summary(report_df: DataFrame) -> list[tuple[str, int, int]]:
+    return [
+        (r.check_name, r.n_checked, r.n_violations) for r in report_df.collect()
+    ]
 
 
 def lakehouse_ingest_sink(
@@ -161,31 +166,6 @@ def lakehouse_ingest_sink(
         )
 
     return _sink
-
-
-def read_quarantine(spark, quarantine_path: str) -> DataFrame:
-    return (
-        spark.read.option("recursiveFileLookup", "true")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(quarantine_path)
-    )
-
-
-def read_reports(spark, report_path: str) -> DataFrame:
-    return (
-        spark.read.option("recursiveFileLookup", "true")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(report_path)
-    )
-
-
-def rejected_batches(spark, data_path: str) -> list[str]:
-    """Names of wholly-rejected batches (WAP red audits) awaiting
-    inspection — the on-call debugging surface."""
-    fs = fs_for(spark, data_path)
-    return sorted(
-        n for n in fs.list_names(data_path) if n.startswith("_rejected-")
-    )
 
 
 def medallion_sink(
@@ -364,22 +344,3 @@ def _read_commit_link(
     if link.get("app_id") != app_id:
         return None
     return link
-
-
-def medallion_commit_links(spark, silver_path: str) -> list[dict]:
-    """Every recorded cross-table commit (sorted by batch): the audit
-    surface proving which bronze versions are folded into silver. A
-    bronze version NEWER than the highest linked one with no link is
-    either in flight or a crash landed between the two commits — the
-    stream's replay will fold and link it."""
-    import json as _json
-
-    from time_series_prediction_spark.sources.fsops import fs_for
-
-    fs = fs_for(spark, silver_path)
-    d = _link_dir(silver_path)
-    out = []
-    for name in fs.list_names(d):
-        if name.startswith("batch-") and name.endswith(".json"):
-            out.append(_json.loads(fs.read_text(os.path.join(d, name))))
-    return sorted(out, key=lambda r: r["batch_id"])
