@@ -3,6 +3,9 @@
 #   0. the Spark-free structural tests, first: a dead definition, a grown
 #      perfbench import cone or a bad validate_registry invocation fails
 #      in seconds, before the long passes
+#   0b. the plan-shape and NumPy-kernel parity tests (about a minute): a
+#      second Python node or a kernel that drifts from the JVM SQL it
+#      replaced fails here, before the long passes
 #   1. pytest at all three fixture scales (suite is scale-portable)
 #   2. full-registry DuckDB validation at sf0.01 and sf0.1
 #   3. perfbench: one serve and one query_mix run (the benchmark
@@ -12,6 +15,13 @@ cd "$(dirname "$0")/.."
 export SPARK_LOCAL_DIRS=/tmp/spark-local
 echo "== structural tests =="
 python -m pytest -q tests/test_module_reachability.py tests/test_validate_registry_args.py
+echo "== plan shape and kernel parity =="
+python -m pytest -q tests/test_timeseries_kernels.py \
+  tests/test_plan_quality.py::test_preprocessing_is_single_narrow_stage \
+  tests/test_plan_quality.py::test_serve_plan_prunes_the_trend \
+  tests/test_plan_quality.py::test_r2_metrics_folds_each_sst_once \
+  tests/test_plan_quality.py::test_preprocessing_evaluates_trend_once \
+  tests/test_plan_quality.py::test_preprocessing_outputs_fold_each_series_once
 for sf in sf0.001 sf0.01 sf0.1; do
   echo "== pytest @ $sf =="
   SPARK_GRAFT_TEST_SF_DIR=/root/testdata/$sf python -m pytest tests/ -q

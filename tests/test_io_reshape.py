@@ -109,7 +109,6 @@ def test_read_table_plan_memo(spark, sf_dir, tmp_path):
     import shutil
 
     from time_series_prediction_spark.session_memo import clear_session_memos
-    from time_series_prediction_spark.sources import io as iomod
 
     a = read_table(spark, sf_dir, "region")
     b = read_table(spark, sf_dir, "region")

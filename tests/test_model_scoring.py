@@ -1,4 +1,4 @@
-"""End-to-end serve path: pre_process -> iterator-pandas_udf scoring ->
+"""End-to-end serve path: pre_process -> scalar Arrow UDF scoring ->
 post_process -> R2, with the baseline models; and the scorer's width
 checks."""
 
@@ -12,7 +12,6 @@ from time_series_prediction_spark.model.scoring import (
     last_value_model_factory,
     numpy_cnn_factory,
     score_dataframe,
-    zero_model_factory,
 )
 from time_series_prediction_spark.plans.preprocess import (
     clean_series,
@@ -21,6 +20,11 @@ from time_series_prediction_spark.plans.preprocess import (
     r2_metrics,
 )
 from time_series_prediction_spark.sources.generate import generate_series_frame
+
+
+def zero_model_factory(horizon: int = 92):
+    """Predicts 0 (the scaled-space mean) for every day."""
+    return lambda: lambda x: np.zeros((x.shape[0], horizon), dtype=np.float32)
 
 
 def test_full_serve_path_with_stub_model(spark):

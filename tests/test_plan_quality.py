@@ -7,12 +7,28 @@ from __future__ import annotations
 import re
 
 from time_series_prediction_spark.plans.flagship import cashflow_wide_pipeline
-from time_series_prediction_spark.plans.preprocess import pre_processing
+from time_series_prediction_spark.model.scoring import (
+    last_value_model_factory,
+    score_dataframe,
+)
+from time_series_prediction_spark.plans.preprocess import (
+    clean_series,
+    post_processing,
+    pre_processing,
+    r2_metrics,
+    train_val_test_split,
+)
 from time_series_prediction_spark.plans.relational import (
     q1_pricing_summary,
     q5_local_supplier_volume,
 )
 from time_series_prediction_spark.sources.generate import generate_series_frame
+
+
+# freq=30 trend: 0.5·x[i-15] + Σ slice(x, i-13, 29) + 0.5·x[i+15]
+_TREND_BODY = re.compile(
+    r"aggregate\(slice\(balance#\d+, \(\(lambda i#\d+ - 15\) \+ 2\), 29\)"
+)
 
 
 def _plan(df) -> str:
@@ -39,14 +55,57 @@ def test_q5_broadcasts_every_dimension(spark, sf_dir):
     assert plan.count("Exchange hashpartitioning") == 1
 
 
+def _serve_frame(raw):
+    """Serve's full plan: pre-processing, scoring, post-processing and
+    the R² metrics, as perfbench's serve unit builds it."""
+    pre = pre_processing(clean_series(raw), "2020-03-31", serving=False)
+    scored = score_dataframe(pre, last_value_model_factory())
+    return r2_metrics(post_processing(scored), y_days=92)
+
+
 def test_preprocessing_is_single_narrow_stage(spark):
+    """Pre-processing is one narrow stage with exactly ONE Python node:
+    the NumPy kernels (mean, std, scaling, X, y) and, on the serve
+    path, the scorer chained over X all evaluate in one
+    ``ArrowEvalPython`` node, so a task holds one Python worker. Holds
+    for both modes, for serve's full plan and for training's split."""
     raw = generate_series_frame(spark, 10, seed=1)
-    pre = pre_processing(raw, "2020-03-31", serving=True)
-    plan = _plan(pre)
-    # per-series math must not introduce any shuffle or Python worker
-    assert "Exchange" not in plan
-    assert "BatchEvalPython" not in plan
-    assert "ArrowEvalPython" not in plan
+    plans = {
+        f"pre_processing(serving={serving})": _plan(
+            pre_processing(raw, "2020-03-31", serving=serving)
+        )
+        for serving in (False, True)
+    }
+    plans["serve"] = _plan(_serve_frame(raw))
+    pre = pre_processing(clean_series(raw), "2020-03-31", serving=False)
+    plans["train split"] = _plan(train_val_test_split(pre)[0])
+    for what, plan in plans.items():
+        assert plan.count("ArrowEvalPython") == 1, (what, plan)
+        assert "BatchEvalPython" not in plan, what
+        if what.startswith("pre_processing"):
+            assert "Exchange" not in plan, (what, plan)
+
+
+def test_serve_plan_prunes_the_trend(spark):
+    """Serve reads neither the trend nor its extrapolation (retrend is
+    the as-shipped no-op), so its optimized plan holds no moving-average
+    fold at all."""
+    raw = generate_series_frame(spark, 4, seed=1)
+    opt = _serve_frame(raw)._jdf.queryExecution().optimizedPlan().toString()
+    assert "balance_trend_1MW" not in opt
+    assert not _TREND_BODY.search(opt), opt
+
+
+def test_r2_metrics_folds_each_sst_once(spark):
+    """``r2_metrics``' per-series CASE reads SST twice; bound once, each
+    window (3 months, 1 month) holds one SST fold in serve's optimized
+    plan, not two."""
+    raw = generate_series_frame(spark, 4, seed=1)
+    opt = _serve_frame(raw)._jdf.queryExecution().optimizedPlan().toString()
+    sst = re.compile(
+        r"- lambda _m#\d+\) \* \(cast\(lambda v#\d+ as double\) - lambda _m#\d+\)"
+    )
+    assert len(sst.findall(opt)) == 2, opt
 
 
 def test_preprocessing_evaluates_trend_once(spark):
@@ -61,53 +120,19 @@ def test_preprocessing_evaluates_trend_once(spark):
         "trend_next_3months_1MW", "trajectory_6months"
     )
     opt = pre._jdf.queryExecution().optimizedPlan().toString()
-    # freq=30: 0.5·x[i-15] + Σ slice(x, i-13, 29) + 0.5·x[i+15]
-    body = re.compile(
-        r"aggregate\(slice\(balance#\d+, \(\(lambda i#\d+ - 15\) \+ 2\), 29\)"
-    )
-    assert len(body.findall(opt)) == 1, opt
+    assert len(_TREND_BODY.findall(opt)) == 1, opt
 
 
-# a fold over a whole series column (series_mean, series_std) ...
-_SERIES_FOLD = re.compile(r"aggregate\(\w+#\d+, 0\.0, ")
-# ... and series_mean's own, under its bround(·, 3)
-_MEAN_FOLD = re.compile(r"bround\(\(aggregate\(\w+#\d+, 0\.0, ")
-
-
-def _folds_inside_element_lambdas(plan: str) -> int:
-    """Count series folds nested in a per-element lambda: a
-    ``lambdafunction`` whose higher-order function iterates anything
-    but a one-element ``array(...)`` (the ``_let`` binding form)."""
-    folds = {m.start() for m in _SERIES_FOLD.finditer(plan)}
-    stack: list[tuple[str, int]] = []  # (call name, index after its "(")
-    bad = 0
-    for tok in re.finditer(r"(\w*)\(|\)", plan):
-        if tok.group() == ")":
-            if stack:
-                stack.pop()
-            continue
-        if tok.start() in folds:
-            bad += any(
-                name == "lambdafunction"
-                and not plan.startswith("array(", stack[k - 1][1])
-                for k, (name, _) in enumerate(stack)
-                if k
-            )
-        stack.append((tok.group(1), tok.end()))
-    return bad
+_KERNELS = ("_series_mean_udf", "_series_std_udf", "_scaling_udf", "_get_x", "_get_y")
 
 
 def test_preprocessing_outputs_fold_each_series_once(spark):
-    """Every pre_processing output selected on its own, and
-    post_processing's rescaled prediction, must hold the series_mean
-    fold at most once, and no series fold inside a per-element lambda.
-    ``scaling``/``rescaling`` read mean and std inside ``transform``;
-    unbound, CollapseProject inlines both folds there and every element
-    recomputes them (O(n²) per series: 32.7 s instead of 1.27 s for
-    ``.select("X")`` over 2,000 series of 487 days)."""
+    """Each kernel runs once per row: every pre_processing output
+    selected on its own, and post_processing's rescaled prediction,
+    holds each NumPy kernel at most once in the optimized plan. Each
+    output also collects on its own: a JVM expression as a kernel's
+    argument fails to evaluate (``Cannot evaluate expression``)."""
     from pyspark.sql import functions as F
-
-    from time_series_prediction_spark.plans.preprocess import post_processing
 
     raw = generate_series_frame(spark, 4, seed=1)
     for serving in (False, True):
@@ -120,8 +145,9 @@ def test_preprocessing_outputs_fold_each_series_once(spark):
         )
         for col, df in frames.items():
             opt = df._jdf.queryExecution().optimizedPlan().toString()
-            assert len(_MEAN_FOLD.findall(opt)) <= 1, (serving, col, opt)
-            assert _folds_inside_element_lambdas(opt) == 0, (serving, col, opt)
+            for kernel in _KERNELS:
+                assert opt.count(f"{kernel}(") <= 1, (serving, col, kernel, opt)
+            assert len(df.collect()) == 4, (serving, col)
 
 
 def test_flagship_shuffle_budget(spark, sf_dir):

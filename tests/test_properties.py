@@ -38,7 +38,7 @@ def test_scaling_rescaling_identity(spark, xs):
         _one_row(spark, xs)
         .withColumn("m", ts.series_mean("balance"))
         .withColumn("s", ts.series_std("balance"))
-        .withColumn("scaled", ts.scaling("balance", "m", "s"))
+        .withColumn("scaled", ts.scaling("balance"))
         .withColumn("back", ts.rescaling("scaled", "m", "s"))
     )
     r = df.first()

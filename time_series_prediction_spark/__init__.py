@@ -8,8 +8,9 @@ capabilities of the reference repo ``pdemeulenaer/Time-series-prediction``
   row-at-a-time Python UDFs (the reference keeps per-series math in
   opaque ``F.udf`` bodies — see reference ``notebooks/utils.py:189-234``),
 * Catalyst-friendly predicates so pushdown / pruning / codegen apply,
-* Arrow-vectorized ``pandas_udf`` only where Python is genuinely
-  required (model inference),
+* Arrow-vectorized UDFs only where Python wins: model inference, and
+  the per-series NumPy kernels that replace interpreted array lambdas
+  bit for bit,
 * plus the large-scale training-data-pipeline operators a 100 TB
   corpus needs: dedup (exact / MinHash-LSH / SimHash), similarity
   search, text analysis, multimodal column plumbing.

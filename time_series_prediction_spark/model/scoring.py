@@ -1,18 +1,23 @@
-"""Distributed model scoring — the one place Python belongs.
+"""Distributed model scoring.
 
 Mirrors the reference's serving stage (``notebooks/scoring.py:317-325``:
 a SCALAR pandas_udf that reloads the Keras model for EVERY Arrow batch
 via ``model.predict(v.reshape(-1, 365, 1))``). Engine improvements:
 
-* ITERATOR-form pandas_udf: the model loads ONCE per task, i.e. per
-  partition (a load takes about 17 ms), then streams every Arrow batch
-  of the partition through it — at the reference's 2.5M-series scale,
-  per-batch model loading is the dominant cost in their design.
-* three model factories share one ``ModelFn`` contract:
+* the model is built on a task's first Arrow batch and reused for the
+  task's other batches (a load takes about 17 ms); at the reference's
+  2.5M-series scale, per-batch model loading is the dominant cost in
+  their design.
+* the scorer is a SCALAR Arrow UDF, like the NumPy kernels of
+  ``operators/timeseries.py``: Spark chains ``score(get_x(scaling(x)))``
+  and evaluates it next to ``series_mean``/``series_std`` in one
+  ``ArrowEvalPython`` node, so X never returns to the JVM and no
+  second Python worker starts. An iterator UDF would plan as a node
+  of its own.
+* two model factories share one ``ModelFn`` contract:
   ``numpy_cnn_factory`` loads the reference-topology 1-D CNN
   (``model/numpy_cnn.py``) from its ``.npz`` weights;
-  ``last_value_model_factory`` and ``zero_model_factory`` are
-  deterministic baselines.
+  ``last_value_model_factory`` is a deterministic baseline.
 * widths are checked: a CNN whose (x_days, y_days) differ from the
   scorer's (x_days, horizon), or a model that returns anything but
   ``(len(x), horizon)``, fails with a ``ValueError`` naming both.
@@ -20,25 +25,16 @@ via ``model.predict(v.reshape(-1, 365, 1))``). Engine improvements:
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 
 ModelFn = Callable[[np.ndarray], np.ndarray]
 ModelFactory = Callable[[], ModelFn]
-
-
-def zero_model_factory(horizon: int = 92) -> ModelFactory:
-    """Predicts 0 (the scaled-space mean) for every day."""
-
-    def make() -> ModelFn:
-        return lambda x: np.zeros((x.shape[0], horizon), dtype=np.float32)
-
-    return make
 
 
 def last_value_model_factory(horizon: int = 92) -> ModelFactory:
@@ -58,8 +54,8 @@ def numpy_cnn_factory(
     weights_path: str, x_days: int = 365, horizon: int = 92
 ) -> ModelFactory:
     """Load the reference-topology 1-D CNN (``model/numpy_cnn.py``)
-    from its ``.npz`` weights; the model loads once per task through
-    the iterator pandas_udf. Raises ``ValueError`` when the
+    from its ``.npz`` weights; the scorer builds it once per task.
+    Raises ``ValueError`` when the
     saved model's (x_days, y_days) differ from (x_days, horizon)."""
 
     def make() -> ModelFn:
@@ -80,26 +76,37 @@ def numpy_cnn_factory(
 
 
 def scoring_udf(factory: ModelFactory, horizon: int = 92) -> Column:
-    """Iterator pandas_udf: model built once per task, Arrow batches
-    streamed through (reference reloads per batch — scoring.py:317)."""
+    """Scalar Arrow UDF: ``array<float>`` X in, ``array<float>[horizon]``
+    out. The model is built on the task's first batch (the closure's
+    ``model`` list is unpickled empty in every task)."""
+    model: list[ModelFn] = []
 
-    @pandas_udf("array<float>")
-    def score(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        model = factory()  # once per task (one partition)
-        for x_series in batches:
-            x = np.asarray(
-                [np.asarray(v, dtype=np.float32) for v in x_series]
+    @arrow_udf("array<float>")
+    def score(x: pa.Array) -> pa.Array:
+        if x.null_count:
+            raise ValueError("the scorer got a null series")
+        if not model:
+            model.append(factory())
+        n = len(x)
+        if n == 0:
+            return pa.array([], type=pa.list_(pa.float32()))
+        widths = np.diff(x.offsets.to_numpy())
+        if widths.min() != widths.max():
+            raise ValueError(
+                f"the scorer needs series of one width, got {widths.min()} "
+                f"to {widths.max()}"
             )
-            if len(x) == 0:
-                yield pd.Series([], dtype=object)
-                continue
-            y = model(x)
-            if y.shape != (len(x), horizon):
-                raise ValueError(
-                    f"model returned shape {y.shape} for {len(x)} series; "
-                    f"the scorer expects ({len(x)}, {horizon})"
-                )
-            yield pd.Series(list(y.astype(np.float32)))
+        flat = x.flatten().to_numpy(zero_copy_only=False)
+        y = model[0](flat.astype(np.float32, copy=False).reshape(n, -1))
+        if y.shape != (n, horizon):
+            raise ValueError(
+                f"model returned shape {y.shape} for {n} series; "
+                f"the scorer expects ({n}, {horizon})"
+            )
+        return pa.ListArray.from_arrays(
+            pa.array(np.arange(n + 1, dtype=np.int32) * horizon),
+            pa.array(y.astype(np.float32, copy=False).ravel()),
+        )
 
     return score
 

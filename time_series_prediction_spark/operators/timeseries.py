@@ -2,22 +2,47 @@
 
 The reference implements these as row-at-a-time Python UDFs over
 ``array<float>`` columns (reference ``notebooks/utils.py:189-234`` wires
-them; bodies at ``:239-405,1048-1067``). Here each operator is a native
-Column expression — array lambdas (`transform`/`aggregate`/`slice`/
-`zip_with`) that run in the JVM with zero Python serialization and
-zero shuffle: every operator is embarrassingly parallel per row, so a
-100 TB table of series scales linearly with executors. The
-higher-order functions are ``CodegenFallback`` in Spark 4.1.2: each
-lambda runs interpreted, once per element, with no
-common-subexpression elimination.
+them; bodies at ``:239-405,1048-1067``). Here every operator is a
+function that returns a Column, in one of two forms:
+
+* **NumPy kernels** — ``series_mean``, ``series_std``, ``scaling``,
+  ``get_x`` and ``get_y``. Each is a scalar Arrow UDF (``arrow_udf``)
+  whose body runs one batch of series as 2-D NumPy blocks, rows grouped
+  by length. Two rules keep them inside ONE ``ArrowEvalPython`` node,
+  i.e. one Python worker per task:
+
+  - scalar form only. Spark chains nested scalar UDFs of one eval type
+    (``score(get_x(scaling(x)))``) and evaluates side-by-side ones
+    (``series_mean(x)``) in the same node. PySpark's worker accepts one
+    iterator UDF per node, so an iterator kernel would add a node and a
+    worker.
+  - kernels take only the series. ``scaling(x)`` standardizes ``x`` by
+    its own rounded mean and std rather than reading JVM columns: a
+    JVM expression as a UDF argument gets inlined into it, and an
+    interpreted fold feeding a Python UDF fails to evaluate in Spark
+    4.1.2 (``Cannot evaluate expression``).
+
+  The kernels do the JVM expressions' operations in the same order, so
+  their outputs are bit-identical: a fold becomes a sequential
+  ``np.cumsum`` (``np.sum`` is pairwise and differs), and ``bround``
+  becomes ``bround_half_even``. Arrow, unlike pandas, keeps a null
+  element apart from NaN, so nulls follow Spark's rules too: a null
+  element makes the series' mean, std and every scaled element null,
+  and a division by a zero std gives null elements.
+* **JVM expressions** — the trend family (``trend``, ``gradient``,
+  ``extrapolate_trend``, ``trajectory``), ``keep_ts`` and
+  ``rescaling``: array lambdas (`transform`/`aggregate`/`slice`/
+  `zip_with`) with no Python and no shuffle. These higher-order
+  functions are ``CodegenFallback`` in Spark 4.1.2: each lambda runs
+  interpreted, once per element, with no common-subexpression
+  elimination.
 
 Parity notes (SURVEY §7.4):
 * ``np.around`` is round-half-even → ``F.bround``, never ``F.round``.
 * Reference UDFs declare ``array<float>``/``float`` returns → values
   are float32-truncated; rounded outputs are cast the same way.
 * ``detrend``/``retrend`` are as-shipped NO-OPS (the subtraction is
-  commented out — reference ``notebooks/utils.py:258,270``). Default
-  honors as-shipped; ``strict=True`` applies the documented arithmetic.
+  commented out — reference ``notebooks/utils.py:258,270``).
 * trend replicates ``statsmodels.seasonal_decompose(x, model='additive',
   freq=f, extrapolate_trend=1).trend``: centered moving average with
   the even-window 2×f convolution filter ``[0.5, 1...1, 0.5]/f``
@@ -30,19 +55,26 @@ Parity notes (SURVEY §7.4):
   ``anchor + d*slope``) so float accumulation matches the reference
   bit-for-bit before rounding.
 
-Internal helpers build SQL fragments (strings); public operators wrap
-them in ``F.expr``. ``let``-style bindings are emulated with
-``transform(array(<value>), _name -> <body>)[0]`` so expensive
-sub-arrays are computed once, not per element. A column that a
-per-element lambda reads is bound the same way (``scaling``):
+The JVM operators' internal helpers build SQL fragments (strings);
+public operators wrap them in ``F.expr``. ``let``-style bindings are
+emulated with ``transform(array(<value>), _name -> <body>)[0]`` so
+expensive sub-arrays are computed once, not per element. A column that
+a per-element lambda reads is bound the same way (``rescaling``):
 CollapseProject inlines a column's producer wherever it is referenced
-only once, and inside the lambda that means once per element.
+only once, and inside the lambda that means once per element. These
+notes now cover only the trend family, ``keep_ts`` and ``rescaling``.
 """
 
 from __future__ import annotations
 
+from decimal import ROUND_HALF_EVEN, Context, Decimal
+
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+from pyspark.sql.functions import arrow_udf
+from pyspark.sql.types import ArrayType, FloatType
 
 
 def _sum(arr: str) -> str:
@@ -132,75 +164,205 @@ def trend(x: str, freq: int = 30) -> Column:
 # ---------------------------------------------------------------------------
 
 
-def detrend(x: str, trend_col: str, strict: bool = False) -> Column:
-    """W2. As-shipped: identity (reference ``notebooks/utils.py:258``).
-    strict=True: documented x - trend, bround 3."""
-    if not strict:
-        return F.col(x)
-    return F.expr(
-        f"zip_with({x}, {trend_col}, (a, b) -> "
-        f"CAST(bround(CAST(a AS DOUBLE) - CAST(b AS DOUBLE), 3) AS FLOAT))"
-    )
+def detrend(x: str, trend_col: str) -> Column:
+    """W2. As-shipped: identity (reference ``notebooks/utils.py:258``)."""
+    return F.col(x)
 
 
-def retrend(x: str, trend_col: str, strict: bool = False) -> Column:
-    """W3. As-shipped: identity (reference ``notebooks/utils.py:270``).
-    strict=True: documented x + trend, bround 3."""
-    if not strict:
-        return F.col(x)
-    return F.expr(
-        f"zip_with({x}, {trend_col}, (a, b) -> "
-        f"CAST(bround(CAST(a AS DOUBLE) + CAST(b AS DOUBLE), 3) AS FLOAT))"
-    )
+def retrend(x: str, trend_col: str) -> Column:
+    """W3. As-shipped: identity (reference ``notebooks/utils.py:270``)."""
+    return F.col(x)
 
 
 # ---------------------------------------------------------------------------
-# A1/A2: per-series mean / std (population)
+# NumPy kernels: rounding, Arrow <-> blocks, A1/A2 mean/std, W4 scaling,
+# W6/W7 X/y windows
 # ---------------------------------------------------------------------------
+
+# Relative half-width of the window around a rounding tie that goes
+# through Decimal. The float product ``v·10ⁿ`` and the decimal string
+# Spark rounds both lie within a few ulps (2⁻⁵² relative) of the exact
+# value; this window is millions of times wider than that.
+_TIE_WINDOW = 1e-9
+_DECIMAL = Context(prec=400)  # room for every double at any scale
+_FLOAT_ARRAY = ArrayType(FloatType())
+
+
+def bround_half_even(a, ndigits: int) -> np.ndarray:
+    """Spark's ``bround(a, ndigits)`` on doubles, elementwise in NumPy.
+
+    Spark rounds the decimal that ``Double.toString`` prints, HALF_EVEN,
+    back to a double. Here ``k = floor(a·10ⁿ)``, plus one when the
+    fraction is above a half; ``k / 10ⁿ`` is then the double nearest
+    the decimal, because both operands are exact and IEEE division is
+    correctly rounded. Only elements whose fraction lies within
+    ``_TIE_WINDOW·max(1, |a·10ⁿ|)`` of one half, or whose product
+    overflows, round ``Decimal(repr(a))`` instead. Zeros come back
+    +0.0 (Spark's BigDecimal has no negative zero); NaN and ±Inf pass
+    through. ``ndigits`` must be non-negative."""
+    a = np.asarray(a, dtype=np.float64)
+    scale = 10.0 ** ndigits
+    with np.errstate(over="ignore", invalid="ignore"):
+        t = a * scale
+        k = np.floor(t)
+        frac = t - k
+        out = (k + (frac > 0.5)) / scale + 0.0
+        # a product that overflows leaves frac NaN: Decimal too
+        near = np.isfinite(a) & ~(
+            np.abs(frac - 0.5) >= _TIE_WINDOW * np.maximum(1.0, np.abs(t))
+        )
+    if near.any():
+        q = Decimal(1).scaleb(-ndigits)
+        idx = np.flatnonzero(near)
+        out.flat[idx] = [
+            float(Decimal(repr(v)).quantize(q, ROUND_HALF_EVEN, _DECIMAL)) + 0.0
+            for v in a.flat[idx].tolist()
+        ]
+    return np.where(np.isfinite(a), out, a)
+
+
+def _round3(v: np.ndarray) -> np.ndarray:
+    """``CAST(bround(v, 3) AS FLOAT)``."""
+    return bround_half_even(v, 3).astype(np.float32)
+
+
+def _blocks(arr: pa.Array):
+    """Split a ``list<float|double>`` Arrow array into 2-D blocks.
+
+    Yields ``(rows, block, nulls)`` for each distinct length of the
+    non-null rows: their indices, a float64 ``(len(rows), length)``
+    block, and the block's null-element mask (None when the array holds
+    no null element; a null element reads NaN in ``block``)."""
+    offsets = arr.offsets.to_numpy()
+    values = arr.values
+    flat = values.to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
+    null_elem = (
+        values.is_null().to_numpy(zero_copy_only=False)
+        if values.null_count else None
+    )
+    lengths = np.diff(offsets)
+    valid = arr.is_valid().to_numpy(zero_copy_only=False)
+    for n in np.unique(lengths[valid]):
+        rows = np.flatnonzero(valid & (lengths == n))
+        idx = offsets[rows, None] + np.arange(n)
+        yield rows, flat[idx], None if null_elem is None else null_elem[idx]
+
+
+def _list_array(n_rows: int, parts) -> pa.Array:
+    """An ``array<float>`` Arrow array from ``(rows, block, nulls)``
+    parts (``nulls`` a mask of ``block``'s shape, or None); rows no
+    part names are null."""
+    lengths = np.zeros(n_rows, dtype=np.int32)
+    for rows, block, _ in parts:
+        lengths[rows] = block.shape[1]
+    offsets = np.zeros(n_rows + 1, dtype=np.int32)
+    np.cumsum(lengths, out=offsets[1:])
+    flat = np.empty(offsets[-1], dtype=np.float32)
+    null_elem = None
+    valid = np.zeros(n_rows, dtype=bool)
+    for rows, block, nulls in parts:
+        valid[rows] = True
+        idx = offsets[rows, None] + np.arange(block.shape[1])
+        flat[idx] = block
+        if nulls is not None:
+            if null_elem is None:
+                null_elem = np.zeros(len(flat), dtype=bool)
+            null_elem[idx] = nulls
+    return pa.ListArray.from_arrays(
+        pa.array(offsets), pa.array(flat, mask=null_elem), mask=pa.array(~valid)
+    )
+
+
+def _mean(block: np.ndarray) -> np.ndarray:
+    """``aggregate(x, 0D, (a, v) -> a + v) / size(x)`` per row: the
+    sequential fold, not NumPy's pairwise sum."""
+    return np.cumsum(block, axis=1)[:, -1] / block.shape[1]
+
+
+def _std(block: np.ndarray, mean: np.ndarray) -> np.ndarray:
+    """Population std per row, two-pass like numpy, folded in order."""
+    dev = block - mean[:, None]
+    return np.sqrt(np.cumsum(dev * dev, axis=1)[:, -1] / block.shape[1])
+
+
+def _series_stat(arr: pa.Array, stat) -> pa.Array:
+    """``stat(block)`` (unrounded float64 per row) rounded as
+    ``CAST(bround(·, 3) AS FLOAT)``. Null for a null or empty series
+    and for one holding a null element, as Spark's fold and its
+    division by a zero size give."""
+    out = np.zeros(len(arr), dtype=np.float32)
+    null = np.ones(len(arr), dtype=bool)
+    for rows, block, nulls in _blocks(arr):
+        if block.shape[1]:
+            out[rows] = _round3(stat(block))
+            null[rows] = False if nulls is None else nulls.any(axis=1)
+    return pa.array(out, mask=null)
+
+
+@arrow_udf(FloatType())
+def _series_mean_udf(x: pa.Array) -> pa.Array:
+    return _series_stat(x, _mean)
+
+
+@arrow_udf(FloatType())
+def _series_std_udf(x: pa.Array) -> pa.Array:
+    return _series_stat(x, lambda block: _std(block, _mean(block)))
 
 
 def series_mean(x: str) -> Column:
     """A1: ``round(np.mean(x), 3)`` as float32
-    (reference ``notebooks/utils.py:274-281``)."""
-    return F.expr(f"CAST(bround({_sum(x)} / size({x}), 3) AS FLOAT)")
+    (reference ``notebooks/utils.py:274-281``). NumPy kernel."""
+    return _series_mean_udf(x)
 
 
 def series_std(x: str) -> Column:
     """A2: population std (ddof=0 — ``np.std``), bround 3, float32
     (reference ``notebooks/utils.py:284-291``). Two-pass like numpy:
-    mean first, then mean of squared deviations."""
-    var = _let(
-        f"({_sum(x)} / size({x}))",
-        "_m",
-        f"aggregate({x}, 0D, (a, v) -> a + (CAST(v AS DOUBLE) - _m) "
-        f"* (CAST(v AS DOUBLE) - _m)) / size({x})",
-    )
-    return F.expr(f"CAST(bround(sqrt({var}), 3) AS FLOAT)")
+    mean first, then mean of squared deviations. NumPy kernel."""
+    return _series_std_udf(x)
 
 
-# ---------------------------------------------------------------------------
-# W4/W5: scaling / rescaling
-# ---------------------------------------------------------------------------
+def _scaled(block: np.ndarray, nulls: np.ndarray | None):
+    """``round((x - mean)/std, 3)`` per row with the row's own rounded
+    float32 mean and std, and the null mask Spark gives: a null element
+    nulls the whole row (its mean is null), and so does std = 0
+    (Spark's division by zero is null, not ±Inf)."""
+    if not block.shape[1]:
+        return block.astype(np.float32), None
+    mean = _mean(block)
+    m = _round3(mean).astype(np.float64)
+    s = _round3(_std(block, mean)).astype(np.float64)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        out = _round3((block - m[:, None]) / s[:, None])
+    row_null = s == 0
+    if nulls is not None:
+        row_null |= nulls.any(axis=1)
+    if not row_null.any():
+        return out, None
+    return out, np.broadcast_to(row_null[:, None], out.shape)
 
 
-def scaling(x: str, mean: str = "mean", std: str = "std") -> Column:
-    """W4: elementwise ``round((x - mean)/std, 3)``
-    (reference ``notebooks/utils.py:294-303``). std=0 ⇒ ±Infinity/NaN,
-    matching numpy's silent division (mitigated upstream by keep_ts).
-    ``mean`` and ``std`` are bound once, outside the per-element lambda
-    (see the module docstring)."""
-    return F.expr(
-        _let(mean, "_mean", _let(std, "_std", (
-            f"transform({x}, v -> CAST(bround((CAST(v AS DOUBLE) - _mean)"
-            f" / _std, 3) AS FLOAT))"
-        )))
-    )
+@arrow_udf(_FLOAT_ARRAY)
+def _scaling_udf(x: pa.Array) -> pa.Array:
+    return _list_array(len(x), [
+        (rows, *_scaled(block, nulls)) for rows, block, nulls in _blocks(x)
+    ])
+
+
+def scaling(x: str) -> Column:
+    """W4: elementwise ``round((x - mean)/std, 3)`` with the series' own
+    ``series_mean`` and ``series_std`` (reference
+    ``notebooks/utils.py:294-303``). std = 0 gives null elements
+    (mitigated upstream by keep_ts). NumPy kernel: it takes only the
+    series (see the module docstring)."""
+    return _scaling_udf(x)
 
 
 def rescaling(x: str, mean: str = "mean", std: str = "std") -> Column:
     """W5: elementwise ``round(x*std + mean, 3)``
     (reference ``notebooks/utils.py:306-316``). ``mean`` and ``std``
-    are bound once, as in ``scaling``."""
+    are bound once, outside the per-element lambda (see the module
+    docstring)."""
     return F.expr(
         _let(mean, "_mean", _let(std, "_std", (
             f"transform({x}, v -> CAST(bround(CAST(v AS DOUBLE) * _std"
@@ -209,44 +371,55 @@ def rescaling(x: str, mean: str = "mean", std: str = "std") -> Column:
     )
 
 
-# ---------------------------------------------------------------------------
-# W6/W7: X / y windowing
-# ---------------------------------------------------------------------------
-
-
-def _require_length(x: str, n: int, what: str, body: str) -> str:
-    """``body`` for series of at least ``n`` elements, else fail the
-    job naming the length. A negative ``slice`` start counts from the
-    end, so a short series would otherwise yield a wrong window (X
-    overlapping y), an empty one, or an opaque START error."""
-    return (
-        f"CASE WHEN size({x}) < {n} THEN raise_error(concat("
-        f"'{what} needs a series of at least {n} elements, got ', "
-        f"CAST(size({x}) AS STRING))) ELSE {body} END"
+def _window(arr: pa.Array, need: int, width: int, what: str):
+    """``CAST(bround(v, 3) AS FLOAT)`` over ``x[-need : -need+width]``
+    of every series, which must hold at least ``need`` elements (a
+    null series counts as -1, as Spark's ``size`` does): a shorter one
+    would otherwise yield a wrong window (X overlapping y) or an empty
+    one."""
+    sizes = np.where(
+        arr.is_valid().to_numpy(zero_copy_only=False),
+        np.diff(arr.offsets.to_numpy()), -1,
     )
+    short = np.flatnonzero(sizes < need)
+    if len(short):
+        raise ValueError(
+            f"{what} needs a series of at least {need} elements, "
+            f"got {sizes[short[0]]}"
+        )
+    parts = []
+    for rows, block, nulls in _blocks(arr):
+        cut = slice(block.shape[1] - need, block.shape[1] - need + width)
+        parts.append((rows, _round3(block[:, cut]),
+                      None if nulls is None else nulls[:, cut]))
+    return _list_array(len(arr), parts)
 
 
 def get_x(x: str, x_days: int = 365, y_days: int = 92) -> Column:
     """W6: history slice ``x[-X-y : -y]``, bround 3
     (reference ``notebooks/utils.py:320-331``). A series shorter than
-    ``x_days + y_days`` fails the job."""
+    ``x_days + y_days`` fails the job. NumPy kernel."""
     n = x_days + y_days
-    return F.expr(_require_length(
-        x, n, f"get_x (x_days {x_days} + y_days {y_days})",
-        f"transform(slice({x}, size({x}) - {n} + 1, {x_days}), "
-        f"v -> CAST(bround(CAST(v AS DOUBLE), 3) AS FLOAT))",
-    ))
+    what = f"get_x (x_days {x_days} + y_days {y_days})"
+
+    @arrow_udf(_FLOAT_ARRAY)
+    def _get_x(x: pa.Array) -> pa.Array:
+        return _window(x, n, x_days, what)
+
+    return _get_x(x)
 
 
 def get_y(x: str, y_days: int = 92) -> Column:
     """W7: label slice ``x[-y:]``, bround 3
     (reference ``notebooks/utils.py:334-344``). A series shorter than
-    ``y_days`` fails the job."""
-    return F.expr(_require_length(
-        x, y_days, f"get_y (y_days {y_days})",
-        f"transform(slice({x}, size({x}) - {y_days} + 1, {y_days}), "
-        f"v -> CAST(bround(CAST(v AS DOUBLE), 3) AS FLOAT))",
-    ))
+    ``y_days`` fails the job. NumPy kernel."""
+    what = f"get_y (y_days {y_days})"
+
+    @arrow_udf(_FLOAT_ARRAY)
+    def _get_y(x: pa.Array) -> pa.Array:
+        return _window(x, y_days, y_days, what)
+
+    return _get_y(x)
 
 
 # ---------------------------------------------------------------------------

@@ -14,9 +14,14 @@ re-reads (``notebooks/scoring.py:242-336``) because a 2.5M-row Python
 UDF chain is fragile — these stages are pure DataFrame transforms: the
 whole pre_processing chain is ONE narrow stage (no shuffle at all,
 since every operator is per-row array math) with no checkpoint.
+mean, std, the scaled series, X and y are NumPy kernels
+(``operators/timeseries.py``): scalar Arrow UDFs that Spark evaluates
+in ONE ``ArrowEvalPython`` node, together with the scorer's
+``score(X)`` on the serve path. The trend family stays in the JVM;
 Catalyst's optimizer keeps the expensive shared trend array in its own
 projection, so the extrapolation and trajectory columns that both read
-it do not evaluate it again (pinned by tests/test_plan_quality.py).
+it do not evaluate it again. Both plan shapes are pinned by
+tests/test_plan_quality.py.
 """
 
 from __future__ import annotations
@@ -55,7 +60,7 @@ def pre_processing(
     y_days: int = 92,
     trend_window_days: int = 183,
 ) -> DataFrame:
-    """The reference's 7-operator pre-processing chain, native.
+    """The reference's 7-operator pre-processing chain.
 
     Adds: balance_trend_1MW, balance_detrend_1MW, mean, std,
     balance_detrend_1MW_scaled, X (and y unless serving),
@@ -75,7 +80,7 @@ def pre_processing(
         .withColumn("std", ts.series_std("balance_detrend_1MW"))
         .withColumn(
             "balance_detrend_1MW_scaled",
-            ts.scaling("balance_detrend_1MW", "mean", "std"),
+            ts.scaling("balance_detrend_1MW"),
         )
         .withColumn("X", ts.get_x("balance_detrend_1MW_scaled", x_days, y_days))
     )
@@ -185,17 +190,20 @@ def r2_metrics(
             f"(CAST(a AS DOUBLE) - CAST(b AS DOUBLE)) * (CAST(a AS DOUBLE) - CAST(b AS DOUBLE))), "
             f"0D, (a, v) -> a + v)"
         )
-        sst = (
-            f"transform(array({mean_t}), _m -> "
-            f"aggregate({t}, 0D, (a, v) -> a + (CAST(v AS DOUBLE) - _m) * (CAST(v AS DOUBLE) - _m)))[0]"
+        sst = ts._let(
+            mean_t, "_m",
+            f"aggregate({t}, 0D, (a, v) -> a + (CAST(v AS DOUBLE) - _m) * (CAST(v AS DOUBLE) - _m))",
         )
         # floor(x + 0.5) instead of round(): identical text-portable
         # semantics in Spark SQL and DuckDB for all doubles (round()
-        # differs between engines on negative halves)
-        return (
-            f"CASE WHEN {sst} = 0.0D THEN CAST(NULL AS BIGINT) "
-            f"ELSE CAST(floor((1.0D - {sse} / {sst}) * 1000000.0D + 0.5D) "
-            f"AS BIGINT) END"
+        # differs between engines on negative halves). SST is bound
+        # once: the CASE reads it twice, and an unbound fold would be
+        # evaluated twice per window.
+        return ts._let(
+            sst, "_sst",
+            f"CASE WHEN _sst = 0.0D THEN CAST(NULL AS BIGINT) "
+            f"ELSE CAST(floor((1.0D - {sse} / _sst) * 1000000.0D + 0.5D) "
+            f"AS BIGINT) END",
         )
 
     from time_series_prediction_spark.operators.losses import (

@@ -46,6 +46,7 @@ import math
 
 from pyspark.sql import DataFrame, SparkSession
 
+from time_series_prediction_spark.operators.timeseries import bround_half_even
 from time_series_prediction_spark.sources.io import date_sequence_col
 
 # 13 hex chars of md5 = 52 bits — exactly representable in a double,
@@ -141,8 +142,6 @@ def generate_series_frame(
     range splits, no shuffle: 2.5M series fan out linearly."""
     import datetime as _dt
     import hashlib
-    from decimal import ROUND_HALF_EVEN, Decimal
-
     import numpy as np
     import pandas as pd
 
@@ -152,7 +151,6 @@ def generate_series_frame(
     nf = float(n)
     two_pi = 2 * math.pi
     per = float(cycle_period)
-    q2 = Decimal("0.01")
 
     def _u_of(sid: str, tag, extra="0") -> float:
         h = hashlib.md5(f"{seed}|{sid}|{tag}|{extra}".encode()).hexdigest()
@@ -229,20 +227,8 @@ def generate_series_frame(
                     )
                     spike = np.where(i_f >= float(t_k), a_k, 0.0)
                     total = total + spike
-                # bround(·, 2): shortest-repr decimal, HALF_EVEN —
-                # BigDecimal.valueOf semantics, element by element
-                bal = np.fromiter(
-                    (
-                        float(
-                            Decimal(repr(float(v))).quantize(
-                                q2, rounding=ROUND_HALF_EVEN
-                            )
-                        )
-                        for v in total
-                    ),
-                    dtype=np.float32,
-                    count=n,
-                )
+                # Spark's bround(·, 2): shortest-repr decimal, HALF_EVEN
+                bal = bround_half_even(total, 2).astype(np.float32)
                 out_bal.append(bal)
                 out_type.append((1, 4, 2, 3)[choice])
             yield pd.DataFrame(
