@@ -1,8 +1,9 @@
 #!/usr/bin/env bash
 # Full verification recipe (what the round close-out runs):
-#   0. the Spark-free structural tests, first: a dead definition, a grown
-#      perfbench import cone or a bad validate_registry invocation fails
-#      in seconds, before the long passes
+#   0. the Spark-free tests, first: a dead definition, a grown perfbench
+#      import cone, a bad validate_registry invocation or a zipimporter
+#      patch that re-reads an unchanged archive fails in seconds, before
+#      the long passes
 #   0b. the plan-shape and NumPy-kernel parity tests (about a minute): a
 #      second Python node or a kernel that drifts from the JVM SQL it
 #      replaced fails here, before the long passes
@@ -13,8 +14,9 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 export SPARK_LOCAL_DIRS=/tmp/spark-local
-echo "== structural tests =="
-python -m pytest -q tests/test_module_reachability.py tests/test_validate_registry_args.py
+echo "== structural and Spark-free tests =="
+python -m pytest -q tests/test_module_reachability.py tests/test_validate_registry_args.py \
+  tests/test_zipimport_patch.py
 echo "== plan shape and kernel parity =="
 python -m pytest -q tests/test_timeseries_kernels.py \
   tests/test_plan_quality.py::test_preprocessing_is_single_narrow_stage \

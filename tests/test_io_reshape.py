@@ -201,3 +201,90 @@ def test_read_table_memo_evicts_foreign_session_entries(spark, sf_dir):
     d2 = read_table(spark, sf_dir, "region")
     assert d2 is not d1
     assert _READ_TABLE_MEMO[key][0] is spark  # rebuilt, not pinned
+
+
+def _jobs_started(spark, action):
+    """``action()`` and the number of Spark jobs it started, counted in
+    a job group of its own. The status store takes listener events in
+    order, so once a sentinel job run afterwards is visible, so is
+    every job ``action`` started."""
+    import time
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"probe-{uuid.uuid4().hex}"
+    try:
+        sc.setJobGroup(group, group)
+        out = action()
+        sc.setJobGroup(group + "-sentinel", group)
+        sc.parallelize([0], 1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(group + "-sentinel"):
+        assert time.monotonic() < deadline, "the sentinel job never showed"
+        time.sleep(0.05)
+    return out, len(tracker.getJobIdsForGroup(group))
+
+
+def _parquet_dir(spark, path) -> str:
+    spark.range(6).selectExpr("id", "id % 2 AS p").coalesce(1).write.parquet(str(path))
+    return str(path)
+
+
+def test_read_parquet_memo_starts_no_job(spark, tmp_path):
+    """The second read of an unchanged directory returns the same
+    DataFrame and skips the schema-inference job the first one ran."""
+    from time_series_prediction_spark.sources.io import read_parquet
+
+    path = _parquet_dir(spark, tmp_path / "t.parquet")
+    first, jobs = _jobs_started(spark, lambda: read_parquet(spark, path))
+    assert jobs >= 1  # the footer schema job the memo saves
+    again, jobs = _jobs_started(spark, lambda: read_parquet(spark, path))
+    assert again is first
+    assert jobs == 0
+    assert again.count() == 6  # the plan still scans the files
+
+
+def test_read_parquet_memo_invalidates_on_file_changes(spark, tmp_path):
+    """A part file rewritten in place, or one added in a partition
+    subdirectory, gives a fresh plan that sees the new rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from time_series_prediction_spark.sources.io import read_parquet
+
+    path = _parquet_dir(spark, tmp_path / "t.parquet")
+    d1 = read_parquet(spark, path)
+    part = next(p for p in (tmp_path / "t.parquet").iterdir() if p.suffix == ".parquet")
+    os.utime(part, ns=(os.stat(part).st_mtime_ns + 10**9,) * 2)
+    d2 = read_parquet(spark, path)
+    assert d2 is not d1
+    assert read_parquet(spark, path) is d2
+
+    root = tmp_path / "parts.parquet"
+    pq.write_to_dataset(pa.table({"p": [1, 2], "x": [1.0, 2.0]}), str(root), partition_cols=["p"])
+    assert read_parquet(spark, str(root)).count() == 2
+    pq.write_table(pa.table({"x": [3.0]}), str(root / "p=1" / "extra.parquet"))
+    assert read_parquet(spark, str(root)).count() == 3
+
+
+def test_read_parquet_memo_is_per_session_and_cleared(spark, tmp_path):
+    """Another session plans its own DataFrame, and the bench-boundary
+    reset empties the memo."""
+    from time_series_prediction_spark.session_memo import clear_session_memos
+    from time_series_prediction_spark.sources import io as iomod
+
+    path = _parquet_dir(spark, tmp_path / "t.parquet")
+    mine = iomod.read_parquet(spark, path)
+    other = spark.newSession()
+    theirs = iomod.read_parquet(other, path)
+    assert theirs is not mine
+    assert theirs.sparkSession is other
+    assert iomod.read_parquet(spark, path).sparkSession is spark
+
+    clear_session_memos()
+    assert not iomod._READ_PARQUET_MEMO
+    assert iomod.read_parquet(spark, path) is not mine

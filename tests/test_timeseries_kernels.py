@@ -14,10 +14,13 @@ from __future__ import annotations
 
 import math
 import struct
+import sys
 
 import numpy as np
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.functions import arrow_udf
 
 from tests.test_timeseries_ops import N_DAYS, _make_series
 from time_series_prediction_spark.operators import timeseries as ts
@@ -231,3 +234,65 @@ def test_bround_half_even_matches_spark(spark, ndigits):
         if _bits(float(got[i])) != _bits(w)
     ]
     assert not bad, f"{len(bad)} differ, first {bad[:5]}"
+
+
+def test_pre_processing_reuses_the_window_udfs(spark, monkeypatch):
+    """Building the plan twice reuses one X UDF object: a UDF pickles its
+    function on first use, and a new one per call would pay that on
+    every build."""
+    from time_series_prediction_spark.plans.preprocess import pre_processing
+
+    made = []
+    build = ts._get_x_udf
+
+    def spy(*args):
+        made.append(build(*args))
+        return made[-1]
+
+    monkeypatch.setattr(ts, "_get_x_udf", spy)
+    df = spark.createDataFrame(
+        [(1, [float(i) for i in range(N_DAYS)])], "id long, balance array<float>"
+    )
+    for _ in range(2):
+        pre_processing(df, "2020-03-31", serving=False, freq=30)
+    assert len(made) == 2
+    assert made[0] is made[1]
+
+
+def test_reused_worker_runs_the_zip_invalidate_patch(spark):
+    """Every Python task starts with ``importlib.invalidate_caches()``.
+    Once a worker has imported the package, that call goes through
+    ``session.py``'s zipimporter patch (on CPython before 3.12), which
+    then knows every zip archive the worker imports from."""
+
+    @arrow_udf("string")
+    def probe(x: pa.Array) -> pa.Array:
+        import os
+        import sys
+        import zipimport
+
+        import time_series_prediction_spark.session as session
+
+        if sys.version_info >= (3, 12):
+            report = f"{os.getpid()}|True|"
+        else:
+            active = zipimport.zipimporter.invalidate_caches is session._invalidate_zip_if_changed
+            zips = {
+                v.archive for v in sys.path_importer_cache.values()
+                if isinstance(v, zipimport.zipimporter)
+            }
+            report = f"{os.getpid()}|{active}|{zips <= set(session._ZIP_DIRECTORIES)}"
+        return pa.array([report] * len(x))
+
+    pids = set()
+    for _ in range(8):
+        pid, active, recorded = (
+            spark.range(1, numPartitions=1).select(probe("id")).first()[0].split("|")
+        )
+        assert active == "True"
+        if pid in pids:  # a reused worker: its task set-up ran the patch
+            if sys.version_info < (3, 12):
+                assert recorded == "True"
+            return
+        pids.add(pid)
+    pytest.fail(f"no Python worker was reused across 8 jobs: {sorted(pids)}")

@@ -21,7 +21,7 @@ Layout:
     operators/ — time-series ops, reshape, dedup, similarity, text
     plans/     — end-to-end pipelines + relational query definitions
     streaming/ — Structured Streaming paths for the events table
-    model/     — train/score scaffolding (TF-optional, stub scorer)
+    model/     — NumPy 1-D CNN, training feed, Arrow UDF scoring
 """
 
 from time_series_prediction_spark.session import get_spark

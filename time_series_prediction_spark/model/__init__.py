@@ -1,1 +1,1 @@
-"""The reference 1-D CNN: NumPy backend, training feed, pandas_udf scoring."""
+"""The reference 1-D CNN: NumPy backend, training feed, scalar Arrow UDF scoring."""

@@ -11,7 +11,7 @@ Forward pass + analytic backprop, Glorot-uniform init from a fixed
 seed (fully deterministic given seed + data order), Adam with the
 keras defaults (lr=1e-3, β1=.9, β2=.999, ε=1e-7). This is the engine's
 one model backend: it trains on ``train.training_batches`` and scores
-through ``scoring.numpy_cnn_factory``'s iterator pandas_udf, so the
+through ``scoring.numpy_cnn_factory`` in a scalar Arrow UDF, so the
 full train → score → R² lifecycle runs without TensorFlow.
 
 Two forward passes, one set of doubles. ``train_batch`` runs

@@ -67,6 +67,7 @@ notes now cover only the trend family, ``keep_ts`` and ``rescaling``.
 
 from __future__ import annotations
 
+import functools
 from decimal import ROUND_HALF_EVEN, Context, Decimal
 
 import numpy as np
@@ -399,6 +400,20 @@ def get_x(x: str, x_days: int = 365, y_days: int = 92) -> Column:
     """W6: history slice ``x[-X-y : -y]``, bround 3
     (reference ``notebooks/utils.py:320-331``). A series shorter than
     ``x_days + y_days`` fails the job. NumPy kernel."""
+    return _get_x_udf(x_days, y_days)(x)
+
+
+def get_y(x: str, y_days: int = 92) -> Column:
+    """W7: label slice ``x[-y:]``, bround 3
+    (reference ``notebooks/utils.py:334-344``). A series shorter than
+    ``y_days`` fails the job. NumPy kernel."""
+    return _get_y_udf(y_days)(x)
+
+
+# One UDF object per window: a UDF pickles its function on first use,
+# so a cached one pays that once, not on every plan build.
+@functools.cache
+def _get_x_udf(x_days: int, y_days: int):
     n = x_days + y_days
     what = f"get_x (x_days {x_days} + y_days {y_days})"
 
@@ -406,20 +421,18 @@ def get_x(x: str, x_days: int = 365, y_days: int = 92) -> Column:
     def _get_x(x: pa.Array) -> pa.Array:
         return _window(x, n, x_days, what)
 
-    return _get_x(x)
+    return _get_x
 
 
-def get_y(x: str, y_days: int = 92) -> Column:
-    """W7: label slice ``x[-y:]``, bround 3
-    (reference ``notebooks/utils.py:334-344``). A series shorter than
-    ``y_days`` fails the job. NumPy kernel."""
+@functools.cache
+def _get_y_udf(y_days: int):
     what = f"get_y (y_days {y_days})"
 
     @arrow_udf(_FLOAT_ARRAY)
     def _get_y(x: pa.Array) -> pa.Array:
         return _window(x, y_days, y_days, what)
 
-    return _get_y(x)
+    return _get_y
 
 
 # ---------------------------------------------------------------------------

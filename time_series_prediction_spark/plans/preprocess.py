@@ -70,44 +70,34 @@ def pre_processing(
     nxt_start = end + dt.timedelta(days=1)
     nxt_end = end + dt.timedelta(days=y_days)
 
-    out = (
-        df.withColumn("balance_trend_1MW", ts.trend(value_col, freq))
-        .withColumn(
-            "balance_detrend_1MW",
-            ts.detrend(value_col, "balance_trend_1MW"),
-        )
-        .withColumn("mean", ts.series_mean("balance_detrend_1MW"))
-        .withColumn("std", ts.series_std("balance_detrend_1MW"))
-        .withColumn(
-            "balance_detrend_1MW_scaled",
-            ts.scaling("balance_detrend_1MW"),
-        )
-        .withColumn("X", ts.get_x("balance_detrend_1MW_scaled", x_days, y_days))
-    )
-    if not serving:
-        out = out.withColumn("y", ts.get_y("balance_detrend_1MW_scaled", y_days))
-
+    # one projection per dependency layer: each withColumn call analyzes
+    # the whole plan again
+    out = df.withColumn("balance_trend_1MW", ts.trend(value_col, freq))
     out = out.withColumn(
-        "transactiondate_next3months",
-        F.sequence(
-            F.lit(str(nxt_start)).cast("date"),
-            F.lit(str(nxt_end)).cast("date"),
-            F.expr("interval 1 day"),
-        ),
-    ).withColumn(
-        "trend_next_3months_1MW",
-        ts.extrapolate_trend(
-            "balance_trend_1MW",
-            window_days=trend_window_days,
-            horizon_days=y_days,
-            serving=serving,
-        ),
+        "balance_detrend_1MW", ts.detrend(value_col, "balance_trend_1MW")
+    )
+    out = out.withColumns({
+        "mean": ts.series_mean("balance_detrend_1MW"),
+        "std": ts.series_std("balance_detrend_1MW"),
+        "balance_detrend_1MW_scaled": ts.scaling("balance_detrend_1MW"),
+    })
+    last = {"X": ts.get_x("balance_detrend_1MW_scaled", x_days, y_days)}
+    if not serving:
+        last["y"] = ts.get_y("balance_detrend_1MW_scaled", y_days)
+    last["transactiondate_next3months"] = F.sequence(
+        F.lit(str(nxt_start)).cast("date"),
+        F.lit(str(nxt_end)).cast("date"),
+        F.expr("interval 1 day"),
+    )
+    last["trend_next_3months_1MW"] = ts.extrapolate_trend(
+        "balance_trend_1MW",
+        window_days=trend_window_days,
+        horizon_days=y_days,
+        serving=serving,
     )
     if serving:
-        out = out.withColumn(
-            "trajectory_6months", ts.trajectory("balance_trend_1MW", 6)
-        )
-    return out
+        last["trajectory_6months"] = ts.trajectory("balance_trend_1MW", 6)
+    return out.withColumns(last)
 
 
 def post_processing(

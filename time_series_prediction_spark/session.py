@@ -17,8 +17,49 @@ decisions that static configs get wrong at 100 TB.
 from __future__ import annotations
 
 import os
+import sys
+import zipimport
 
 from pyspark.sql import SparkSession
+
+if sys.version_info < (3, 12):
+    # PySpark's worker calls importlib.invalidate_caches() before every
+    # task (worker_util.setup_spark_files). On CPython 3.11 that makes
+    # each zipimporter in sys.path_importer_cache re-parse its archive's
+    # whole directory. A worker holds one per imported subpackage of
+    # pyspark.zip (13-14 re-reads of a 1,328-entry directory) plus the
+    # py4j zip and the spark-core jar: 0.15-0.35 s per task on a 4-core
+    # VM. CPython 3.12 made the call lazy (gh-103200). Here an archive
+    # whose (inode, size, mtime) still matches its last read adopts that
+    # read, so a task pays one stat per importer. The patch lands when a
+    # worker first imports this package: a fresh worker's first task
+    # still pays the full re-read, its second one read per archive.
+    _ZIP_DIRECTORIES: dict[str, tuple[tuple[int, int, int], dict]] = {}
+    _reread_zip_directory = zipimport.zipimporter.invalidate_caches
+
+    def _invalidate_zip_if_changed(self) -> None:
+        """``zipimporter.invalidate_caches`` that re-reads the archive only
+        if it was rewritten, resized or replaced since its last read. A
+        missing or unreadable archive still empties the importer."""
+        try:
+            st = os.stat(self.archive)
+            stat = (st.st_ino, st.st_size, st.st_mtime_ns)
+        except OSError:
+            stat = None
+        seen = _ZIP_DIRECTORIES.get(self.archive)
+        if stat is not None and seen is not None and seen[0] == stat:
+            self._files = seen[1]
+            zipimport._zip_directory_cache[self.archive] = seen[1]
+            return
+        _reread_zip_directory(self)
+        # the stdlib method drops the archive from the cache when the
+        # read fails; remember only successful reads
+        if stat is not None and self.archive in zipimport._zip_directory_cache:
+            _ZIP_DIRECTORIES[self.archive] = (stat, self._files)
+        else:
+            _ZIP_DIRECTORIES.pop(self.archive, None)
+
+    zipimport.zipimporter.invalidate_caches = _invalidate_zip_if_changed
 
 _DEFAULTS = {
     # Arrow: vectorized JVM<->Python transfer for pandas_udf / toPandas.
