@@ -4,9 +4,11 @@
 #      import cone, a bad validate_registry invocation or a zipimporter
 #      patch that re-reads an unchanged archive fails in seconds, before
 #      the long passes
-#   0b. the plan-shape and NumPy-kernel parity tests (about a minute): a
-#      second Python node or a kernel that drifts from the JVM SQL it
-#      replaced fails here, before the long passes
+#   0b. the plan-shape, NumPy-kernel parity and session-default tests
+#      (about a minute): a second Python node, a kernel that
+#      drifts from the JVM SQL it replaced or a generated-class cache
+#      too small to hold a repeated pass fails here, before the long
+#      passes
 #   1. pytest at all three fixture scales (suite is scale-portable)
 #   2. full-registry DuckDB validation at sf0.01 and sf0.1
 #   3. perfbench: one serve and one query_mix run (the benchmark
@@ -17,8 +19,8 @@ export SPARK_LOCAL_DIRS=/tmp/spark-local
 echo "== structural and Spark-free tests =="
 python -m pytest -q tests/test_module_reachability.py tests/test_validate_registry_args.py \
   tests/test_zipimport_patch.py
-echo "== plan shape and kernel parity =="
-python -m pytest -q tests/test_timeseries_kernels.py \
+echo "== plan shape, kernel parity and session defaults =="
+python -m pytest -q tests/test_timeseries_kernels.py tests/test_session_defaults.py \
   tests/test_plan_quality.py::test_preprocessing_is_single_narrow_stage \
   tests/test_plan_quality.py::test_serve_plan_prunes_the_trend \
   tests/test_plan_quality.py::test_r2_metrics_folds_each_sst_once \

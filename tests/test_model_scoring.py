@@ -125,3 +125,34 @@ def test_scoring_udf_rejects_wrong_output_width(spark):
     scored = score_dataframe(pre, zero_model_factory(horizon=10), horizon=92)
     with pytest.raises(Exception, match=r"ValueError.*scorer expects"):
         scored.select("y_pred").collect()
+
+
+def test_score_dataframe_reuses_the_scorer_udf(spark, monkeypatch):
+    """Scoring twice with one factory reuses one UDF object: a UDF pickles
+    its function on first use, and a new one per call would pay that on
+    every build. The last-value baseline is one factory per horizon, so
+    ``cashflow_scoring_pipeline`` reuses its scorer too. The model is
+    still built in each task: the driver's ``model`` list, which every
+    task unpickles, stays empty."""
+    from time_series_prediction_spark.model import scoring
+
+    made = []
+    build = scoring.scoring_udf
+
+    def spy(*args):
+        made.append(build(*args))
+        return made[-1]
+
+    monkeypatch.setattr(scoring, "scoring_udf", spy)
+    df = spark.createDataFrame(
+        [(i, [0.0, float(i)]) for i in range(6)], "id long, X array<float>"
+    ).repartition(3)
+    for _ in range(2):
+        rows = score_dataframe(df, last_value_model_factory(3), horizon=3).collect()
+    assert len(made) == 2
+    assert made[0] is made[1]
+    assert last_value_model_factory(3) is last_value_model_factory(3)
+    assert sorted(r["y_pred"] for r in rows) == [[float(i)] * 3 for i in range(6)]
+    score = made[0].func
+    cells = dict(zip(score.__code__.co_freevars, score.__closure__))
+    assert cells["model"].cell_contents == []

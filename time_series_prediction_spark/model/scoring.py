@@ -25,6 +25,7 @@ via ``model.predict(v.reshape(-1, 365, 1))``). Engine improvements:
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 import numpy as np
@@ -37,8 +38,11 @@ ModelFn = Callable[[np.ndarray], np.ndarray]
 ModelFactory = Callable[[], ModelFn]
 
 
+@functools.cache
 def last_value_model_factory(horizon: int = 92) -> ModelFactory:
-    """Naive persistence baseline: repeat each series' last X value."""
+    """Naive persistence baseline: repeat each series' last X value.
+    One factory per horizon, so ``scoring_udf``'s cache holds one
+    scorer for it."""
 
     def make() -> ModelFn:
         def predict(x: np.ndarray) -> np.ndarray:
@@ -75,10 +79,15 @@ def numpy_cnn_factory(
     return make
 
 
+# One UDF object per (factory, horizon): a UDF pickles its function on
+# first use, so a cached one pays that once, not on every plan build.
+# Bounded, since a caller may make a new factory per request.
+@functools.lru_cache(maxsize=32)
 def scoring_udf(factory: ModelFactory, horizon: int = 92) -> Column:
     """Scalar Arrow UDF: ``array<float>`` X in, ``array<float>[horizon]``
     out. The model is built on the task's first batch (the closure's
-    ``model`` list is unpickled empty in every task)."""
+    ``model`` list is pickled empty on the driver, which never runs the
+    UDF, so every task unpickles it empty)."""
     model: list[ModelFn] = []
 
     @arrow_udf("array<float>")
