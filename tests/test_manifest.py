@@ -111,15 +111,13 @@ def test_partitioned_zordered_pruned_scan(spark, tmp_path):
     listing finds the leaf files under col=value dirs, partition
     values prune like data-column stats, and the basePath-aware
     pruned scan matches the full scan (schema included)."""
-    from time_series_prediction_spark.sources.io import write_partitioned
-
     path = str(tmp_path / "ptbl")
     grid = spark.range(20_000).select(
         (F.col("id") % 4).alias("bucket"),
         (F.col("id") % 200).alias("x"),
         F.col("id").alias("payload"),
     )
-    write_partitioned(grid, path, ["bucket"])
+    grid.write.mode("overwrite").partitionBy("bucket").parquet(path)
     files = list_parquet_files(path, spark)
     assert files and all("bucket=" in f for f in files)
     man = build_stats_manifest(spark, path, ["bucket", "x"]).cache()
@@ -210,37 +208,6 @@ def test_events_layout_pruned_scan_reads_fewer_files(spark, sf_dir):
         .collect()
     }
     assert got == want and got
-
-
-def test_incremental_update_equals_rebuild(spark, tmp_path):
-    """Append new files + delete an old one, update incrementally,
-    compare to a from-scratch rebuild: identical manifests, and only
-    the delta's footers were read (new-file set check)."""
-    import os
-
-    from time_series_prediction_spark.operators.manifest import (
-        update_manifest,
-    )
-
-    path = str(tmp_path / "tbl")
-    spark.range(1000).select(
-        (F.col("id") % 50).alias("x"), F.col("id").alias("payload")
-    ).repartition(4).write.mode("overwrite").parquet(path)
-    man0 = build_stats_manifest(spark, path, ["x", "payload"]).cache()
-    man0.count()
-    # append a second batch, drop one original file
-    spark.range(1000, 1500).select(
-        (F.col("id") % 50 + 100).alias("x"), F.col("id").alias("payload")
-    ).repartition(2).write.mode("append").parquet(path)
-    victim = list_parquet_files(path)[0]
-    os.remove(victim)
-    updated = update_manifest(spark, man0, path, ["x", "payload"])
-    rebuilt = build_stats_manifest(spark, path, ["x", "payload"])
-    u = sorted(map(tuple, updated.collect()))
-    r = sorted(map(tuple, rebuilt.collect()))
-    assert u == r
-    assert victim not in {t[0] for t in u}
-    man0.unpersist()
 
 
 def test_layout_cache_key_stable_across_processes():
@@ -428,15 +395,12 @@ spark.stop()
 
 
 def test_zordered_append_with_incremental_manifest(spark, tmp_path):
-    """The ingestion flow: base layout + z-ordered APPEND batch +
-    incremental manifest update. The updated manifest must equal a
-    full rebuild, the pruned scan must match the full filtered scan
-    over base+batch, and stats pruning must still skip files."""
-    from time_series_prediction_spark.operators.manifest import (
-        update_manifest,
-    )
-    from time_series_prediction_spark.operators.zorder import zorder_code
-
+    """The ingestion flow of ``streaming/layout.commit_zordered_batch``:
+    base layout + z-ordered APPEND batch in its own directory, and the
+    manifest updated by footer-reading only the batch's files. The
+    updated manifest must equal a full rebuild, the pruned scan must
+    match the full filtered scan over base+batch, and stats pruning
+    must still skip files."""
     path = str(tmp_path / "ingest")
     grid = spark.range(40_000).select(
         (F.col("id") % 200).alias("x"),
@@ -445,20 +409,13 @@ def test_zordered_append_with_incremental_manifest(spark, tmp_path):
     )
     base = grid.where(F.col("id") % 2 == 0)
     batch = grid.where(F.col("id") % 2 == 1)
-    write_zordered(base, path, ["x", "y"], n_files=8)
+    write_zordered(base, f"{path}/batch-0", ["x", "y"], n_files=8)
     man0 = build_stats_manifest(spark, path, ["x", "y"]).cache()
     man0.count()
     # the batch lands as its own 8 Morton-sorted files; history stays
-    ranked, code = zorder_code(batch, ["x", "y"])
-    (
-        ranked.withColumn("_zcode", code)
-        .repartitionByRange(8, "_zcode")
-        .sortWithinPartitions("_zcode")
-        .drop("_zcode", "_zr_x", "_zr_y")
-        .write.mode("append")
-        .parquet(path)
-    )
-    man1 = update_manifest(spark, man0, path, ["x", "y"]).cache()
+    write_zordered(batch, f"{path}/batch-1", ["x", "y"], n_files=8)
+    fresh = build_stats_manifest(spark, f"{path}/batch-1", ["x", "y"])
+    man1 = man0.unionByName(fresh).cache()
     rebuilt = build_stats_manifest(spark, path, ["x", "y"])
     assert sorted(map(tuple, man1.collect())) == sorted(
         map(tuple, rebuilt.collect())
@@ -474,7 +431,8 @@ def test_zordered_append_with_incremental_manifest(spark, tmp_path):
         .first()
     )
     want = (
-        spark.read.parquet(path)
+        spark.read.option("recursiveFileLookup", "true")
+        .parquet(path)
         .where(F.col("x").between(10, 22) & F.col("y").between(30, 80))
         .agg(F.count(F.lit(1)), F.sum("payload"))
         .first()
@@ -493,14 +451,12 @@ def test_manifest_base_normalization_file_uri_and_relative(spark, tmp_path):
     partition pruning)."""
     import os
 
-    from time_series_prediction_spark.sources.io import write_partitioned
-
     path = str(tmp_path / "ptbl_uri")
     grid = spark.range(2_000).select(
         (F.col("id") % 4).alias("bucket"),
         F.col("id").alias("payload"),
     )
-    write_partitioned(grid, path, ["bucket"])
+    grid.write.mode("overwrite").partitionBy("bucket").parquet(path)
 
     for variant in (
         f"file:{path}",

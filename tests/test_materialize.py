@@ -75,6 +75,7 @@ def test_persist_mode_same_answers(spark, reset_conf):
     assert comp.where(F.col("component") == 1).count() == 3
 
 
-def test_unknown_mode_raises(spark):
+def test_unknown_mode_raises(spark, reset_conf):
+    spark.conf.set(MODE_CONF, "nope")
     with pytest.raises(ValueError, match="unknown materialize mode"):
-        materialize(spark.range(3), mode="nope")
+        materialize(spark.range(3))

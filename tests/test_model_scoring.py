@@ -51,7 +51,7 @@ def test_last_value_model_beats_zero_model_on_r2(spark):
         "last": last_value_model_factory(),
     }.items():
         scored = post_processing(score_dataframe(pre, factory))
-        m = r2_metrics(scored, y_pred_col="y_pred_rescaled_retrended").first()
+        m = r2_metrics(scored).first()
         out[name] = m["r2_3month"]
     # persistence forecast must explain more variance than the mean
     assert out["last"] > out["zero"]

@@ -214,9 +214,7 @@ def test_full_lifecycle_train_score_r2(spark, tmp_path):
     # serve exactly like the reference: serving-shaped frame through
     # the iterator pandas_udf, then rescale/retrend and R²
     serve = pre_processing(clean_series(raw), "2020-03-31", serving=True)
-    scored = score_dataframe(
-        serve, numpy_cnn_factory(weights), x_col="X", out_col="y_pred"
-    )
+    scored = score_dataframe(serve, numpy_cnn_factory(weights))
     rows = scored.select("X", "y_pred").limit(3).collect()
     assert rows
     for r in rows:
@@ -229,7 +227,5 @@ def test_full_lifecycle_train_score_r2(spark, tmp_path):
             np.asarray(r["y_pred"], dtype=np.float32), want
         )
     post = post_processing(scored)
-    m = r2_metrics(
-        post, y_pred_col="y_pred_rescaled_retrended"
-    ).first()
+    m = r2_metrics(post).first()
     assert np.isfinite(m["r2_3month"]) and np.isfinite(m["r2_1month"])

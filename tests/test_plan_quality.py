@@ -150,6 +150,56 @@ def test_preprocessing_outputs_fold_each_series_once(spark):
             assert len(df.collect()) == 4, (serving, col)
 
 
+_PYTHON_NODES = {
+    "ArrowEvalPython", "BatchEvalPython", "MapInPandas", "MapInArrow",
+    "FlatMapGroupsInPandas", "FlatMapCoGroupsInPandas",
+}
+
+
+def _python_nodes_per_stage(df) -> list[list[str]]:
+    """The Python-evaluating nodes of each stage of ``df``'s physical
+    plan (AQE's initial plan); a stage ends at an exchange."""
+    root = df._jdf.queryExecution().executedPlan()
+    if root.nodeName() == "AdaptiveSparkPlan":
+        root = root.executedPlan()
+    stages: list[list[str]] = [[]]
+
+    def walk(node, stage):
+        name = node.nodeName()
+        if "Exchange" in name:
+            stage = []
+            stages.append(stage)
+        elif name in _PYTHON_NODES:
+            stage.append(name)
+        children = node.children()
+        for i in range(children.size()):
+            walk(children.apply(i), stage)
+
+    walk(root, stages[0])
+    return stages
+
+
+def test_cashflow_queries_hold_one_python_node_per_stage(spark, sf_dir):
+    """Each Python node in a stage holds one more Python worker per
+    task, so a second one in the same stage costs a worker per core and
+    its memory. The four ``cashflow_*`` registry queries keep at most
+    one per stage: the synthetic pipeline's generator (``MapInPandas``)
+    and the scoring pipeline's kernels and scorer (one
+    ``ArrowEvalPython``)."""
+    import __spark_entry__ as entrymod
+
+    qs = entrymod.queries()
+    names = sorted(n for n in qs if n.startswith("cashflow_"))
+    assert len(names) == 4, names
+    found = {}
+    for name in names:
+        stages = _python_nodes_per_stage(qs[name](spark, sf_dir))
+        assert all(len(s) <= 1 for s in stages), (name, stages)
+        found[name] = sorted(n for s in stages for n in s)
+    assert found["cashflow_synthetic_pipeline"] == ["MapInPandas"], found
+    assert found["cashflow_scoring_pipeline"] == ["ArrowEvalPython"], found
+
+
 def test_flagship_shuffle_budget(spark, sf_dir):
     plan = _plan(cashflow_wide_pipeline(spark, sf_dir))
     # rollup exchange + collect exchange only

@@ -1,10 +1,9 @@
-"""Range join (bucketed point-in-interval) + IVF ANN coverage:
-oracle match for the range-join query, recall and determinism for the
-IVF coarse quantizer, and operator-level unit checks."""
+"""Range join (bucketed point-in-interval) + ANN coverage: oracle match
+for the range-join queries, operator-level range-join checks, and
+recall floors for the registry's ANN queries at bench scale."""
 
 from __future__ import annotations
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -93,87 +92,6 @@ def test_range_join_plan_has_no_nested_loop(spark):
     )._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
-
-
-def test_ivf_centroids_deterministic(spark, sf_dir):
-    emb = read_table(spark, sf_dir, "embeddings")
-    c1 = similarity.ivf_centroids(emb, n_cells=8, n_iters=2)
-    c2 = similarity.ivf_centroids(emb, n_cells=8, n_iters=2)
-    assert c1.shape == (8, len(emb.first()["embedding"]))
-    np.testing.assert_array_equal(c1, c2)
-
-
-def test_ivf_centroid_cache_skips_retraining(spark, sf_dir):
-    """With a cache_key (the bench path passes sf_dir), the second
-    call must return the memoized matrix — no Lloyd scans at all.
-    Pinned by object identity AND by a job-count probe: the cached
-    call may not launch any Spark jobs."""
-    emb = read_table(spark, sf_dir, "embeddings")
-    key = f"cache-test-{sf_dir}"
-    c1 = similarity.ivf_centroids(emb, n_cells=8, n_iters=2, cache_key=key)
-    sc = spark.sparkContext
-    before = sc._jsc.sc().dagScheduler().nextJobId()
-    c2 = similarity.ivf_centroids(emb, n_cells=8, n_iters=2, cache_key=key)
-    after = sc._jsc.sc().dagScheduler().nextJobId()
-    assert c2 is c1
-    assert after == before, "cached centroid lookup ran Spark jobs"
-    # different params must miss the cache
-    c3 = similarity.ivf_centroids(emb, n_cells=4, n_iters=2, cache_key=key)
-    assert c3.shape[0] == 4
-
-
-def test_ivf_recall_vs_exact(spark, sf_dir):
-    """IVF with nprobe=8/16 cells must recover most of the exact
-    top-5 neighbours. The fixture embeddings are near-uniform (worst
-    case for any partition-based ANN — no cluster structure to
-    exploit), so the bound reflects measured 0.72–0.76 recall across
-    all three fixture scales, not a tuned-to-one-dataset number."""
-    emb = read_table(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < 20)
-    exact = similarity.cosine_topk(emb, queries, k=5)
-    approx = similarity.ivf_ann_topk(emb, queries, k=5, n_cells=16, nprobe=8)
-    e = {(r["query_id"], r["corpus_id"]) for r in exact.collect()}
-    a = {(r["query_id"], r["corpus_id"]) for r in approx.collect()}
-    recall = len(e & a) / len(e)
-    assert recall >= 0.65, f"IVF recall@5 {recall:.2f}"
-
-
-def test_ivf_nprobe_full_equals_exact(spark, sf_dir):
-    """Probing every cell makes IVF exhaustive — identical to the
-    brute-force top-k (the classic IVF correctness limit)."""
-    emb = read_table(spark, sf_dir, "embeddings").limit(120)
-    queries = emb.where(F.col("vec_id") < 5)
-    exact = similarity.cosine_topk(emb, queries, k=3)
-    full = similarity.ivf_ann_topk(
-        emb, queries, k=3, n_cells=4, nprobe=4, n_iters=1
-    )
-    e = sorted(map(tuple, exact.select("query_id", "corpus_id", "rank").collect()))
-    f = sorted(map(tuple, full.select("query_id", "corpus_id", "rank").collect()))
-    assert e == f
-
-
-def test_sampled_training_deterministic_and_shared(spark, sf_dir):
-    """Driver-side sampled training (the constant-cost path at scale):
-    deterministic per seed, and one TakeOrdered job feeds every
-    training run over the same corpus via the shared sample cache."""
-    emb = read_table(spark, sf_dir, "embeddings")
-    c1 = similarity.ivf_centroids(emb, n_cells=8, n_iters=2, train_sample=256)
-    c2 = similarity.ivf_centroids(emb, n_cells=8, n_iters=2, train_sample=256)
-    np.testing.assert_array_equal(c1, c2)
-    # shared sample: one fetch, zero Spark jobs for a second training
-    # run whose centroids are not cached (different n_iters)
-    key = f"sample-share-{sf_dir}"
-    similarity.ivf_centroids(
-        emb, n_cells=8, n_iters=1, train_sample=256, cache_key=key
-    )
-    sc = spark.sparkContext
-    before = sc._jsc.sc().dagScheduler().nextJobId()
-    c3 = similarity.ivf_centroids(
-        emb, n_cells=8, n_iters=2, train_sample=256, cache_key=key
-    )
-    after = sc._jsc.sc().dagScheduler().nextJobId()
-    assert after == before, "second training run re-fetched the shared sample"
-    np.testing.assert_array_equal(c3, c1)
 
 
 # ---------------------------------------------------------------------------

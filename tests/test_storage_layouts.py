@@ -8,10 +8,7 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
-from time_series_prediction_spark.sources.io import (
-    read_table,
-    write_partitioned,
-)
+from time_series_prediction_spark.sources.io import read_table
 
 
 def _plan(df) -> str:
@@ -23,7 +20,7 @@ def test_partitioned_write_prunes_scans(spark, sf_dir, tmp_path):
         "day", F.to_date("ts")
     )
     out = str(tmp_path / "events_by_day")
-    write_partitioned(ev, out, ["day"])
+    ev.write.mode("overwrite").partitionBy("day").parquet(out)
     back = spark.read.parquet(out).where(F.col("day") == "2024-01-05")
     plan = _plan(back)
     # partition filter present -> non-matching directories never read

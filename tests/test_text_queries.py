@@ -104,26 +104,6 @@ def test_minhash_estimates_track_exact_jaccard(spark, sf_dir):
     assert stats["max_err"] < 0.35, f"max err {stats['max_err']}"
 
 
-def test_lsh_ann_recall_vs_brute_force(spark, sf_dir):
-    """LSH ANN must recover most of the exact top-10 neighbors."""
-    emb = read_table(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < 10)
-    exact = similarity.cosine_topk(emb, queries, k=10).select(
-        "query_id", "corpus_id"
-    )
-    # fixture embeddings are near-random (top-10 cosine ~0.25-0.39), so
-    # the operating point needs shallow tables: p_collide ~ 0.6^planes
-    # per table -> 4 planes x 16 tables gives ~0.9 expected recall
-    approx = similarity.lsh_ann_topk(
-        emb, queries, k=10, n_planes=4, n_tables=16
-    ).select("query_id", "corpus_id")
-    n_exact = exact.count()
-    n_hit = exact.join(approx, ["query_id", "corpus_id"]).count()
-    recall = n_hit / n_exact
-    assert n_exact == 100
-    assert recall >= 0.6, f"LSH recall {recall:.2f}"
-
-
 def test_simhash_separates_near_dups_from_random_pairs(spark, sf_dir):
     """SimHash Hamming distance of a doc vs its ~90%-overlap mutation
     must be clearly below the distance between unrelated docs."""
@@ -135,12 +115,8 @@ def test_simhash_separates_near_dups_from_random_pairs(spark, sf_dir):
             "array_join(filter(split(text, ' '), (w, i) -> i % 10 != 0), ' ')"
         ).alias("text"),
     )
-    sig = lambda df: df.select(
-        "doc_id", dedup.word_shingles().alias("shingles")
-    ).where(F.size("shingles") > 0).select(
-        "doc_id", dedup.simhash64("shingles").alias("sig")
-    )
-    orig_sigs, mut_sigs = sig(docs), sig(mutated)
+    orig_sigs = dedup.simhash_sigs_pass(docs)
+    mut_sigs = dedup.simhash_sigs_pass(mutated)
     near = orig_sigs.alias("a").join(
         mut_sigs.alias("b"), F.col("a.doc_id") == F.col("b.doc_id")
     ).select(dedup.hamming64("a.sig", "b.sig").alias("ham"))
@@ -152,10 +128,26 @@ def test_simhash_separates_near_dups_from_random_pairs(spark, sf_dir):
     assert near_mean < far_mean * 0.6, f"near={near_mean:.1f} far={far_mean:.1f}"
 
 
+def _simhash64_fold(shingles_col: str):
+    """The 64-bit SimHash as a Spark SQL fold, the form the DuckDB
+    oracle mirrors: each shingle hashes to (hi << 32) | lo of its md5's
+    first 16 hex chars, and bit b is set iff more than half of the
+    shingle hashes have it set."""
+    return F.expr(
+        f"transform(array(transform({shingles_col}, s -> "
+        f"transform(array(md5(s)), m -> "
+        f"shiftleft(CAST(conv(substr(m, 1, 8), 16, 10) AS BIGINT), 32) | "
+        f"CAST(conv(substr(m, 9, 8), 16, 10) AS BIGINT))[0])), _h -> "
+        f"aggregate(sequence(0, 63), 0L, (acc, bit) -> "
+        f"acc + CASE WHEN 2 * size(filter(_h, v -> (shiftright(v, bit) & 1) = 1)) > size(_h) "
+        f"THEN shiftleft(1L, bit) ELSE 0L END))[0]"
+    )
+
+
 def test_simhash_sigs_pass_matches_expression(spark, sf_dir):
     """The Arrow/NumPy signature pass must be bit-identical to the
-    simhash64 expression fold on the real fixture corpus — including
-    dropped short/empty docs."""
+    SimHash SQL fold on the real fixture corpus — including dropped
+    short/empty docs."""
     from time_series_prediction_spark.sources.io import read_table
 
     docs = read_table(spark, sf_dir, "documents")
@@ -165,7 +157,7 @@ def test_simhash_sigs_pass_matches_expression(spark, sf_dir):
             "doc_id", dedup.word_shingles().alias("shingles")
         )
         .where(F.size("shingles") > 0)
-        .select("doc_id", dedup.simhash64("shingles").alias("sig"))
+        .select("doc_id", _simhash64_fold("shingles").alias("sig"))
         .collect()
     }
     via_pass = {
@@ -235,11 +227,7 @@ def test_simhash_adaptive_banding_same_pairs_and_bounded_buckets(
     # bucket membership under the forced web-scale plan
     m, combos = simhash_blocking_plan(10**11)
     assert m > 4
-    sigs = (
-        docs.select("doc_id", dedup.word_shingles().alias("shingles"))
-        .where(F.size("shingles") > 0)
-        .select("doc_id", dedup.simhash64("shingles").alias("sig"))
-    )
+    sigs = dedup.simhash_sigs_pass(docs)
     keys = ", ".join(_block_key_expr("sig", c, m) for c in combos)
     max_bucket = (
         sigs.select(

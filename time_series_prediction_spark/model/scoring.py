@@ -123,9 +123,8 @@ def scoring_udf(factory: ModelFactory, horizon: int = 92) -> Column:
 def score_dataframe(
     df: DataFrame,
     factory: ModelFactory,
-    x_col: str = "X",
-    out_col: str = "y_pred",
     horizon: int = 92,
 ) -> DataFrame:
-    """S.2 serving stage: adds ``y_pred`` (array<float>[horizon])."""
-    return df.withColumn(out_col, scoring_udf(factory, horizon)(F.col(x_col)))
+    """S.2 serving stage: adds ``y_pred`` (array<float>[horizon]) scored
+    from ``X``."""
+    return df.withColumn("y_pred", scoring_udf(factory, horizon)(F.col("X")))

@@ -1,14 +1,14 @@
 """As-of join — the time-series join Spark lacks natively.
 
 For each left row, attach the most recent right row at-or-before its
-timestamp (optionally within a tolerance), per key. The scalable
-construction is the union-and-carry trick, NOT a range cross-join:
+timestamp, per key. The scalable construction is the union-and-carry
+trick, NOT a range cross-join:
 
   1. tag both inputs and UNION them into one stream
   2. sort per key by (ts, side) via a single window specification
   3. carry the latest right-side payload forward with
      ``last(payload, ignorenulls=True)``
-  4. keep left rows; optionally null out carries older than tolerance
+  4. keep left rows
 
 Cost: ONE shuffle (hash by key) + per-partition sort — same as any
 windowed op, no matter how skewed the time axis. The naive
@@ -30,14 +30,12 @@ def asof_join(
     left_ts: str,
     right_ts: str,
     right_payload: list[str],
-    tolerance_seconds: int | None = None,
-    suffix: str = "_asof",
 ) -> DataFrame:
     """Attach, per ``on`` key, the latest right row with
-    ``right_ts <= left_ts`` (within tolerance if given).
+    ``right_ts <= left_ts``.
 
-    Output: all left columns + ``<payload><suffix>`` columns +
-    ``<right_ts><suffix>`` (the matched right timestamp, null if no
+    Output: all left columns + ``<payload>_asof`` columns +
+    ``<right_ts>_asof`` (the matched right timestamp, null if no
     match)."""
     lcols = left.columns
     tagged_left = left.select(
@@ -77,15 +75,7 @@ def asof_join(
     )
     carried = unioned.withColumn("_carry", F.last("_r", ignorenulls=True).over(w))
     out = carried.where(F.col("_side") == 1)
-    if tolerance_seconds is not None:
-        within = (
-            F.unix_micros(F.col("_ts"))
-            - F.unix_micros(F.col("_carry._rts"))
-        ) <= tolerance_seconds * 1_000_000
-        out = out.withColumn(
-            "_carry", F.when(within, F.col("_carry")).otherwise(F.lit(None))
-        )
     sel = [F.col(f"_l.{c}").alias(c) for c in lcols]
-    sel.append(F.col("_carry._rts").alias(f"{right_ts}{suffix}"))
-    sel.extend(F.col(f"_carry.{c}").alias(f"{c}{suffix}") for c in right_payload)
+    sel.append(F.col("_carry._rts").alias(f"{right_ts}_asof"))
+    sel.extend(F.col(f"_carry.{c}").alias(f"{c}_asof") for c in right_payload)
     return out.select(*sel)

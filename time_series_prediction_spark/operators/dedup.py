@@ -1,32 +1,31 @@
-"""Deduplication operators: exact, MinHash-LSH, SimHash, n-gram Jaccard.
+"""Deduplication operators: exact, MinHash-LSH, SimHash, n-gram blocking.
 
 Beyond-reference scope (SURVEY §7.1.8). Design target is 100 TB:
 
 * exact_dedup — hash-groupBy on md5(text): one shuffle on the hash,
   map-side partial aggregation; the canonical survivor is min(doc_id).
-* ngram_jaccard_pairs — blocked self-join: candidate pairs only within
-  a blocking key (default: same (lang, n_chars)), so the join is an
-  equi-join Catalyst can hash-partition, NOT an O(n²) cross join. At
-  100 TB the blocking key bounds the per-bucket pair count.
-* minhash_signatures / minhash_lsh_pairs — word-shingle MinHash with k
-  hash functions (md5-prefix shingle hash + seeded arithmetic
-  permutations: JVM-side, no Python, and ENGINE-REPRODUCIBLE — the
-  same constants drive the DuckDB oracle, so the query is
-  oracle-backed end-to-end), banded LSH: signatures split into b
-  bands of r rows; docs sharing a band-hash land in a bucket
+* word_shingles / prefix_blocking_plan — the word-n-gram shingles and
+  the scale-adaptive blocking width the ``dedup_ngram_jaccard`` query
+  joins on, so its self-join is an equi-join Catalyst can
+  hash-partition, NOT an O(n²) cross join.
+* minhash_signature / minhash_banded / minhash_pairs_from_banded —
+  word-shingle MinHash with k hash functions (md5-prefix shingle hash
+  + seeded arithmetic permutations: JVM-side, no Python, and
+  ENGINE-REPRODUCIBLE — the same constants drive the DuckDB oracle, so
+  the query is oracle-backed end-to-end), banded LSH: signatures split
+  into b bands of r rows; docs sharing a band-hash land in a bucket
   (equi-join on band value), and only bucket-mates are compared.
   Shuffle = one explode(b bands) + one equi-join — the standard
   scalable near-dup pipeline.
-* simhash64 — 64-bit SimHash over shingle hashes; near-dups have small
-  Hamming distance; pairs blocked on scale-adaptive signature-block
-  subsets. Like MinHash, the shingle hash is md5-derived (two 32-bit
-  halves of the digest), so the generated DuckDB oracle reproduces
-  signatures, buckets, pairs and Hamming distances bit-identically —
-  both near-dup families are oracle-backed end-to-end; quality
-  (separation of near-dups from random pairs) is additionally
-  validated in pytest.
+* simhash_sigs_pass / simhash_near_pairs — 64-bit SimHash over
+  shingle hashes; near-dups have small Hamming distance; pairs
+  blocked on scale-adaptive signature-block subsets. Like MinHash, the
+  shingle hash is md5-derived (two 32-bit halves of the digest), so
+  the generated DuckDB oracle reproduces signatures, buckets, pairs
+  and Hamming distances bit-identically — both near-dup families are
+  oracle-backed end-to-end; quality (separation of near-dups from
+  random pairs) is additionally validated in pytest.
 """
-
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
@@ -133,50 +132,6 @@ def word_shingles_of_tokens(tokens_col: str, n: int = 3) -> Column:
         f"CASE WHEN size({tokens_col}) < {n} THEN array() ELSE "
         f"array_distinct(transform(sequence(0, size({tokens_col}) - {n}), "
         f"i -> {joined})) END"
-    )
-
-
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    block_cols: tuple[str, ...] = ("lang", "n_chars"),
-    n: int = 3,
-    threshold: float = 0.2,
-) -> DataFrame:
-    """Exact Jaccard over word n-grams for candidate pairs sharing a
-    blocking key. jaccard = |intersect| / |union| — exact integer
-    counts, deterministic double division."""
-    # materialize the shingle arrays ONCE: the self-join below
-    # references this subtree twice and Spark does not reuse the scan
-    # (verified: without this the O(len·n) shingling runs per side).
-    # At cluster scale, persist(DISK_ONLY) or a reliable checkpoint
-    # plays the same role.
-    sh = df.select(
-        *[F.col(c) for c in block_cols],
-        F.col(id_col),
-        word_shingles(text_col, n).alias("shingles"),
-    )
-    sh = materialize(sh)
-    a = sh.alias("a")
-    b = sh.alias("b")
-    cond = [F.col(f"a.{c}") == F.col(f"b.{c}") for c in block_cols]
-    cond.append(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-    # |A∪B| = |A|+|B|−|A∩B| over distinct shingle arrays: one hash
-    # pass per candidate pair instead of intersect + union
-    inter = F.expr("size(array_intersect(a.shingles, b.shingles))")
-    union = F.expr(
-        "size(a.shingles) + size(b.shingles)"
-        " - size(array_intersect(a.shingles, b.shingles))"
-    )
-    return (
-        a.join(b, cond)
-        .select(
-            F.col(f"a.{id_col}").alias("doc_id_a"),
-            F.col(f"b.{id_col}").alias("doc_id_b"),
-            (inter.cast("double") / union.cast("double")).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= threshold)
     )
 
 
@@ -308,60 +263,9 @@ def minhash_pairs_from_banded(
     )
 
 
-def minhash_lsh_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Banded-LSH near-dup candidates with MinHash-estimated Jaccard.
-
-    bands=b, rows r=num_hashes/b: a pair with true Jaccard j collides
-    in ≥1 band with prob 1-(1-j^r)^b (the standard S-curve). Pipeline:
-    signature → explode b band-hashes → equi-join on (band, value) →
-    dedup pairs → estimate — every join is a hash join on a small key,
-    no cross product. Composition of ``minhash_banded`` (materialized
-    once — it feeds both self-join sides) and
-    ``minhash_pairs_from_banded``.
-    """
-    banded = materialize(
-        minhash_banded(df, text_col, id_col, n, num_hashes, bands)
-    )
-    return minhash_pairs_from_banded(banded, id_col, threshold)
-
-
 # ---------------------------------------------------------------------------
 # SimHash
 # ---------------------------------------------------------------------------
-
-
-def simhash64(shingles_col: str = "shingles") -> Column:
-    """64-bit SimHash: for each bit position, sum +1/-1 votes of the
-    shingle hashes' bits; bit = 1 if the sum is positive.
-
-    The per-shingle 64-bit hash is built from md5 (two 32-bit halves
-    from the first 16 hex chars, hi << 32 | lo) rather than xxhash64:
-    md5 exists in every engine, so the SAME signatures come out of the
-    generated DuckDB oracle SQL and the query is oracle-backed
-    end-to-end (the MinHash graduation template). The md5 digest is
-    bound ONCE per shingle via a single-element transform; shingle
-    hashes are computed ONCE into ``_h`` (not per bit — that would be
-    64× the hashing work), then each bit position counts set bits
-    across the hash array. ``shiftleft(1L, 63)`` wraps to the sign
-    bit, which is exactly the two's-complement contribution bit 63
-    should add."""
-    return F.expr(
-        f"transform(array(transform({shingles_col}, s -> "
-        f"transform(array(md5(s)), m -> "
-        f"shiftleft(CAST(conv(substr(m, 1, 8), 16, 10) AS BIGINT), 32) | "
-        f"CAST(conv(substr(m, 9, 8), 16, 10) AS BIGINT))[0])), _h -> "
-        f"aggregate(sequence(0, 63), 0L, (acc, bit) -> "
-        f"acc + CASE WHEN 2 * size(filter(_h, v -> (shiftright(v, bit) & 1) = 1)) > size(_h) "
-        f"THEN shiftleft(1L, bit) ELSE 0L END))[0]"
-    )
 
 
 def hamming64(a: str, b: str) -> Column:
@@ -373,10 +277,11 @@ def simhash_sigs_pass(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3
 ) -> DataFrame:
     """(id, sig): the SimHash signature stage as ONE Arrow-batched
-    pass — hashlib md5 + NumPy bit votes replacing ``simhash64``'s 64
-    interpreted ``filter`` folds per document (guide §4.2; the same
-    proven md5-twin discipline as the series generator). Bit-identical
-    to the expression path (pinned in tests/test_text_queries.py):
+    pass — hashlib md5 + NumPy bit votes in place of 64 interpreted
+    ``filter`` folds per document (guide §4.2; the same proven
+    md5-twin discipline as the series generator). Bit-identical to the
+    Spark SQL fold the DuckDB oracle mirrors (pinned in
+    tests/test_text_queries.py):
     the shingle hash is int(md5 hex[:16], 16) == (hi<<32)|lo two's-
     complement, a bit is set iff 2·(set votes) > |shingles|, and docs
     with fewer than ``n`` tokens (or no shingles) drop exactly as the

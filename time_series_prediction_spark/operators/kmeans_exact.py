@@ -1,10 +1,9 @@
 """Cross-engine-deterministic k-means cells for SemDeDup blocking.
 
-The generic IVF trainer (``similarity.ivf_centroids``) runs Lloyd in
-NumPy over Arrow batches — fast, but its float reductions (BLAS order,
-pairwise summation) are not reproducible outside that stack, which is
-why ``dedup_semantic_prune`` was a rows-only driver check through
-round 6. This module re-derives the clustering as EXACT arithmetic so
+A float Lloyd in NumPy over Arrow batches is fast, but its
+reductions (BLAS order, pairwise summation) are not reproducible
+outside that stack, which is why ``dedup_semantic_prune`` was a
+rows-only driver check through round 6. This module re-derives the clustering as EXACT arithmetic so
 a DuckDB oracle can replay it bit-for-bit:
 
 * vectors are the already-quantized ``round(v · 2^20)`` bigints shared
@@ -845,8 +844,7 @@ def _lsh_planes_int(
     n_planes: int, n_tables: int, seed: int, dim: int, scale: int = 1024
 ) -> list:
     """Integer-quantized random hyperplanes: table t draws from
-    rng(seed + 1000·t) like the float family
-    (``similarity.lsh_table_buckets``) and quantizes to
+    rng(seed + 1000·t) and quantizes to
     ``round(p·scale)`` int64. Signs of INTEGER dot products are exact
     — no BLAS-order ambiguity — so the bucket ids are reproducible in
     any engine. The planes are seed-derived constants (not trained on

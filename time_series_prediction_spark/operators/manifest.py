@@ -12,7 +12,8 @@ across executors and each task opens only metadata (no data pages), so
 a million-file table builds its manifest in one embarrassingly
 parallel pass. The manifest itself is tiny (files × columns rows) and
 is the natural thing to persist alongside the data and maintain
-incrementally on append. Pruning is a filter over the manifest plus a
+incrementally on append (``streaming/layout.commit_zordered_batch``
+footer-reads only a new batch's files). Pruning is a filter over the manifest plus a
 parquet scan of the surviving paths; the predicate is re-applied after
 the scan, so pruning can only skip work, never change results
 (verified in tests against the unpruned scan).
@@ -325,69 +326,6 @@ def build_stats_manifest(
         [(f,) for f in files], "file string"
     ).repartition(min(len(files), 64))
     return _footer_stats(file_df, cols, base=base)
-
-
-def update_manifest(
-    spark: SparkSession,
-    manifest: DataFrame,
-    path: str,
-    cols: list[str],
-) -> DataFrame:
-    """Incrementally maintain a manifest after appends/deletes: stats
-    are built ONLY for files on disk that the manifest has not seen,
-    and rows for files that vanished (compaction, retention) are
-    dropped. Equivalent to a full rebuild (pinned in tests) at the
-    cost of footer-reading just the delta — the property that makes a
-    manifest viable on a table receiving thousands of appends a day.
-
-    Only the NEW files are collected to the driver (disk list
-    anti-join manifest): at 10⁶ known files the driver holds the disk
-    listing it produced anyway, never the manifest's accumulated file
-    set — steady-state cost is proportional to the delta."""
-    on_disk = list_parquet_files(path, spark)
-    if not on_disk:
-        return manifest.where(F.lit(False))
-    disk_df = spark.createDataFrame([(f,) for f in on_disk], "file string")
-    new_files = sorted(
-        r["file"]
-        for r in disk_df.join(
-            manifest.select("file").distinct(), "file", "left_anti"
-        ).collect()
-    )
-    kept = manifest.join(disk_df, "file", "left_semi")
-    if not new_files:
-        return kept
-    fresh = build_stats_manifest_for_files(spark, new_files, cols, base=path)
-    return kept.unionByName(fresh)
-
-
-def build_stats_manifest_for_files(
-    spark: SparkSession,
-    files: list[str],
-    cols: list[str],
-    base: str | None = None,
-) -> DataFrame:
-    """build_stats_manifest over an explicit file list (the
-    incremental-update entry point); small lists fold driver-side
-    like ``build_stats_manifest``."""
-    if not files:
-        raise ValueError("empty file list")
-    resolved = _resolve_base(base, spark) if base else None
-    if len(files) <= _LOCAL_STATS_MAX_FILES:
-        rows = _local_stats_rows(files, cols, resolved)
-        if rows is not None:
-            from time_series_prediction_spark.operators.localrel import (
-                local_rows_df,
-            )
-
-            # VALUES LocalRelation: manifest frames are re-evaluated
-            # by every consumer action; the RDD form paid a Python
-            # parallelize job each time
-            return local_rows_df(spark, rows, _MANIFEST_SCHEMA)
-    tmp = spark.createDataFrame([(f,) for f in files], "file string")
-    return _footer_stats(
-        tmp.repartition(min(len(files), 64)), cols, base=resolved
-    )
 
 
 def local_manifest_table(vdir: str):

@@ -31,12 +31,10 @@ MODE_CONF = "spark.tsp.materialize.mode"
 CHECKPOINT_DIR_CONF = "spark.tsp.materialize.checkpointDir"
 
 
-def materialize(
-    df: DataFrame, mode: str | None = None, eager: bool = True
-) -> DataFrame:
+def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
     """Materialize ``df`` once so downstream reuse (self-joins, loop
     rounds) does not recompute its subtree. Mode comes from the
-    argument, else the session conf, else ``local``.
+    session conf, else ``local``.
 
     ``eager=False`` defers the checkpoint to the FIRST action over the
     returned frame — use when the caller immediately runs one (e.g. an
@@ -45,8 +43,7 @@ def materialize(
     by ``persist`` mode, which must force to give compute-once
     semantics."""
     spark = df.sparkSession
-    if mode is None:
-        mode = spark.conf.get(MODE_CONF, "local")
+    mode = spark.conf.get(MODE_CONF, "local")
     if mode == "local":
         return df.localCheckpoint(eager=eager)
     if mode == "reliable":
@@ -70,7 +67,7 @@ def materialize(
                 sc.setCheckpointDir(ckdir)
         elif sc.getCheckpointDir() is None:
             raise ValueError(
-                "materialize(mode='reliable') needs a checkpoint dir: "
+                f"materialize in {MODE_CONF}=reliable needs a checkpoint dir: "
                 "call sparkContext.setCheckpointDir(...) or set "
                 f"{CHECKPOINT_DIR_CONF}"
             )

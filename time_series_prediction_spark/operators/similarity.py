@@ -14,19 +14,15 @@ mining).
   order-independent and reproducible across engines (the DuckDB
   oracle computes the identical quantized cosine), at 1e-6 relative
   quantization error — semantically irrelevant for ANN.
-* lsh_ann_topk — scale path: random-hyperplane LSH. Each vector gets a
-  b-bit bucket (sign pattern against b pseudo-random hyperplanes
-  derived from seeded hashes — no stored model, any executor
-  recomputes the same planes); candidates = bucket-mates across probe
-  tables; exact cosine re-rank within candidates. Bucketing turns the
-  all-pairs problem into an equi-join on bucket id.
+* panel_cosine_scores — the scoring pass under cosine_topk and the
+  semantic registry queries.
+
+The approximate registry queries (LSH, IVF, IVF-PQ) run the
+exact-integer operators in ``operators/kmeans_exact.py``.
 """
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 _SCALE = 1 << 20  # component quantization: exact in bigint, ~1e-6 rel err
 
@@ -35,22 +31,6 @@ def quantize(vec_col: str) -> Column:
     """array<float> → array<bigint> of round(v * 2^20)."""
     return F.expr(
         f"transform({vec_col}, v -> CAST(round(CAST(v AS DOUBLE) * {_SCALE}) AS BIGINT))"
-    )
-
-
-def _dot(a: str, b: str) -> str:
-    return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0L, (acc, v) -> acc + v)"
-
-
-def _norm2(a: str) -> str:
-    return f"aggregate({a}, 0L, (acc, v) -> acc + v * v)"
-
-
-def cosine_expr(a: str, b: str) -> Column:
-    """Quantized cosine similarity between two bigint vectors."""
-    return F.expr(
-        f"CAST({_dot(a, b)} AS DOUBLE) / "
-        f"(sqrt(CAST({_norm2(a)} AS DOUBLE)) * sqrt(CAST({_norm2(b)} AS DOUBLE)))"
     )
 
 
@@ -71,8 +51,9 @@ def panel_cosine_scores(
     cosine is the identical op sequence the JVM/DuckDB expressions
     use: CAST(int dot AS DOUBLE) / (sqrt(double(‖q‖²)) ·
     sqrt(double(‖v‖²))) — correctly-rounded sqrt/mul/div, so the
-    values are bit-identical to ``cosine_expr`` (guide §4.2: batch
-    native math instead of interpreted 64-term HOF folds per pair).
+    values are bit-identical to the DuckDB oracle's quantized cosine
+    (guide §4.2: batch native math instead of interpreted 64-term HOF
+    folds per pair).
 
     ``exclude='self'`` drops corpus_id == query_id pairs;
     ``exclude='label'`` (with ``label_col``) keeps only pairs whose
@@ -159,387 +140,6 @@ def cosine_topk(
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cosine"), F.asc("corpus_id")
     )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "corpus_id",
-            "cosine",
-            F.col("rank").cast("int").alias("rank"),
-        )
-    )
-
-
-def lsh_table_buckets(
-    n_planes: int, n_tables: int, seed: int = 42
-) -> Column:
-    """All-tables LSH bucket ids as ONE vectorized ``pandas_udf``:
-    Arrow-batched numpy matmul (B×dim @ dim×(tables·planes)) → sign
-    bits → per-table bucket ids (array<bigint> of n_tables).
-
-    This is the deliberate Python exception (like model inference):
-    dense projections are BLAS work — the Arrow batch + matmul path is
-    ~1000× the throughput of interpreted array-lambda folds, and the
-    planes are regenerated from the seed inside each worker (no model
-    state shipped). Table t's planes use rng(seed + 1000·t).
-    """
-    @pandas_udf("array<bigint>")
-    def _buckets(vecs: pd.Series) -> pd.Series:
-        if len(vecs) == 0:
-            return pd.Series([], dtype=object)
-        mat = np.asarray([np.asarray(v, dtype=np.float64) for v in vecs])
-        dim = mat.shape[1]
-        weights = np.concatenate(
-            [
-                np.random.default_rng(seed + 1000 * t).standard_normal(
-                    (n_planes, dim)
-                )
-                for t in range(n_tables)
-            ],
-            axis=0,
-        ).T  # dim × (tables·planes)
-        bits = (mat @ weights) > 0  # B × (tables·planes)
-        pows = 1 << np.arange(n_planes, dtype=np.int64)
-        buckets = bits.reshape(len(mat), n_tables, n_planes) @ pows
-        return pd.Series(list(buckets))
-
-    return _buckets
-
-
-def lsh_ann_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    n_planes: int = 10,
-    n_tables: int = 4,
-    seed: int = 42,
-) -> DataFrame:
-    """Approximate top-k: candidates share an LSH bucket in ≥1 of
-    ``n_tables`` independent hash tables, re-ranked by exact
-    (quantized) cosine. Recall is tuned by (n_planes, n_tables);
-    validated against cosine_topk in tests."""
-    bucket_udf = lsh_table_buckets(n_planes, n_tables, seed)
-
-    def with_buckets(df: DataFrame, vid: str, vq: str) -> DataFrame:
-        out = df.select(
-            F.col(id_col).alias(vid),
-            quantize(vec_col).alias(vq),
-            bucket_udf(F.col(vec_col)).alias("_buckets"),
-        )
-        stacked = out.select(
-            vid,
-            vq,
-            F.posexplode(F.col("_buckets")).alias("table", "bucket"),
-        )
-        return stacked
-
-    c = with_buckets(corpus, "corpus_id", "cvec")
-    q = with_buckets(queries, "query_id", "qvec")
-    cand = (
-        c.join(
-            q,
-            (c.table == q.table)
-            & (c.bucket == q.bucket)
-            & (F.col("corpus_id") != F.col("query_id")),
-        )
-        .select("query_id", "corpus_id", "qvec", "cvec")
-        .dropDuplicates(["query_id", "corpus_id"])
-    )
-    scored = cand.select(
-        "query_id", "corpus_id", cosine_expr("qvec", "cvec").alias("cosine")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("corpus_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "corpus_id",
-            "cosine",
-            F.col("rank").cast("int").alias("rank"),
-        )
-    )
-
-
-# Trained-centroid cache: Lloyd training is deterministic in
-# (training data, params), so repeated invocations over the same
-# corpus (e.g. bench loops, notebook re-runs) can skip the iteration
-# scans entirely. Keyed by an explicit caller-supplied token naming
-# the corpus (a path or table name) + all training params. Centroid
-# matrices are (n_cells × dim) — a few KB, safe to keep for a session.
-from time_series_prediction_spark.session_memo import session_memo
-
-_CENTROID_CACHE: dict[tuple, np.ndarray] = session_memo({})
-
-# Hash-ordered training-sample cache: the seeded TakeOrdered sample is
-# the same for every training run over the same corpus, whatever its
-# n_cells or n_iters, so one session fetches it once. ≤ n_sample × dim
-# float64 — a few MB.
-_TRAIN_SAMPLE_CACHE: dict[tuple, np.ndarray] = session_memo({})
-
-
-def _hash_ordered_sample(
-    df: DataFrame,
-    n: int,
-    seed: int,
-    cache_key: str | None,
-    vec_col: str = "_v",
-    id_col: str = "_id",
-) -> np.ndarray:
-    """The n corpus vectors with the smallest xxhash64(id, seed) — a
-    reproducible pseudo-random sample, fetched with ONE TakeOrdered
-    job (map-side partial top-n, no full sort; cost grows with corpus
-    scan, not with a shuffle). Rows arrive hash-ordered, so the first
-    k rows are exactly the k-smallest-hash init any trainer uses."""
-    memo = (
-        (cache_key, n, seed, vec_col, id_col) if cache_key is not None else None
-    )
-    if memo is not None and memo in _TRAIN_SAMPLE_CACHE:
-        return _TRAIN_SAMPLE_CACHE[memo]
-    rows = (
-        df.orderBy(F.xxhash64(id_col, F.lit(seed)), id_col)
-        .limit(n)
-        .select(vec_col)
-        .collect()
-    )
-    mat = np.asarray([np.asarray(r[vec_col], dtype=np.float64) for r in rows])
-    if memo is not None:
-        _TRAIN_SAMPLE_CACHE[memo] = mat
-    return mat
-
-
-def ivf_centroids(
-    corpus: DataFrame,
-    n_cells: int = 16,
-    n_iters: int = 3,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    seed: int = 42,
-    train_fraction: float | None = None,
-    cache_key: str | None = None,
-    train_sample: int | None = None,
-) -> np.ndarray:
-    """Train IVF coarse-quantizer centroids (deterministic Lloyd/k-means).
-
-    Init = the n_cells corpus vectors with the smallest xxhash64(id, seed)
-    (a seeded pseudo-random sample that any run reproduces). Each Lloyd
-    iteration is fully distributed: assign every vector to its nearest
-    centroid (Arrow-batched numpy matmul — centroids ship inside the UDF
-    closure, a few KB), then recompute per-cell per-dimension means with
-    one groupBy over posexploded components. Only the (n_cells × dim)
-    centroid matrix ever reaches the driver.
-
-    At 100 TB you train on a sample — a coarse quantizer needs
-    thousands of examples, not the corpus. Two forms:
-
-    * ``train_fraction`` — seeded Bernoulli sample in front of the
-      distributed iteration scans (unbounded rows, still one cluster
-      job per iteration).
-    * ``train_sample=N`` — the N smallest-seeded-hash vectors
-      (``_hash_ordered_sample``: one TakeOrdered job, shared across
-      training runs per session) iterate in numpy on the driver: training
-      cost constant in corpus size, zero cluster jobs per iteration.
-      Same Lloyd semantics as the distributed path (cosine
-      assignment, ties → lowest cell, raw-vector means, empty cells
-      keep their centroid).
-
-    Assignment of the full corpus happens once, in ``ivf_ann_topk``.
-
-    ``cache_key`` (a corpus-identifying string, e.g. its path) memoizes
-    the trained matrix per (key, params) for the session.
-    """
-    memo = (
-        (cache_key, n_cells, n_iters, vec_col, id_col, seed, train_fraction,
-         train_sample)
-        if cache_key is not None
-        else None
-    )
-    if memo is not None and memo in _CENTROID_CACHE:
-        return _CENTROID_CACHE[memo]
-    df = corpus.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
-    if train_sample is not None:
-        if train_sample < n_cells:
-            raise ValueError(f"train_sample {train_sample} < n_cells {n_cells}")
-        mat = _hash_ordered_sample(df, train_sample, seed, cache_key)
-        vn = np.linalg.norm(mat, axis=1)
-        vn[vn == 0] = 1.0
-        matn = mat / vn[:, None]
-        cents = mat[:n_cells].copy()
-        for _ in range(n_iters):
-            cos = matn @ _unit_centroid_mat(cents)  # rows × cells
-            order = np.lexsort(
-                (np.arange(cos.shape[1])[None, :].repeat(len(mat), 0), -cos),
-                axis=1,
-            )
-            cell = order[:, 0]
-            new = cents.copy()  # empty cells keep their old centroid
-            counts = np.bincount(cell, minlength=n_cells)
-            sums = np.zeros_like(cents)
-            np.add.at(sums, cell, mat)
-            live = counts > 0
-            new[live] = sums[live] / counts[live, None]
-            cents = new
-        if memo is not None:
-            _CENTROID_CACHE[memo] = cents
-        return cents
-    if train_fraction is not None:
-        df = df.sample(fraction=train_fraction, seed=seed)
-    df = df.cache()  # reused by init + every Lloyd iteration
-    init_rows = (
-        df.orderBy(F.xxhash64("_id", F.lit(seed)), "_id")
-        .limit(n_cells)
-        .select("_v")
-        .collect()
-    )
-    cents = np.asarray([np.asarray(r["_v"], dtype=np.float64) for r in init_rows])
-
-    for _ in range(n_iters):
-        # One fused mapInPandas pass per iteration: each PARTITION
-        # assigns its vectors (numpy matmul against the closure-shipped
-        # centroids, same tie-break as nearest_cells_udf) and emits
-        # per-cell partial (count, sum-vector) rows — bounded at
-        # partitions × cells rows regardless of data size. This
-        # replaces the posexplode + (vectors × dim)-row groupBy, which
-        # at sf0.1 shuffled ~6M rows per iteration. Partials are merged
-        # on the driver in sorted (cell, part_id) order so the float
-        # summation order is reproducible.
-        stats = _centroid_partials(df, cents).collect()
-        new = cents.copy()  # empty cells keep their old centroid
-        sums = np.zeros_like(cents)
-        counts = np.zeros(len(cents))
-        for r in sorted(stats, key=lambda r: (r["cell"], r["part_id"])):
-            sums[r["cell"]] += np.asarray(r["sums"], dtype=np.float64)
-            counts[r["cell"]] += r["n"]
-        nonempty = counts > 0
-        new[nonempty] = sums[nonempty] / counts[nonempty, None]
-        cents = new
-    df.unpersist()
-    if memo is not None:
-        _CENTROID_CACHE[memo] = cents
-    return cents
-
-
-def _centroid_partials(df: DataFrame, centroids: np.ndarray) -> DataFrame:
-    """One Lloyd-iteration scan: per partition, assign every vector to
-    its nearest centroid by cosine (ties → lowest cell id, matching
-    nearest_cells_udf) and emit per-cell partial statistics
-    (cell, part_id, n, sums). Output is ≤ partitions × cells rows —
-    safe to collect at any corpus size."""
-    k, dim = centroids.shape
-    norms = np.linalg.norm(centroids, axis=1)
-    norms[norms == 0] = 1.0
-    unit = (centroids / norms[:, None]).T  # dim × cells
-
-    def part(batches):
-        from pyspark import TaskContext
-
-        sums = np.zeros((k, dim))
-        counts = np.zeros(k, dtype=np.int64)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            mat = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf["_v"]]
-            )
-            vn = np.linalg.norm(mat, axis=1)
-            vn[vn == 0] = 1.0
-            cell = np.argmax((mat / vn[:, None]) @ unit, axis=1)
-            np.add.at(sums, cell, mat)
-            counts += np.bincount(cell, minlength=k)
-        pid = TaskContext.get().partitionId()
-        live = np.nonzero(counts)[0]
-        yield pd.DataFrame(
-            {
-                "cell": pd.Series(live, dtype="int32"),
-                "part_id": pd.Series([pid] * len(live), dtype="int32"),
-                "n": pd.Series(counts[live], dtype="int64"),
-                "sums": [list(map(float, sums[c])) for c in live],
-            }
-        )
-
-    return df.select("_v").mapInPandas(
-        part, schema="cell int, part_id int, n long, sums array<double>"
-    )
-
-
-def _unit_centroid_mat(centroids: np.ndarray) -> np.ndarray:
-    """dim x cells unit-normalized centroid matrix (cosine projection)."""
-    norms = np.linalg.norm(centroids, axis=1)
-    norms[norms == 0] = 1.0
-    return (centroids / norms[:, None]).T
-
-
-def nearest_cells_udf(centroids: np.ndarray, nprobe: int = 1):
-    """pandas_udf: array<float> vector → array<int> of the nprobe
-    nearest centroid ids by cosine (ties broken by cell id). Dense
-    matmul against a closure-captured centroid matrix — the Python
-    exception earned by measurement (see lsh_table_buckets)."""
-    unit = _unit_centroid_mat(centroids)
-    np_probe = min(nprobe, len(centroids))
-
-    @pandas_udf("array<int>")
-    def _nearest(vecs: pd.Series) -> pd.Series:
-        if len(vecs) == 0:
-            return pd.Series([], dtype=object)
-        mat = np.asarray([np.asarray(v, dtype=np.float64) for v in vecs])
-        vn = np.linalg.norm(mat, axis=1)
-        vn[vn == 0] = 1.0
-        cos = (mat / vn[:, None]) @ unit  # B × cells
-        # stable argsort: descending cosine, ascending cell id on ties
-        order = np.lexsort((np.arange(cos.shape[1])[None, :].repeat(len(mat), 0), -cos), axis=1)
-        return pd.Series(list(order[:, :np_probe].astype(np.int32)))
-
-    return _nearest
-
-
-def ivf_ann_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    n_cells: int = 16,
-    nprobe: int = 4,
-    n_iters: int = 3,
-    seed: int = 42,
-    centroids: np.ndarray | None = None,
-    cache_key: str | None = None,
-    train_sample: int | None = None,
-) -> DataFrame:
-    """IVF approximate top-k: corpus vectors are inverted-listed by
-    nearest coarse centroid; each query probes its ``nprobe`` nearest
-    cells and exact (quantized) cosine re-ranks the candidates.
-
-    Scale shape: one narrow corpus scan for cell assignment, an
-    equi-join on cell id (shuffle keyed by cell — the inverted lists),
-    and a per-query top-k. Candidate count ≈ corpus·nprobe/n_cells,
-    tuned independently of corpus size. Recall vs the brute-force
-    baseline is pinned in tests/test_text_queries.py."""
-    if centroids is None:
-        centroids = ivf_centroids(
-            corpus, n_cells=n_cells, n_iters=n_iters,
-            vec_col=vec_col, id_col=id_col, seed=seed,
-            cache_key=cache_key, train_sample=train_sample,
-        )
-    c = corpus.select(
-        F.col(id_col).alias("corpus_id"),
-        quantize(vec_col).alias("cvec"),
-        nearest_cells_udf(centroids, nprobe=1)(F.col(vec_col))[0].alias("cell"),
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        quantize(vec_col).alias("qvec"),
-        F.explode(nearest_cells_udf(centroids, nprobe=nprobe)(F.col(vec_col))).alias("cell"),
-    )
-    scored = (
-        c.join(q, ["cell"])
-        .where(F.col("corpus_id") != F.col("query_id"))
-        .select("query_id", "corpus_id", cosine_expr("qvec", "cvec").alias("cosine"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("corpus_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)

@@ -21,15 +21,23 @@ from time_series_prediction_spark.operators import timeseries as ts
 from time_series_prediction_spark.operators.reshape import long_to_wide
 from time_series_prediction_spark.plans.timeseries_queries import daily_series
 
+# The fixture configuration of every flagship query and its DuckDB
+# oracle (the fixture series are 21-30 days long): a 7-day seasonal
+# period (odd, so the trend is a plain centered moving average),
+# keep_ts's 5-change threshold and a 7-day trend window.
+_FREQ = 7
+_THRESHOLD_COUNT = 5
+_TREND_WINDOW_DAYS = 7
+_WIDE_HORIZON_DAYS = 14
+_HOLDOUT_DAYS = 7
+# cashflow_scoring_pipeline: X = 14 days, y = 7 days, R² at the full
+# horizon and at 3 days
+_X_DAYS = 14
+_Y_DAYS = 7
+_ONE_MONTH_DAYS = 3
 
-def cashflow_wide_pipeline(
-    spark: SparkSession,
-    sf_dir: str,
-    freq: int = 7,
-    horizon_days: int = 14,
-    trend_window_days: int = 7,
-    threshold_count: int = 5,
-) -> DataFrame:
+
+def cashflow_wide_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user forecast summary: (user_id, n_days, keep_ts,
     trajectory, forecast array<float> of len horizon_days)."""
     long_df = daily_series(spark, sf_dir).select(
@@ -45,16 +53,16 @@ def cashflow_wide_pipeline(
     )
     return (
         wide.withColumn("n_days", F.size("balance"))
-        .where(F.col("n_days") >= freq + 2)
-        .withColumn("keep_ts", ts.keep_ts("balance", threshold_count))
+        .where(F.col("n_days") >= _FREQ + 2)
+        .withColumn("keep_ts", ts.keep_ts("balance", _THRESHOLD_COUNT))
         .where(F.col("keep_ts") == 1)
-        .withColumn("trend", ts.trend("balance", freq=freq))
+        .withColumn("trend", ts.trend("balance", freq=_FREQ))
         .withColumn(
             "forecast",
             ts.extrapolate_trend(
                 "trend",
-                window_days=trend_window_days,
-                horizon_days=horizon_days,
+                window_days=_TREND_WINDOW_DAYS,
+                horizon_days=_WIDE_HORIZON_DAYS,
                 serving=True,
             ),
         )
@@ -63,14 +71,7 @@ def cashflow_wide_pipeline(
     )
 
 
-def cashflow_scoring_pipeline(
-    spark: SparkSession,
-    sf_dir: str,
-    x_days: int = 14,
-    y_days: int = 7,
-    freq: int = 7,
-    threshold_count: int = 5,
-) -> DataFrame:
+def cashflow_scoring_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's FULL scoring lifecycle S.1 → S.3 + E.2 (SURVEY
     §3.3; reference ``notebooks/scoring.py:184-488``) as one registry
     query: events → wide per-user series → clean (native keep_ts
@@ -111,19 +112,19 @@ def cashflow_scoring_pipeline(
         value_col="value",
         out_date="days",
         out_value="balance",
-    ).where(F.size("balance") >= x_days + y_days)
-    cleaned = clean_series(wide, threshold_count=threshold_count)
+    ).where(F.size("balance") >= _X_DAYS + _Y_DAYS)
+    cleaned = clean_series(wide, threshold_count=_THRESHOLD_COUNT)
     pre = pre_processing(
         cleaned,
         end_date="2024-01-01",
         serving=False,
-        freq=freq,
-        x_days=x_days,
-        y_days=y_days,
-        trend_window_days=freq,
+        freq=_FREQ,
+        x_days=_X_DAYS,
+        y_days=_Y_DAYS,
+        trend_window_days=_FREQ,
     )
     scored = score_dataframe(
-        pre, last_value_model_factory(y_days), horizon=y_days
+        pre, last_value_model_factory(_Y_DAYS), horizon=_Y_DAYS
     )
     post = post_processing(scored)
     # distributed metric extraction over the SHARED loss registry
@@ -131,7 +132,8 @@ def cashflow_scoring_pipeline(
     # sweeps), alongside the R² pair: any registered loss is one more
     # aggregate column in the SAME single pass, never a toPandas
     return r2_metrics(
-        post, y_days=y_days, one_month_days=3, losses=("mae", "smape")
+        post, y_days=_Y_DAYS, one_month_days=_ONE_MONTH_DAYS,
+        losses=("mae", "smape"),
     ).select(
         F.col("r2_3month").alias("r2_horizon"),
         F.col("r2_1month").alias("r2_3day"),
@@ -141,14 +143,7 @@ def cashflow_scoring_pipeline(
     )
 
 
-def cashflow_holdout_eval(
-    spark: SparkSession,
-    sf_dir: str,
-    freq: int = 7,
-    horizon_days: int = 7,
-    trend_window_days: int = 7,
-    threshold_count: int = 5,
-) -> DataFrame:
+def cashflow_holdout_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Holdout evaluation of the NATIVE forecast under the shared
     loss registry (operators/losses.py): per user, the last
     ``horizon_days`` are held out, the trend+extrapolation pipeline
@@ -167,7 +162,7 @@ def cashflow_holdout_eval(
         series_loss_aggs,
     )
 
-    h = horizon_days
+    h = _HOLDOUT_DAYS
     long_df = daily_series(spark, sf_dir).select(
         "user_id", "day", (F.col("cents") / 100.0).alias("value")
     )
@@ -181,18 +176,18 @@ def cashflow_holdout_eval(
     )
     df = (
         wide.withColumn("n", F.size("balance"))
-        .where(F.col("n") >= freq + 2 + h)
+        .where(F.col("n") >= _FREQ + 2 + h)
         .withColumn(
             "train", F.expr(f"slice(balance, 1, size(balance) - {h})")
         )
-        .withColumn("keep_ts", ts.keep_ts("train", threshold_count))
+        .withColumn("keep_ts", ts.keep_ts("train", _THRESHOLD_COUNT))
         .where(F.col("keep_ts") == 1)
-        .withColumn("trend", ts.trend("train", freq=freq))
+        .withColumn("trend", ts.trend("train", freq=_FREQ))
         .withColumn(
             "forecast",
             ts.extrapolate_trend(
                 "trend",
-                window_days=trend_window_days,
+                window_days=_TREND_WINDOW_DAYS,
                 horizon_days=h,
                 serving=True,
             ),
@@ -233,11 +228,7 @@ def _bround3(v: str) -> str:
     )
 
 
-def _cashflow_wide_sql(
-    freq: int = 7,
-    horizon_days: int = 14,
-    threshold_count: int = 5,
-) -> str:
+def _cashflow_wide_sql() -> str:
     """DuckDB oracle for ``cashflow_wide_summary`` — the reference's
     semantic core (W1 trend → W9 extrapolation → W10 trajectory)
     re-derived as list-lambda SQL with the IDENTICAL sequence of IEEE
@@ -248,10 +239,9 @@ def _cashflow_wide_sql(
     a left fold, and shortest-repr half-even rounding (``_bround3``).
     Only freq=7 (odd ⇒ plain centered MA) is generated — the fixture
     configuration; the Spark operators themselves take any freq."""
-    assert freq == 7, "oracle template generated for the odd freq=7 form"
-    trim = (freq - 1) // 2
-    h = horizon_days
-    tc = threshold_count
+    trim = (_FREQ - 1) // 2
+    h = _WIDE_HORIZON_DAYS
+    tc = _THRESHOLD_COUNT
     from time_series_prediction_spark.plans.timeseries_queries import DAILY_CTE
 
     trend_case = (
@@ -277,7 +267,7 @@ def _cashflow_wide_sql(
 ),
 kept AS (
   SELECT * FROM series
-  WHERE n >= {freq + 2}
+  WHERE n >= {_FREQ + 2}
     AND len(list_filter(b, v -> v != b[1])) > 0
     AND len(list_filter(range(2, n + 1), j ->
           (CAST(b[j] AS DOUBLE) - CAST(b[j - 1] AS DOUBLE)) != 0.0)) >= {tc}
@@ -288,7 +278,7 @@ rawt AS (
       CASE WHEN j >= {trim + 1} AND j <= n - {trim} THEN
         list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
           list_transform(b[j - {trim}:j + {trim}], v -> CAST(v AS DOUBLE))),
-          (a, v) -> a + v) / {freq}.0
+          (a, v) -> a + v) / {_FREQ}.0
       ELSE NULL END) AS raw
   FROM kept
 ),
@@ -315,7 +305,7 @@ grads AS (
 ),
 fc AS (
   SELECT user_id, n,
-    list_sort(g[n - {freq - 1}:n]) AS s7,
+    list_sort(g[n - {_FREQ - 1}:n]) AS s7,
     list_sort(g[greatest(n - 29, 1):n]) AS s30,
     CAST(t[n] AS DOUBLE) AS anchor
   FROM grads
@@ -343,24 +333,20 @@ FROM sc
 CASHFLOW_WIDE_SQL = _cashflow_wide_sql()
 
 
-def _cashflow_holdout_sql(
-    freq: int = 7,
-    h: int = 7,
-    threshold_count: int = 5,
-) -> str:
+def _cashflow_holdout_sql() -> str:
     """DuckDB oracle for ``cashflow_holdout_eval``: the wide-pipeline
     template (see ``_cashflow_wide_sql`` for the op-sequence notes)
     applied to the TRAIN slice ``b[1 : n-h]``, a per-day forecast via
     the sequential-fold recurrence, and the shared registry's loss
     terms verbatim over the (actual, forecast) pairs."""
-    assert freq == 7, "oracle template generated for the odd freq=7 form"
     from time_series_prediction_spark.operators.losses import LOSSES
     from time_series_prediction_spark.plans.timeseries_queries import (
         DAILY_CTE,
     )
 
-    trim = (freq - 1) // 2
-    tc = threshold_count
+    trim = (_FREQ - 1) // 2
+    h = _HOLDOUT_DAYS
+    tc = _THRESHOLD_COUNT
     trend_case = (
         f"CASE WHEN j <= {trim} THEN "
         f"vf * ({trim}.0 * CAST(j - 1 AS DOUBLE) + 1.0) / ({trim * trim} + 1.0) "
@@ -388,7 +374,7 @@ def _cashflow_holdout_sql(
 ),
 elig AS (
   SELECT user_id, b, n, CAST(n - {h} AS INT) AS m, b[1:n - {h}] AS tr
-  FROM series WHERE n >= {freq + 2 + h}
+  FROM series WHERE n >= {_FREQ + 2 + h}
 ),
 kept AS (
   SELECT * FROM elig
@@ -402,7 +388,7 @@ rawt AS (
       CASE WHEN j >= {trim + 1} AND j <= m - {trim} THEN
         list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
           list_transform(tr[j - {trim}:j + {trim}], v -> CAST(v AS DOUBLE))),
-          (a, v) -> a + v) / {freq}.0
+          (a, v) -> a + v) / {_FREQ}.0
       ELSE NULL END) AS raw
   FROM kept
 ),
@@ -429,7 +415,7 @@ grads AS (
 ),
 fc AS (
   SELECT user_id, b, m,
-    list_sort(g[m - {freq - 1}:m]) AS s7,
+    list_sort(g[m - {_FREQ - 1}:m]) AS s7,
     CAST(t[m] AS DOUBLE) AS anchor
   FROM grads
 ),
@@ -456,12 +442,7 @@ FROM pairs
 CASHFLOW_HOLDOUT_SQL = _cashflow_holdout_sql()
 
 
-def _cashflow_scoring_sql(
-    x_days: int = 14,
-    y_days: int = 7,
-    one_month_days: int = 3,
-    threshold_count: int = 5,
-) -> str:
+def _cashflow_scoring_sql() -> str:
     """DuckDB oracle for ``cashflow_scoring_pipeline`` — the serving
     lifecycle value-hash-verified END TO END, pandas_udf stage
     included.
@@ -482,7 +463,7 @@ def _cashflow_scoring_sql(
 
     Fixture configuration only (X=14, y=7, R² at 7 and 3 days); the
     Spark pipeline itself takes any horizon."""
-    x, h, om, tc = x_days, y_days, one_month_days, threshold_count
+    x, h, om, tc = _X_DAYS, _Y_DAYS, _ONE_MONTH_DAYS, _THRESHOLD_COUNT
     n_min = x + h
     from time_series_prediction_spark.operators.losses import LOSSES
     from time_series_prediction_spark.plans.timeseries_queries import (

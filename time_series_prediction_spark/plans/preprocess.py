@@ -34,18 +34,14 @@ from pyspark.sql import functions as F
 from time_series_prediction_spark.operators import timeseries as ts
 
 
-def clean_series(
-    df: DataFrame,
-    value_col: str = "balance",
-    threshold_count: int = 20,
-) -> DataFrame:
+def clean_series(df: DataFrame, threshold_count: int = 20) -> DataFrame:
     """keep_ts flag + filter (R1).
 
     The reference filters on a UDF output so nothing can push down
     (``training_new_petastorm.py:161-163``); here the predicate is a
     native expression evaluated JVM-side in the same stage as the scan.
     """
-    return df.withColumn("keep_ts", ts.keep_ts(value_col, threshold_count)).where(
+    return df.withColumn("keep_ts", ts.keep_ts("balance", threshold_count)).where(
         F.col("keep_ts") == 1
     )
 
@@ -54,7 +50,6 @@ def pre_processing(
     df: DataFrame,
     end_date: str,
     serving: bool = False,
-    value_col: str = "balance",
     freq: int = 30,
     x_days: int = 365,
     y_days: int = 92,
@@ -72,9 +67,9 @@ def pre_processing(
 
     # one projection per dependency layer: each withColumn call analyzes
     # the whole plan again
-    out = df.withColumn("balance_trend_1MW", ts.trend(value_col, freq))
+    out = df.withColumn("balance_trend_1MW", ts.trend("balance", freq))
     out = out.withColumn(
-        "balance_detrend_1MW", ts.detrend(value_col, "balance_trend_1MW")
+        "balance_detrend_1MW", ts.detrend("balance", "balance_trend_1MW")
     )
     out = out.withColumns({
         "mean": ts.series_mean("balance_detrend_1MW"),
@@ -100,14 +95,11 @@ def pre_processing(
     return out.withColumns(last)
 
 
-def post_processing(
-    df: DataFrame,
-    pred_col: str = "y_pred",
-) -> DataFrame:
+def post_processing(df: DataFrame) -> DataFrame:
     """Rescale predictions to the original scale, then retrend
     (as-shipped: retrend is a no-op — reference ``notebooks/utils.py:270``)."""
     return df.withColumn(
-        "y_pred_rescaled", ts.rescaling(pred_col, "mean", "std")
+        "y_pred_rescaled", ts.rescaling("y_pred", "mean", "std")
     ).withColumn(
         "y_pred_rescaled_retrended",
         ts.retrend("y_pred_rescaled", "trend_next_3months_1MW"),
@@ -116,12 +108,11 @@ def post_processing(
 
 def train_val_test_split(
     df: DataFrame,
-    weights: tuple[float, float, float] = (0.6, 0.2, 0.2),
-    seed: int = 12345,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """R2: reference randomSplit (``training_new_petastorm.py:204-217``).
-    train/val carry (X, y); test carries the raw series for evaluation."""
-    train, val, test = df.randomSplit(list(weights), seed=seed)
+    """R2: reference randomSplit (``training_new_petastorm.py:204-217``),
+    60/20/20 under one fixed seed. train/val carry (X, y); test carries
+    the raw series for evaluation."""
+    train, val, test = df.randomSplit([0.6, 0.2, 0.2], seed=12345)
     return (
         train.select("X", "y"),
         val.select("X", "y"),
@@ -131,13 +122,12 @@ def train_val_test_split(
 
 def r2_metrics(
     df: DataFrame,
-    y_true_col: str = "balance",
-    y_pred_col: str = "y_pred_rescaled_retrended",
     y_days: int = 92,
     one_month_days: int = 31,
     losses: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Spark-native R² — per-series R² over the prediction window,
+    """Spark-native R² of ``y_pred_rescaled_retrended`` against the
+    tail of ``balance`` — per-series R² over the prediction window,
     uniform-averaged, at 3 months (full horizon) and 1 month (first 31
     days). No ``toPandas`` — the reference collects every series to the
     driver (``notebooks/scoring.py:464-470``), which cannot work at
@@ -169,11 +159,12 @@ def r2_metrics(
     reference's float path would silently propagate ±inf/NaN there
     (``notebooks/utils.py:502-538``).
     """
-    truth = f"slice({y_true_col}, size({y_true_col}) - {y_days} + 1, {y_days})"
+    truth = f"slice(balance, size(balance) - {y_days} + 1, {y_days})"
+    pred = "y_pred_rescaled_retrended"
 
     def per_series_r2_ppm(n_days: int) -> str:
         t = f"slice({truth}, 1, {n_days})"
-        p = f"slice({y_pred_col}, 1, {n_days})"
+        p = f"slice({pred}, 1, {n_days})"
         mean_t = f"(aggregate({t}, 0D, (a, v) -> a + CAST(v AS DOUBLE)) / {n_days})"
         sse = (
             f"aggregate(zip_with({t}, {p}, (a, b) -> "
@@ -211,7 +202,7 @@ def r2_metrics(
         F.expr(per_series_r2_ppm(y_days)).alias("_r2_3m_ppm"),
         F.expr(per_series_r2_ppm(one_month_days)).alias("_r2_1m_ppm"),
         *[
-            F.expr(series_loss_expr(loss, truth, y_pred_col)).alias(name)
+            F.expr(series_loss_expr(loss, truth, pred)).alias(name)
             for loss, name in zip(losses, loss_names)
         ],
     ).agg(

@@ -3,9 +3,7 @@
 Beyond-reference scope: the reference's only join is a 1-row crossJoin
 (SURVEY §2.3); these exercise the bucketed point-in-interval join
 (operators/rangejoin.py) and the IVF and IVF-PQ ANN on the
-exact-integer quantizer (operators/kmeans_exact.py). The float-trained
-IVF path, operators/similarity.ivf_ann_topk, stays the library surface
-for real embeddings.
+exact-integer quantizer (operators/kmeans_exact.py).
 
 Determinism contract matches the other plan modules: money/value
 aggregates in exact integer cents; time predicates in exact integer

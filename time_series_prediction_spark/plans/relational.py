@@ -48,15 +48,15 @@ from time_series_prediction_spark.sources.io import read_table
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 
-def _cents(col: str | Column, scale: int = 100) -> Column:
+def _cents(col: str | Column) -> Column:
     """Exact integer representation of a ≤2-decimal double column."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.round(c * scale).cast("long")
+    return F.round(c * 100).cast("long")
 
 
 # SQL twin of _cents for the DuckDB oracle strings.
-def _sql_cents(expr: str, scale: int = 100) -> str:
-    return f"CAST(round({expr} * {scale}) AS BIGINT)"
+def _sql_cents(expr: str) -> str:
+    return f"CAST(round({expr} * 100) AS BIGINT)"
 
 
 # ---------------------------------------------------------------------------

@@ -419,7 +419,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _minhash_lsh_sql(num_hashes: int = 32, bands: int = 8) -> str:
-    """DuckDB mirror of minhash_lsh_pairs (n=3 shingles, threshold
+    """DuckDB mirror of ``dedup_minhash_lsh`` (n=3 shingles, threshold
     0.5), generated from the SAME permutation constants the Spark
     expression embeds."""
     p = dedup.MINHASH_PRIME
@@ -748,8 +748,7 @@ def embedding_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH-bucketed approximate top-10 on the EXACT-integer plane
     family (kmeans_exact.lsh_ann_exact — integer hyperplane signs,
     reproducible in any engine), so the whole bucketed-ANN answer is
-    oracle-checked; the float-plane library surface
-    (similarity.lsh_ann_topk) keeps its recall tests. Operating point
+    oracle-checked. Operating point
     (4 planes × 16 tables) tuned for the fixtures' near-random
     vectors (top-10 cosine ~0.3)."""
     from time_series_prediction_spark.operators.kmeans_exact import (

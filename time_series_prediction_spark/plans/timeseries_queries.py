@@ -18,8 +18,8 @@ Scale notes:
   window op downstream partitions by user_id only, which Spark
   satisfies with a single exchange reused across all window specs.
 * At 100 TB the daily rollup would be written partitioned by day
-  bucket (sources/io.write_partitioned) so downstream scans prune;
-  the per-user windows then shuffle by user_id once.
+  bucket (``df.write.partitionBy``) so downstream scans prune; the
+  per-user windows then shuffle by user_id once.
 """
 
 from __future__ import annotations

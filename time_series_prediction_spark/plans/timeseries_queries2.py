@@ -386,13 +386,7 @@ def cashflow_synthetic_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _synthetic_pipeline_sql(
-    freq: int = 30,
-    window_days: int = 183,
-    y_days: int = 92,
-    traj_months: int = 6,
-    threshold_count: int = 20,
-) -> str:
+def _synthetic_pipeline_sql() -> str:
     """DuckDB oracle for ``cashflow_synthetic_pipeline``: the
     md5-replayed generator CTE feeding the EVEN-freq trend
     (statsmodels weights [0.5, 1×(freq−1), 0.5]/freq over freq+1
@@ -408,16 +402,15 @@ def _synthetic_pipeline_sql(
         duckdb_series_cte,
     )
 
-    assert freq % 2 == 0, "oracle template generated for the even form"
+    # pre_processing's and clean_series' defaults, which the pipeline
+    # runs with: an even freq, and the 6-month trajectory window equal
+    # to the 183-day serving slope window
+    freq, y_days, tc = 30, 92, 20
     n = _SYN_N_DAYS
     trim = freq // 2
-    tc = threshold_count
     front = trim  # 0-based head bound
     back = n - 1 - trim  # 0-based tail bound
-    traj_days = int(30.5 * traj_months)
-    k = window_days  # serving-mode slope window
-    assert traj_days == k, "trajectory/slope windows coincide at 6mo/183d"
-    mid = freq - 1  # middle weights count
+    traj_days = int(30.5 * 6)
     valid = (
         f"(0.5e0 * CAST(b[j - {trim}] AS DOUBLE) "
         f"+ list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
@@ -861,7 +854,6 @@ def linear_backtest(
     sf_dir: str,
     cutoffs: tuple[str, ...] = _BT_CUTOFFS,
     horizon: int = _BT_H,
-    epoch: str = _BT_EPOCH,
     losses: tuple[str, ...] = ("mae",),
 ) -> DataFrame:
     """Parameterized rolling-origin backtest: per train ``cutoff``, an
@@ -871,7 +863,7 @@ def linear_backtest(
     contribution is integer-rounded so aggregation order never
     matters, making every loss oracle-checkable."""
     d = daily_series(spark, sf_dir).withColumn(
-        "x", F.datediff("day", F.lit(epoch).cast("date")).cast("long")
+        "x", F.datediff("day", F.lit(_BT_EPOCH).cast("date")).cast("long")
     )
     # conditional aggregation instead of a broadcast-join against the
     # cutoff list: every cutoff's training sums come from ONE
@@ -916,7 +908,7 @@ def linear_backtest(
         agg.select("*", F.explode(F.expr(f"sequence(1, {horizon})")).alias("i"))
         .withColumn("fday", F.expr("date_add(cutoff, i)"))
         .withColumn(
-            "fx", F.datediff("fday", F.lit(epoch).cast("date")).cast("long")
+            "fx", F.datediff("fday", F.lit(_BT_EPOCH).cast("date")).cast("long")
         )
     )
     actual = d.select(
@@ -947,7 +939,6 @@ def linear_backtest(
 def linear_backtest_sql(
     cutoffs: tuple[str, ...] = _BT_CUTOFFS,
     horizon: int = _BT_H,
-    epoch: str = _BT_EPOCH,
     losses: tuple[str, ...] = ("mae",),
 ) -> str:
     """DuckDB oracle for ``linear_backtest`` — same grid, same loss
@@ -961,7 +952,7 @@ def linear_backtest_sql(
         + f"""
 , d AS (
   SELECT user_id, day, cents,
-         CAST(day - DATE '{epoch}' AS BIGINT) AS x
+         CAST(day - DATE '{_BT_EPOCH}' AS BIGINT) AS x
   FROM daily
 ), cuts AS (
   SELECT unnest([{", ".join(f"DATE '{c}'" for c in cutoffs)}]) AS cutoff
@@ -981,7 +972,7 @@ def linear_backtest_sql(
   WHERE n * sxx - sx * sx != 0
 ), preds AS (
   SELECT m.*, m.cutoff + CAST(h.i AS INTEGER) AS fday,
-         CAST(m.cutoff + CAST(h.i AS INTEGER) - DATE '{epoch}' AS BIGINT) AS fx
+         CAST(m.cutoff + CAST(h.i AS INTEGER) - DATE '{_BT_EPOCH}' AS BIGINT) AS fx
   FROM model m, (SELECT unnest(range(1, {horizon + 1})) AS i) h
 ), scored AS (
   SELECT p.cutoff AS cutoff_day,

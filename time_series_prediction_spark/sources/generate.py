@@ -53,6 +53,14 @@ from time_series_prediction_spark.sources.io import date_sequence_col
 # so (v + 0.5) / 2^52 is the same IEEE value in every engine
 _U_DIV = float(2**52)
 
+# The reference's table: a 487-day date axis, a 30.5-day seasonal
+# period and 3 level shifts per series, keyed by primaryaccountholder
+_START_DATE = "2018-12-01"
+_END_DATE = "2020-03-31"
+_CYCLE_PERIOD = 30.5
+_N_SPIKES = 3
+_ID_COL = "primaryaccountholder"
+
 
 def duckdb_u(seed: int, tag: int, extra: str = "'0'") -> str:
     """DuckDB mirror of the generator's uniform draw (``_u_of`` in
@@ -114,14 +122,7 @@ def duckdb_normal_pair(seed: int, tag: int, i_expr: str = "i") -> str:
 
 
 def generate_series_frame(
-    spark: SparkSession,
-    n_series: int,
-    start_date: str = "2018-12-01",
-    end_date: str = "2020-03-31",
-    seed: int = 42,
-    cycle_period: float = 30.5,
-    n_spikes: int = 3,
-    id_col: str = "primaryaccountholder",
+    spark: SparkSession, n_series: int, seed: int = 42
 ) -> DataFrame:
     """Generate the ``ts_balance`` table (FIXTURES.md A1 schema):
     (primaryaccountholder, transactiondate array<date>, balance
@@ -145,12 +146,11 @@ def generate_series_frame(
     import numpy as np
     import pandas as pd
 
-    d0 = _dt.date.fromisoformat(str(start_date))
-    d1 = _dt.date.fromisoformat(str(end_date))
+    d0 = _dt.date.fromisoformat(_START_DATE)
+    d1 = _dt.date.fromisoformat(_END_DATE)
     n = (d1 - d0).days + 1
     nf = float(n)
     two_pi = 2 * math.pi
-    per = float(cycle_period)
 
     def _u_of(sid: str, tag, extra="0") -> float:
         h = hashlib.md5(f"{seed}|{sid}|{tag}|{extra}".encode()).hexdigest()
@@ -174,7 +174,7 @@ def generate_series_frame(
                 continue
             out_bal = []
             out_type = []
-            for rid in pdf[id_col]:
+            for rid in pdf[_ID_COL]:
                 sid = str(int(rid))
                 salary = max(_z_of(sid, 1) * 5000.0 + 15000.0, 100.0)
                 trend_exp = _u_of(sid, 5) + 1.0
@@ -199,7 +199,7 @@ def generate_series_frame(
                 z[0::2] = r * np.cos(c)
                 z[1::2] = r * np.sin(c)
                 z = z[:n]
-                x = (two_pi * t_i) / per + phase
+                x = (two_pi * t_i) / _CYCLE_PERIOD + phase
                 q = x / two_pi
                 frac = q - np.floor(q)
                 saw = 2.0 * frac - 1.0
@@ -217,7 +217,7 @@ def generate_series_frame(
                 )
                 noise = (noise_sd * salary) * z
                 total = seasonal + trend + noise
-                for k in range(n_spikes):
+                for k in range(_N_SPIKES):
                     t_k = n - 457 + int(
                         math.floor(_u_of(sid, 20 + k) * 365.0)
                     )
@@ -233,22 +233,22 @@ def generate_series_frame(
                 out_type.append((1, 4, 2, 3)[choice])
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col].to_numpy(),
+                    _ID_COL: pdf[_ID_COL].to_numpy(),
                     "balance": out_bal,
                     "signal_type": np.array(out_type, dtype=np.int32),
                 }
             )
 
-    gen = spark.range(n_series).toDF(id_col).mapInPandas(
+    gen = spark.range(n_series).toDF(_ID_COL).mapInPandas(
         _gen_batch,
-        f"{id_col} long, balance array<float>, signal_type int",
+        f"{_ID_COL} long, balance array<float>, signal_type int",
     )
     # the shared date axis is one constant-folded sequence expression —
     # attaching it JVM-side keeps ~n_days date objects per row out of
     # the Arrow channel (guide §4.1: pass only what the function needs)
     return gen.withColumn(
-        "transactiondate", date_sequence_col(start_date, end_date)
-    ).select(id_col, "transactiondate", "balance", "signal_type")
+        "transactiondate", date_sequence_col(_START_DATE, _END_DATE)
+    ).select(_ID_COL, "transactiondate", "balance", "signal_type")
 
 
 def duckdb_bround(v: str, ndigits: int) -> str:
@@ -268,13 +268,7 @@ def duckdb_bround(v: str, ndigits: int) -> str:
     )
 
 
-def duckdb_series_cte(
-    n_series: int,
-    n_days: int,
-    seed: int = 42,
-    cycle_period: float = 30.5,
-    n_spikes: int = 3,
-) -> str:
+def duckdb_series_cte(n_series: int, n_days: int, seed: int = 42) -> str:
     """DuckDB CTE chain replaying ``generate_series_frame`` draw for
     draw: ``gen(id, signal_type, b LIST(FLOAT))``. Every expression
     mirrors the generator's operand ORDER (IEEE addition is not
@@ -303,7 +297,7 @@ def duckdb_series_cte(
     phase = f"(({u(9)} * 2.0e0 - 1.0e0) * {pi})"
     choice = f"CAST(floor({u(11)} * 4.0e0) AS INT)"
     spike_cols = []
-    for k in range(n_spikes):
+    for k in range(_N_SPIKES):
         t_k = f"({n} - 457 + CAST(floor({u(20 + k)} * 365.0e0) AS INT))"
         s_k = (
             f"(CASE WHEN {u(30 + k)} < 0.5e0 THEN -1.0e0 ELSE 1.0e0 END)"
@@ -312,18 +306,14 @@ def duckdb_series_cte(
             f"({s_k} * (3.0e0 * _salary + _salary * {normal(40 + k)}))"
         )
         spike_cols.append(f"{t_k} AS _t{k}, {a_k} AS _a{k}")
-    spikes = (
-        " + ".join(
-            f"(CASE WHEN i >= _t{k} THEN _a{k} ELSE 0.0e0 END)"
-            for k in range(n_spikes)
-        )
-        if n_spikes
-        else "0.0e0"
+    spikes = " + ".join(
+        f"(CASE WHEN i >= _t{k} THEN _a{k} ELSE 0.0e0 END)"
+        for k in range(_N_SPIKES)
     )
     t_i = (
         f"(-{n} / 2.0e0 + CAST(i AS DOUBLE) * {n} / ({n} - 1.0e0))"
     )
-    x = f"({two_pi} * {t_i} / {cycle_period!r} + _phase)"
+    x = f"({two_pi} * {t_i} / {_CYCLE_PERIOD!r} + _phase)"
     frac = f"(({x}) / {two_pi} - floor(({x}) / {two_pi}))"
     saw = f"(2.0e0 * {frac} - 1.0e0)"
     square = f"(CASE WHEN {frac} < 0.5e0 THEN 1.0e0 ELSE -1.0e0 END)"

@@ -169,14 +169,7 @@ def date_sequence_col(start: dt.date | str, end: dt.date | str) -> F.Column:
     )
 
 
-def write_parquet(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """S6: parquet sink (reference ``src/demo/create_time_series.py:210``)."""
-    df.write.mode(mode).parquet(path)
-
-
-def write_partitioned(
-    df: DataFrame, path: str, partition_cols: list[str], mode: str = "overwrite"
-) -> None:
-    """Partitioned parquet sink — the 100 TB layout: partition pruning on
-    ``partition_cols`` turns full scans into directory-level skips."""
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
+def write_parquet(df: DataFrame, path: str) -> None:
+    """S6: parquet sink, overwriting ``path`` (reference
+    ``src/demo/create_time_series.py:210``)."""
+    df.write.mode("overwrite").parquet(path)

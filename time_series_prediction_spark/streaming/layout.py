@@ -3,8 +3,8 @@ stats-manifest maintenance per micro-batch.
 
 Composes the batch pieces the engine already has —
 ``operators.zorder.write_zordered`` (per-batch Morton layout) and
-``operators.manifest.update_manifest`` (footer-read only the delta) —
-into the continuous loop a 100 TB pipeline actually runs: a
+``operators.manifest.build_stats_manifest`` (footer-read only the
+batch's new files) — into the continuous loop a 100 TB pipeline actually runs: a
 ``foreachBatch`` sink that lands each micro-batch as its own set of
 Morton-sorted files and folds just their footers into a versioned
 manifest.
